@@ -42,8 +42,8 @@ def cmd_ingest(args) -> int:
     spark = get_spark(app_name="tfl-ingest")
     client = _client(args)
     rows = client.fetch_all(args.stops.split(","))
-    written = ingest_snapshot(spark, rows, args.raw_dir)
-    print(f"ingested {written.count() if written is not None else 0} rows → {args.raw_dir}")
+    ingest_snapshot(spark, rows, args.raw_dir)
+    print(f"ingested {len(rows)} rows → {args.raw_dir}")
     return 0
 
 

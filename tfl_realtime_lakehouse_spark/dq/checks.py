@@ -8,6 +8,10 @@ Re-expresses the reference's two DQ layers as one mechanism:
 
 Design for scale: ALL checks over a DataFrame evaluate in ONE aggregation
 pass (a single scan, map-side partial aggregation, no per-check jobs).
+When the DataFrame is about to be written anyway, even that pass goes:
+:func:`attach_observation` rides the same aggregates on the write
+(``df.observe``), which is how the pipeline runner checks a model it
+saves. :func:`run_checks` is the standalone pass.
 The reference's empty-input guard (``tfl_transform_dag.py:17-19``) is
 kept: an empty input yields skipped results rather than vacuous passes.
 """
@@ -67,15 +71,19 @@ def value_between(
     )
 
 
-def run_checks(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
-    """Evaluate every check in one aggregation pass over ``df``."""
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
+def _aggregates(checks: list[Check]) -> list:
+    """The row total plus one violation count per check — the whole
+    suite as one aggregate list."""
+    return [F.count(F.lit(1)).alias("__total")] + [
         F.sum(F.when(F.expr(c.predicate), 1).otherwise(0)).alias(f"__c{i}")
         for i, c in enumerate(checks)
     ]
-    row = df.agg(*aggs).collect()[0]
-    total = row["__total"]
-    results = []
+
+
+def _results(row, checks: list[Check]) -> list[CheckResult]:
+    """Per-check status from one row of :func:`_aggregates`."""
+    total = int(row["__total"])
+    out = []
     for i, c in enumerate(checks):
         if total == 0:
             status, failed = "skipped", 0
@@ -85,17 +93,22 @@ def run_checks(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
                 status = "pass"
             else:
                 status = "warn" if c.severity == "warning" else "fail"
-        results.append(
+        out.append(
             CheckResult(
                 name=c.name,
                 column=c.column,
                 severity=c.severity,
                 status=status,
                 failed_count=failed,
-                total=int(total),
+                total=total,
             )
         )
-    return results
+    return out
+
+
+def run_checks(df: DataFrame, checks: list[Check]) -> list[CheckResult]:
+    """Evaluate every check in one aggregation pass over ``df``."""
+    return _results(df.agg(*_aggregates(checks)).collect()[0], checks)
 
 
 def attach_observation(df: DataFrame, checks: list[Check], name: str = "dq"):
@@ -109,36 +122,13 @@ def attach_observation(df: DataFrame, checks: list[Check], name: str = "dq"):
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("__total")] + [
-        F.sum(F.when(F.expr(c.predicate), 1).otherwise(0)).alias(f"__c{i}")
-        for i, c in enumerate(checks)
-    ]
-    return df.observe(obs, *aggs), obs
+    return df.observe(obs, *_aggregates(checks)), obs
 
 
 def results_from_observation(obs, checks: list[Check]) -> list[CheckResult]:
-    row = obs.get
-    total = int(row["__total"])
-    out = []
-    for i, c in enumerate(checks):
-        failed = int(row[f"__c{i}"] or 0)
-        if total == 0:
-            status = "skipped"
-        elif failed == 0:
-            status = "pass"
-        else:
-            status = "warn" if c.severity == "warning" else "fail"
-        out.append(
-            CheckResult(
-                name=c.name,
-                column=c.column,
-                severity=c.severity,
-                status=status,
-                failed_count=failed,
-                total=total,
-            )
-        )
-    return out
+    """Check results from an observation whose action has run
+    (``obs.get`` blocks until then)."""
+    return _results(obs.get, checks)
 
 
 # The reference pipeline's exact check suite (9 not_null + 2 GX).

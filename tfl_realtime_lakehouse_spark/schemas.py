@@ -27,6 +27,13 @@ ARRIVALS_RAW_SCHEMA = T.StructType(
     ]
 )
 
+# Bronze as read back: the raw fields plus the ``date=`` partition
+# column. Declared (not inferred) so a bronze scan reads no parquet
+# footers, batch and streaming alike.
+ARRIVALS_BRONZE_SCHEMA = T.StructType(
+    ARRIVALS_RAW_SCHEMA.fields + [T.StructField("date", T.DateType())]
+)
+
 # Silver: the staging contract (stg_arrivals.sql:18-25 + schema.yml:4-15).
 STG_ARRIVALS_SCHEMA = T.StructType(
     [

@@ -28,12 +28,17 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_RAW_SCHEMA
 
 log = logging.getLogger(__name__)
+
+_ARROW_RAW_SCHEMA = to_arrow_schema(ARRIVALS_RAW_SCHEMA)
 
 RETRY_STATUSES = (429, 500, 502, 503, 504)
 
@@ -161,6 +166,11 @@ def ingest_snapshot(
 ) -> DataFrame | None:
     """API rows → typed bronze append under ``date=YYYY-MM-DD/``.
 
+    The snapshot goes to Spark as one Arrow table (no row pickling
+    through Python workers) and is written as ONE parquet file, as the
+    reference writes one ``arrivals_<ts>.parquet`` per snapshot — one
+    job, and one file per snapshot for every later bronze scan.
+
     Returns the written DataFrame, or None when there was nothing to
     write (reference: "no rows fetched; nothing written").
     """
@@ -168,9 +178,11 @@ def ingest_snapshot(
         log.warning("no rows fetched; nothing written")
         return None
     now = now or datetime.now(timezone.utc)
-    projected = [project_arrival(r) for r in raw_rows]
-    df = spark.createDataFrame(projected, ARRIVALS_RAW_SCHEMA).withColumn(
+    table = pa.Table.from_pylist(
+        [project_arrival(r) for r in raw_rows], schema=_ARROW_RAW_SCHEMA
+    )
+    df = spark.createDataFrame(table).withColumn(
         "date", F.lit(now.date().isoformat()).cast("date")
     )
-    df.write.mode("append").partitionBy("date").parquet(raw_dir)
+    df.coalesce(1).write.mode("append").partitionBy("date").parquet(raw_dir)
     return df

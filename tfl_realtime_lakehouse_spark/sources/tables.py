@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_RAW_SCHEMA
+from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_BRONZE_SCHEMA
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -170,17 +170,23 @@ def read_raw_arrivals(spark: SparkSession, raw_dir: str) -> DataFrame:
 
     Reference parity: ``read_parquet('../data/raw/date=*/arrivals_*.parquet',
     hive_partitioning=true)`` guarded by a compile-time file-count probe
-    (stg_arrivals.sql:5-14, 26-40). Spark discovers ``date=`` partitions
-    natively; when no files exist we return an empty relation with the
-    raw schema + a null date partition column so the staging projection
-    stays schema-stable.
+    (stg_arrivals.sql:5-14, 26-40). The scan is job-free: the declared
+    ``ARRIVALS_BRONZE_SCHEMA`` replaces footer inference, and the path is
+    the ``date=*`` directory glob (``pathGlobFilter`` keeps only parquet
+    files), so the driver lists the few day directories itself instead
+    of Spark launching a parallel listing job over every snapshot file
+    (the reference writes 720 a day). When no files exist we return an
+    empty relation with the same schema so the staging projection stays
+    schema-stable.
     """
-    if glob.glob(os.path.join(raw_dir, "date=*", "*.parquet")):
-        return spark.read.option("basePath", raw_dir).parquet(
-            os.path.join(raw_dir, "date=*", "*.parquet")
+    if next(glob.iglob(os.path.join(raw_dir, "date=*", "*.parquet")), None):
+        return (
+            spark.read.schema(ARRIVALS_BRONZE_SCHEMA)
+            .option("basePath", raw_dir)
+            .option("pathGlobFilter", "*.parquet")
+            .parquet(os.path.join(raw_dir, "date=*"))
         )
-    schema = T.StructType(ARRIVALS_RAW_SCHEMA.fields + [T.StructField("date", T.DateType())])
-    return spark.createDataFrame([], schema)
+    return spark.createDataFrame([], ARRIVALS_BRONZE_SCHEMA)
 
 
 def drop_table_and_location(spark: SparkSession, table_name: str) -> None:

@@ -30,17 +30,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_RAW_SCHEMA
+from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_BRONZE_SCHEMA
 
 
 def read_bronze_stream(spark: SparkSession, raw_dir: str) -> DataFrame:
     """Streaming scan of the bronze layout. Schema must be declared for
     streaming sources; ``date`` arrives via partition discovery."""
-    schema = T.StructType(
-        ARRIVALS_RAW_SCHEMA.fields + [T.StructField("date", T.DateType())]
-    )
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ARRIVALS_BRONZE_SCHEMA)
         .option("basePath", raw_dir)
         .option("maxFilesPerTrigger", 16)
         .parquet(f"{raw_dir}/date=*")
