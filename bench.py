@@ -42,12 +42,13 @@ from tfl_realtime_lakehouse_spark.queries import REGISTRY  # noqa: E402
 from tfl_realtime_lakehouse_spark.session import get_spark  # noqa: E402
 
 
-def _release_blocks(spark) -> None:
+def _release_blocks(spark) -> int:
     """Drop each query's DataFrame graph promptly: localCheckpoint
     blocks (used by the contraction/self-join operators) are only
     released by the ContextCleaner once the Python references die, and
     100+ queries of retained blocks were measured to add multi-second
-    noise spikes to later suite measurements."""
+    noise spikes to later suite measurements. Returns 1 when the
+    release failed (reported on stderr), else 0."""
     import gc
 
     gc.collect()
@@ -56,8 +57,10 @@ def _release_blocks(spark) -> None:
         retained = jsc.getPersistentRDDs().values().toList()
         for i in range(retained.size()):
             retained.apply(i).unpersist(False)
-    except Exception:
-        pass
+    except Exception as exc:  # keep the suite running; count and report it
+        print(f"# unpersist of retained blocks failed: {exc}", file=sys.stderr)
+        return 1
+    return 0
 
 
 def _session_alive(spark) -> bool:
@@ -69,9 +72,10 @@ def _session_alive(spark) -> bool:
 
 def _run_suite(
     spark, sf_dir: str
-) -> tuple[dict[str, float], dict[str, float], float, object]:
+) -> tuple[dict[str, float], dict[str, float], float, object, int]:
     timings: dict[str, float] = {}
     cpus: dict[str, float] = {}
+    release_failures = 0
     t_suite = time.time()
     for name, rq in sorted(REGISTRY.items()):
         t0 = time.time()
@@ -103,8 +107,8 @@ def _run_suite(
                     pass
                 spark = get_spark(app_name="tfl-lakehouse-bench")
                 spark.sparkContext.setLogLevel("ERROR")
-        _release_blocks(spark)
-    return timings, cpus, round(time.time() - t_suite, 3), spark
+        release_failures += _release_blocks(spark)
+    return timings, cpus, round(time.time() - t_suite, 3), spark, release_failures
 
 
 def main() -> None:
@@ -124,9 +128,11 @@ def main() -> None:
     load_before = os.getloadavg()
     runs = []
     steal_deltas: list[int] = []
+    release_failures = 0
     for _ in range(max(1, repeat)):
         s0 = hoststamp.steal_jiffies()
-        timings_i, cpus_i, total_i, spark = _run_suite(spark, sf_dir)
+        timings_i, cpus_i, total_i, spark, failed_i = _run_suite(spark, sf_dir)
+        release_failures += failed_i
         s1 = hoststamp.steal_jiffies()
         steal_deltas.append(
             (s1 - s0) if s0 is not None and s1 is not None else -1
@@ -150,6 +156,9 @@ def main() -> None:
         "load_before": [round(v, 2) for v in load_before],
         "load_after": [round(v, 2) for v in os.getloadavg()],
         "steal_delta": steal_deltas,
+        # unpersist failures between queries: retained blocks that may
+        # skew later queries' timings
+        "release_failures": release_failures,
     }
     if len(runs) > 1:
         names = sorted(REGISTRY)
@@ -186,6 +195,7 @@ def main() -> None:
         "load_before": out["load_before"],
         "load_after": out["load_after"],
         "steal_delta": steal_deltas,
+        "release_failures": release_failures,
         "headline": True,
     }
     if len(runs) > 1:

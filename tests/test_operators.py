@@ -1140,12 +1140,15 @@ def test_mg_heavy_hitters_guarantees(spark):
 
 
 def test_jaccard_exact_contraction_is_identity_preserving(spark):
-    """contract_exact must reproduce the raw posting-join output
+    """The contracted operator must reproduce the raw posting-join output
     bit-for-bit on a corpus WITH exact duplicates: cross-group pairs
     inherit the representative pair's (n_shared, jaccard), within-group
     pairs emit (full set size, 1.0), and zero-shingle duplicate groups
     (docs shorter than n) emit nothing — exactly like raw postings."""
-    from tfl_realtime_lakehouse_spark.operators.dedup import ngram_jaccard_pairs
+    from tfl_realtime_lakehouse_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        ngram_jaccard_pairs_reps,
+    )
 
     base_a = "the quick brown fox jumps over the lazy dog again and again"
     base_b = "the quick brown fox jumps over the lazy cat again and again"
@@ -1157,9 +1160,9 @@ def test_jaccard_exact_contraction_is_identity_preserving(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     raw = {tuple(r) for r in
-           ngram_jaccard_pairs(docs, threshold=0.2, contract_exact=False).collect()}
+           ngram_jaccard_pairs_reps(docs, threshold=0.2).collect()}
     con = {tuple(r) for r in
-           ngram_jaccard_pairs(docs, threshold=0.2, contract_exact=True).collect()}
+           ngram_jaccard_pairs(docs, threshold=0.2).collect()}
     assert raw == con
     pairs = {(r[0], r[1]) for r in con}
     assert (1, 2) in pairs and (1, 3) in pairs and (2, 3) in pairs  # within-group
@@ -1175,6 +1178,7 @@ def test_minhash_verify_contraction_is_identity_preserving(spark):
     from tfl_realtime_lakehouse_spark.operators.dedup import (
         contracted_pairs,
         minhash_lsh_candidates,
+        shingle_diagonal,
         verify_pairs_jaccard,
     )
 
@@ -1193,17 +1197,28 @@ def test_minhash_verify_contraction_is_identity_preserving(spark):
         return verify_pairs_jaccard(reps, cands, n=3, threshold=0.2)
 
     raw = {tuple(r) for r in _pairs(docs).collect()}
-    con = {tuple(r) for r in contracted_pairs(docs, _pairs, n=3).collect()}
+    con = {
+        tuple(r)
+        for r in contracted_pairs(
+            docs,
+            F.md5("text"),
+            _pairs,
+            lambda reps: shingle_diagonal(reps, "text", "doc_id", 3, "jaccard"),
+            "doc_id",
+        ).collect()
+    }
     assert raw == con
     assert {(r[0], r[1]) for r in con} >= {(1, 2), (10, 11), (10, 12), (11, 12)}
 
 
 def test_vector_contraction_is_identity_preserving(spark):
-    """contracted_vector_pairs must equal the raw matmul tier on a
-    corpus with exactly-equal vectors, including the zero-vector group
-    (raw: NaN score fails the threshold; contracted: skipped)."""
+    """contracted_pairs keyed on the vector must equal the raw matmul
+    tier on a corpus with exactly-equal vectors, including the
+    zero-vector group (raw: NaN score fails the threshold; contracted:
+    skipped)."""
+    from tfl_realtime_lakehouse_spark.operators.dedup import contracted_pairs
     from tfl_realtime_lakehouse_spark.operators.similarity import (
-        contracted_vector_pairs,
+        copy_pair_scores,
         neardup_pairs_numpy,
     )
 
@@ -1216,11 +1231,76 @@ def test_vector_contraction_is_identity_preserving(spark):
 
     fn = lambda reps: neardup_pairs_numpy(reps, threshold=0.4)
     raw = {tuple(r) for r in fn(emb).collect()}
-    con = {tuple(r) for r in contracted_vector_pairs(emb, fn).collect()}
+    con = {
+        tuple(r)
+        for r in contracted_pairs(
+            emb, F.col("embedding"), fn, copy_pair_scores, "vec_id", ("vec_a", "vec_b")
+        ).collect()
+    }
     assert raw == con
     pairs = {(r[0], r[1]) for r in con}
     assert {(1, 2), (1, 3), (2, 3), (10, 11), (1, 10)} <= pairs
     assert not any(30 in p or 31 in p for p in pairs)
+
+
+def _signature_contraction_case(spark):
+    """pHash near pairs: byte-identical assets, a different payload
+    with the same signature, a near pair at Hamming 1, an unrelated
+    image, and two non-PNG assets whose signatures are NULL (grouped
+    together they would pair at Hamming 0; raw never pairs them)."""
+    from tfl_realtime_lakehouse_spark.operators.multimodal import (
+        ahash64,
+        synth_png_gradient,
+    )
+
+    base = synth_png_gradient(40, 32, 9)
+    rows = [
+        (1, base), (2, base), (3, base),
+        (4, synth_png_gradient(40, 32, 10)),  # other bytes, same signature
+        (5, synth_png_gradient(40, 32, 12)),  # Hamming 1 from base
+        (6, synth_png_gradient(48, 40, 70)),  # Hamming 50
+        (7, b"not a png"), (8, b"not a png"),  # NULL signatures
+    ]
+    sigs = ahash64(spark.createDataFrame(rows, "asset_id long, payload binary"))
+
+    def pair_fn(s):
+        return D.hamming_near_pairs(
+            s, sig_col="phash", id_col="asset_id", max_hamming=10, blocks=4
+        )
+
+    con = D.contracted_pairs(
+        sigs,
+        F.col("phash"),
+        pair_fn,
+        lambda reps: reps.select("asset_id", F.lit(0).cast("int").alias("hamming")),
+        "asset_id",
+    )
+    want = {(1, 2, 0), (1, 3, 0), (2, 3, 0), (1, 4, 0), (1, 5, 1)}
+    return pair_fn(sigs), con, want
+
+
+def _rowwise_contraction_case(spark):
+    """Per-row repetition metrics over exact copies."""
+    from tfl_realtime_lakehouse_spark.operators.text import repetition_metrics
+
+    texts = ["a b a b a b c", "the cat sat on the mat the end", "solo"]
+    rows = [(i, texts[i % 3]) for i in range(9)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = D.contracted_rowwise(docs, repetition_metrics)
+    return repetition_metrics(docs), con, set()
+
+
+@pytest.mark.parametrize(
+    "case", [_signature_contraction_case, _rowwise_contraction_case],
+    ids=["signature", "rowwise"],
+)
+def test_exact_groups_contraction_equals_raw(spark, case):
+    """The signature and per-row contractions equal their raw operator."""
+    raw_df, con_df, want = case(spark)
+    raw = {tuple(r) for r in raw_df.collect()}
+    con = {tuple(r) for r in con_df.collect()}
+    assert raw == con
+    assert want <= con
 
 
 def test_bucket_gapfill_locf_and_interp_edges(spark):
@@ -1403,11 +1483,11 @@ def test_simhash_contraction_is_identity_preserving(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     raw = {
         tuple(r)
-        for r in D.simhash_near_pairs(docs, max_hamming=8, contract_exact=False).collect()
+        for r in D.simhash_near_pairs_reps(docs, max_hamming=8).collect()
     }
     con = {
         tuple(r)
-        for r in D.simhash_near_pairs(docs, max_hamming=8, contract_exact=True).collect()
+        for r in D.simhash_near_pairs(docs, max_hamming=8).collect()
     }
     assert raw == con
     assert (0, 3, 0) in con  # copies of text 0 at Hamming 0
@@ -1417,7 +1497,10 @@ def test_common_span_contraction_is_identity_preserving(spark):
     """Contracted longest-common-span equals the raw positional plan —
     including a document with an INTERNALLY REPEATED window, whose
     self-pair count is sum(c_i^2), not just n_windows."""
-    from tfl_realtime_lakehouse_spark.operators.dedup import longest_common_span
+    from tfl_realtime_lakehouse_spark.operators.dedup import (
+        longest_common_span,
+        longest_common_span_reps,
+    )
 
     rep8 = " ".join(["w" + str(j) for j in range(8)])
     texts = [
@@ -1438,11 +1521,11 @@ def test_common_span_contraction_is_identity_preserving(spark):
     kw = dict(w=8, min_span_tokens=10)
     raw = {
         (r["doc_a"], r["doc_b"]): (r["n_shared_windows"], r["max_span_tokens"])
-        for r in longest_common_span(docs, contract_exact=False, **kw).collect()
+        for r in longest_common_span_reps(docs, **kw).collect()
     }
     con = {
         (r["doc_a"], r["doc_b"]): (r["n_shared_windows"], r["max_span_tokens"])
-        for r in longest_common_span(docs, contract_exact=True, **kw).collect()
+        for r in longest_common_span(docs, **kw).collect()
     }
     assert raw == con
     # the repeated-window doc's self-pair: windows at positions where
@@ -2038,6 +2121,7 @@ def test_containment_raw_equals_contracted_and_catches_subsets(spark):
     that jaccard misses."""
     from tfl_realtime_lakehouse_spark.operators.dedup import (
         ngram_containment_pairs,
+        ngram_containment_pairs_reps,
         ngram_jaccard_pairs,
     )
 
@@ -2052,11 +2136,11 @@ def test_containment_raw_equals_contracted_and_catches_subsets(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     raw = {
         (r.doc_a, r.doc_b): (r.n_shared, r.containment)
-        for r in ngram_containment_pairs(df, contract_exact=False).collect()
+        for r in ngram_containment_pairs_reps(df).collect()
     }
     contracted = {
         (r.doc_a, r.doc_b): (r.n_shared, r.containment)
-        for r in ngram_containment_pairs(df, contract_exact=True).collect()
+        for r in ngram_containment_pairs(df).collect()
     }
     assert raw == contracted
     # subset dup found at containment 1.0

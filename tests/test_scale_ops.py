@@ -15,7 +15,10 @@ from tfl_realtime_lakehouse_spark.plans import stg_arrivals
 from tfl_realtime_lakehouse_spark.sources.bucketing import bucketed_join, write_bucketed
 from tfl_realtime_lakehouse_spark.sources.tables import read_table, write_bronze
 from tfl_realtime_lakehouse_spark.streaming import read_bronze_stream
-from tfl_realtime_lakehouse_spark.streaming.sink import run_silver_stream
+from tfl_realtime_lakehouse_spark.streaming.sink import (
+    run_silver_stream,
+    silver_partition_overwrite_writer,
+)
 
 
 @pytest.fixture(scope="module")
@@ -117,6 +120,31 @@ def test_streaming_sink_idempotent_under_replay(spark, tmp_path):
     # overwrite rewrites the same date partitions: no duplicates
     run("ckpt2")
     assert spark.read.parquet(out_dir).count() == first == 2
+
+
+def test_streaming_sink_keeps_every_batch_of_a_date(spark, tmp_path):
+    """Two micro-batches on the same date both survive (each owns its
+    batch_id partition), a replayed batch id rewrites its own rows
+    instead of duplicating them, and the session's overwrite mode is
+    left as it was."""
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
+    out_dir = str(tmp_path / "silver")
+    write = silver_partition_overwrite_writer(out_dir)
+
+    def batch(tag):
+        return spark.createDataFrame(
+            [(tag, "2025-01-01 10:00:00")], "tag string, ts string"
+        ).withColumn("event_ts", F.to_timestamp("ts"))
+
+    write(batch("batch0"), 0)
+    write(batch("batch1"), 1)
+    write(batch("batch1"), 1)  # replay
+    assert sorted(r.tag for r in spark.read.parquet(out_dir).collect()) == [
+        "batch0",
+        "batch1",
+    ]
+    assert spark.conf.get(mode_key) == mode_before
 
 
 def test_stop_shingle_filter_bounds_hot_candidates(spark):

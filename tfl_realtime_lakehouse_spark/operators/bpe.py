@@ -32,11 +32,9 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
-
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 from pyspark.sql import types as T
+
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 END = "</w>"
 
@@ -104,7 +102,7 @@ def bpe_train(
     """
     wf = word_frequencies(docs, text_col).select(
         "freq", _chars(F.col("word")).alias("toks")
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     merges: list[tuple[str, str]] = []
     for _ in range(num_merges):
         pairs = wf.select(
@@ -131,7 +129,7 @@ def bpe_train(
         # contract every word under the new rule; checkpoint so the fold
         # chain doesn't deepen with the round count
         wf = wf.select("freq", _merge_fold(F.col("toks"), a, b).alias("toks"))
-        wf = wf.localCheckpoint(storageLevel=_CKPT_LEVEL)
+        wf = wf.localCheckpoint(storageLevel=CKPT_LEVEL)
     return merges
 
 

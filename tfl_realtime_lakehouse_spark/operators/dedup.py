@@ -9,24 +9,22 @@
   are verified, which is what makes near-dedup feasible at 100 TB.
 - SimHash: 64-bit signature via per-bit majority vote of token hashes;
   near-dup candidates share signatures within a small Hamming radius.
+- exact contraction: :func:`exact_groups` collapses identical content
+  to one representative, :func:`contracted_pairs` runs a content-pure
+  pair operator on representatives and expands the result to every
+  copy. Each pair operator ships as a raw ``*_reps`` function and a
+  contracted entry point.
 
 All built from DataFrame ops (xxhash64/explode/groupBy) — no Python UDFs.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Lineage-cut blocks are stored SERIALIZED with disk spill: the default
-# deserialized on-heap level holds ~10x the on-wire size, which is what
-# OOMed an sf5 sweep's ~30M-row edge checkpoints on an 8 GiB local JVM.
-# Storage level changes only the cached representation, never the values.
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
-
 from tfl_realtime_lakehouse_spark.operators.text import shingles, tokens
-from tfl_realtime_lakehouse_spark.sources.tables import fan_out, keyed_spread
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL, fan_out, keyed_spread
 
 
 def exact_dedup_groups(
@@ -111,105 +109,110 @@ def shingle_sizes(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     )
 
 
-def contracted_pairs(
-    df: DataFrame,
-    pair_fn,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
+def shingle_diagonal(
+    reps: DataFrame, text_col: str, id_col: str, n: int, score_col: str
 ) -> DataFrame:
-    """Exact-contraction wrapper for CONTENT-PURE pair operators: run
-    ``pair_fn`` on one representative per exact-duplicate group, then
-    expand the pairs back to all member ids — bit-identical to running
-    ``pair_fn`` on the raw corpus, at unique-content cost.
-
-    ``pair_fn(reps) -> (doc_a, doc_b, n_shared, jaccard)`` must depend
-    only on document CONTENT (so copies are interchangeable) and must,
-    on the raw corpus, pair two identical documents at (full shingle-set
-    size, 1.0) exactly when the document has ≥ 1 ``n``-shingle — true of
-    the posting-join jaccard and of LSH-candidates + exact verification
-    (identical docs collide on every band; zero-shingle docs have no
-    postings, hence no signature, hence no pair).
-
-    Expansion: cross-group pairs re-attach members via two equi-joins on
-    the representative id (output-sized work); within-group pairs are a
-    per-group member self-join carrying (set size, 1.0), skipping
-    zero-shingle groups. k exact copies otherwise inflate pair work k² —
-    the replicated sf1 corpus measures 280 s → 24 s (jaccard) and
-    40 s → 5 s (MinHash verify) from this wrapper alone.
-    """
-    def within_fn(reps: DataFrame) -> DataFrame:
-        sizes = shingle_sizes(reps, text_col, id_col, n).where(F.col("n_shingles") > 0)
-        return sizes.select(
+    """Self-pair values of the shingle-set pair operators (jaccard,
+    containment, LSH + exact verification): a document paired with an
+    exact copy shares its full distinct ``n``-shingle set at score 1.0.
+    Zero-shingle documents are left out — they have no postings, hence
+    no raw pair either."""
+    return (
+        shingle_sizes(reps, text_col, id_col, n)
+        .where(F.col("n_shingles") > 0)
+        .select(
             F.col(id_col),
             F.col("n_shingles").cast("long").alias("n_shared"),
-            F.lit(1.0).alias("jaccard"),
+            F.lit(1.0).alias(score_col),
         )
-
-    return contracted_pairs_generic(df, pair_fn, within_fn, text_col, id_col)
-
-
-def contracted_pairs_generic(
-    df: DataFrame,
-    pair_fn,
-    within_fn,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The general exact-contraction machinery behind
-    :func:`contracted_pairs`, parameterized over the operator's value
-    columns: ``pair_fn(reps) -> (doc_a, doc_b, *value_cols)`` computes
-    pairs on unique content; ``within_fn(reps) -> (id_col, *value_cols)``
-    states the DIAGONAL — the value columns a pair of exact copies of a
-    document carries, restricted to documents whose self-pair the raw
-    operator would emit at all. Any content-pure pair operator whose
-    self-pair values are computable per document fits: jaccard
-    (sizes, 1.0), SimHash (hamming 0), longest-common-span (all
-    windows, full length).
-    """
-    # Spread the raw scan once: the md5 members map and the reps
-    # semi-join (whose checkpoint feeds pair_fn/within_fn) otherwise
-    # inherit the scan's single split and serialize every downstream
-    # content pass (measured at sf0.1; no-op on multi-split inputs).
-    df = fan_out(df)
-    groups = exact_dedup_groups(df, text_col, id_col)
-    members = (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-        .join(groups.select("text_hash", F.col("first_doc").alias("_rep")), "text_hash")
-        .select(id_col, "_rep")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
     )
-    # pair_fn and within_fn each traverse reps — materialize once
-    # (unique content only) instead of re-running the corpus scan +
-    # semi-join per use.
+
+
+def exact_groups(df: DataFrame, key: Column, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """Group rows of ``df`` with equal ``key`` — ``F.md5(text)`` for
+    documents, the signature column for fingerprints, the array column
+    itself for vectors (array equality, no tolerance) — the grouping
+    step of every exact contraction.
+
+    Returns ``(members, reps)``: ``members`` is ``(id_col, _rep)`` with
+    ``_rep`` the group's minimum id; ``reps`` holds the rows of ``df``
+    that are their group's representative. Rows with a NULL key are in
+    neither (the membership equi-join drops them). Both are
+    localCheckpointed, so the key map and the semi-join run once however
+    often a caller reads them (:func:`contracted_pairs` reads
+    ``members`` four times and ``reps`` twice).
+
+    ``df`` is used as given. Text callers pass ``fan_out(df)``: md5 over
+    document bodies is an expensive map that otherwise runs single-task
+    on a one-split scan (1.8-2.2 s at sf0.1), as does the reps
+    semi-join feeding every content pass. A column key (signature,
+    vector) has no such map, and spreading it only adds a shuffle
+    (measured +3-6 s cold JVM CPU on the sf0.1 embedding near-dup
+    queries).
+    """
+    keyed = df.select(F.col(id_col), key.alias("_key"))
+    members = (
+        keyed.join(keyed.groupBy("_key").agg(F.min(id_col).alias("_rep")), "_key")
+        .select(id_col, "_rep")
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
+    )
     reps = df.join(
         members.where(F.col(id_col) == F.col("_rep")).select(id_col), id_col, "left_semi"
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
+    return members, reps
+
+
+def contracted_pairs(
+    df: DataFrame,
+    key: Column,
+    pair_fn,
+    diag_fn,
+    id_col: str,
+    pair_cols: tuple[str, str] = ("doc_a", "doc_b"),
+) -> DataFrame:
+    """Exact contraction for CONTENT-PURE pair operators: run
+    ``pair_fn`` on one representative per :func:`exact_groups` group
+    and expand the result to every member id — bit-identical to running
+    ``pair_fn`` on ``df`` itself, at unique-content cost. k exact copies
+    otherwise inflate pair work k² (replicated sf1 corpus: jaccard
+    280 s → 24 s, MinHash verify 40 s → 5 s).
+
+    ``pair_fn(reps) -> (*pair_cols, *value_cols)`` must depend only on
+    the grouping key's content, so copies are interchangeable.
+    ``diag_fn(reps) -> (id_col, *value_cols)`` states the DIAGONAL: the
+    values the raw operator gives a pair of exact copies of a
+    representative, restricted to representatives whose copies it pairs
+    at all (e.g. jaccard (full set size, 1.0) for docs with ≥ 1
+    shingle; Hamming 0 for any signature; nothing for fuzzy edit
+    distance, which excludes distance 0).
+
+    Cross-group pairs re-attach each side's members through two
+    equi-joins on the representative id (output-sized work) and are
+    re-ordered with least/greatest; within-group pairs are a per-group
+    member self-join carrying the diagonal values.
+    """
+    a, b = pair_cols
+    members, reps = exact_groups(df, key, id_col)
     rep_pairs = pair_fn(reps)
-    value_cols = [c for c in rep_pairs.columns if c not in ("doc_a", "doc_b")]
-    m_a = members.select(F.col("_rep").alias("doc_a"), F.col(id_col).alias("_da"))
-    m_b = members.select(F.col("_rep").alias("doc_b"), F.col(id_col).alias("_db"))
+    value_cols = [c for c in rep_pairs.columns if c not in pair_cols]
+    m_a = members.select(F.col("_rep").alias(a), F.col(id_col).alias("_da"))
+    m_b = members.select(F.col("_rep").alias(b), F.col(id_col).alias("_db"))
     cross = (
-        rep_pairs.join(m_a, "doc_a")
-        .join(m_b, "doc_b")
+        rep_pairs.join(m_a, a)
+        .join(m_b, b)
         .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
+            F.least("_da", "_db").alias(a),
+            F.greatest("_da", "_db").alias(b),
             *value_cols,
         )
     )
-    diag = within_fn(reps)
     wa = members.select(F.col("_rep"), F.col(id_col).alias("_da"))
     wb = members.select(F.col("_rep"), F.col(id_col).alias("_db"))
     within = (
         wa.join(wb, "_rep")
         .where(F.col("_da") < F.col("_db"))
-        .join(diag.withColumnsRenamed({id_col: "_rep"}), "_rep")
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            *value_cols,
-        )
+        .join(diag_fn(reps).withColumnsRenamed({id_col: "_rep"}), "_rep")
+        .select(F.col("_da").alias(a), F.col("_db").alias(b), *value_cols)
     )
     return cross.unionByName(within)
 
@@ -220,33 +223,20 @@ def contracted_rowwise(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact-contraction wrapper for CONTENT-PURE per-row operators
-    (quality metrics, language id, fingerprints): compute each metric
-    once per unique document, fan the result back out to every copy via
-    one equi-join on the representative id. Output is bit-identical to
+    """Exact contraction for CONTENT-PURE per-row operators (quality
+    metrics, language id, fingerprints): compute each metric once per
+    unique document, fan the result back out to every copy via one
+    equi-join on the representative id. Output is bit-identical to
     running ``fn`` on the raw corpus — per-row metrics of a copy ARE the
     representative's metrics — at unique-content compute cost.
 
     ``fn(reps) -> DataFrame`` must key its output by ``id_col`` and emit
     only content-derived columns.
     """
-    df = fan_out(df)  # same single-split rationale as contracted_pairs_generic
-    groups = exact_dedup_groups(df, text_col, id_col)
-    members = df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("text_hash")
-    ).join(groups.select("text_hash", F.col("first_doc").alias("_rep")), "text_hash")
-    reps = df.join(
-        members.where(F.col(id_col) == F.col("_rep")).select(id_col),
-        id_col,
-        "left_semi",
-    )
+    members, reps = exact_groups(fan_out(df), F.md5(F.col(text_col)), id_col)
     rep_out = fn(reps).withColumnRenamed(id_col, "_rep")
     metric_cols = [c for c in rep_out.columns if c != "_rep"]
-    return (
-        members.select(id_col, "_rep")
-        .join(rep_out, "_rep")
-        .select(id_col, *metric_cols)
-    )
+    return members.join(rep_out, "_rep").select(id_col, *metric_cols)
 
 
 def ngram_jaccard_pairs(
@@ -256,9 +246,41 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.2,
     max_doc_freq: int | None = None,
-    contract_exact: bool = True,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
+    """:func:`ngram_jaccard_pairs_reps` under exact contraction
+    (:func:`contracted_pairs`): the posting join is quadratic in UNIQUE
+    content instead of raw rows, with bit-identical output. Exact copies
+    share every shingle, so jaccard(a, b) = jaccard(rep(a), rep(b)) and
+    within-group pairs are (full set size, 1.0) by definition
+    (:func:`shingle_diagonal`). On the 10×-replicated sf1 corpus this
+    cut the operator from 280 s to ~16 s — k copies otherwise inflate
+    posting lists k× and candidate pairs k². ``max_doc_freq`` counts a
+    shingle's document frequency over UNIQUE content — the more
+    meaningful boilerplate measure, since replication would otherwise
+    push ordinary shingles over the cap.
+    """
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: ngram_jaccard_pairs_reps(
+            reps, text_col, id_col, n, threshold, max_doc_freq
+        ),
+        lambda reps: shingle_diagonal(reps, text_col, id_col, n, "jaccard"),
+        id_col,
+    )
+
+
+def ngram_jaccard_pairs_reps(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.2,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle,
+    computed on ``df`` as given (no exact contraction — use
+    :func:`ngram_jaccard_pairs` unless the input is already unique).
 
     Inverted-index plan: explode distinct shingles → self equi-join on
     the shingle (posting-list join) → count shared shingles per pair →
@@ -292,36 +314,7 @@ def ngram_jaccard_pairs(
       hash subtree does not run twice (self-joins duplicate lineage).
       At cluster scale the checkpoint spills to executor-local disk —
       the standard trade for any reused exploded relation.
-
-    ``contract_exact`` (default on) makes the posting join quadratic in
-    UNIQUE content instead of raw rows, with bit-identical output:
-    exact copies share every shingle, so every pair involving copies is
-    recoverable from its representatives' pair — jaccard(a, b) =
-    jaccard(rep(a), rep(b)) and within-group pairs are (full set size,
-    1.0) by definition. The operator collapses exact-duplicate groups,
-    runs the posting join on representatives only, then expands:
-    cross-group pairs re-attach each side's members (two equi-joins on
-    the rep id, output-sized work), within-group pairs come from a
-    per-group member self-join (group-sized, skipping zero-shingle
-    groups, which raw postings also skip). On the 10×-replicated sf1
-    corpus this cut the operator from 280 s to the contracted cost
-    (~16 s) — k copies otherwise inflate posting lists k× and candidate
-    pairs k². Pass ``contract_exact=False`` when the input is already
-    unique (``dedup_clusters`` does). With the contraction on,
-    ``max_doc_freq`` counts a shingle's document frequency over
-    UNIQUE content — the more meaningful boilerplate measure, since
-    replication would otherwise push ordinary shingles over the cap.
     """
-    if contract_exact:
-        return contracted_pairs(
-            df,
-            lambda reps: ngram_jaccard_pairs(
-                reps, text_col, id_col, n, threshold, max_doc_freq, contract_exact=False
-            ),
-            text_col=text_col,
-            id_col=id_col,
-            n=n,
-        )
     # Hash-to-long BEFORE array_distinct (dedup over 8-byte keys, not
     # n-gram strings) and fan the scan out first — the single-row-group
     # corpus files otherwise run the whole shingle pipeline on one core
@@ -334,7 +327,7 @@ def ngram_jaccard_pairs(
         F.explode(
             F.array_distinct(F.transform(shingles(text_col, n), lambda g: F.xxhash64(g)))
         ).alias("sh"),
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     posts = posts_raw
     if max_doc_freq is not None:
         # Stop-shingle filter on the HASHED key (same semantics as
@@ -660,13 +653,13 @@ def minhash_index_probe(
             "text_hash",
         )
         .select(id_col, "_side", "_rep")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     reps = u.join(
         members.where(F.col(id_col) == F.col("_rep")).select(id_col),
         id_col,
         "left_semi",
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     cands = minhash_lsh_candidates(
         reps, text_col, id_col, n, num_hashes, bands, hash_family
     )
@@ -756,41 +749,42 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 8,
     blocks: int = 4,
-    contract_exact: bool = True,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """SimHash near-dup candidates via block permutation: split the
-    64-bit signature into ``blocks`` chunks; by pigeonhole, any pair
-    within Hamming distance < blocks shares a chunk — so an equi-join
-    per chunk finds all such pairs without n² comparisons. Pairs are
-    then verified with the exact popcount distance.
+    """:func:`simhash_near_pairs_reps` under exact contraction
+    (:func:`contracted_pairs`) — bit-identical output: copies share
+    every chunk and sit at Hamming 0, so the diagonal is distance 0 for
+    any document with ≥ 1 token (tokenless docs have no signature and no
+    pairs, matching raw). k copies otherwise inflate every chunk bucket
+    k× and candidate pairs k² (measured 34 s → 9 s on the
+    50×-replicated sf5 corpus)."""
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: simhash_near_pairs_reps(
+            reps, text_col, id_col, max_hamming, blocks, hash_family
+        ),
+        lambda reps: fan_out(reps)
+        .where(F.size(tokens(text_col)) >= 1)
+        .select(F.col(id_col), F.lit(0).cast("int").alias("hamming")),
+        id_col,
+    )
 
-    ``contract_exact`` (default on) runs the chunk join on one
-    representative per exact-duplicate group and expands
-    (:func:`contracted_pairs_generic`) — bit-identical output: copies
-    share every chunk and sit at Hamming 0, so the within-group
-    diagonal is distance 0 for any document with ≥ 1 token (tokenless
-    docs have no signature and no pairs, matching raw). k copies
-    otherwise inflate every chunk bucket k× and candidate pairs k²
-    (measured 34 s → 9 s on the 50×-replicated sf5 corpus)."""
-    if contract_exact:
-        def within_fn(reps: DataFrame) -> DataFrame:
-            return (
-                fan_out(reps)
-                .where(F.size(tokens(text_col)) >= 1)
-                .select(F.col(id_col), F.lit(0).cast("int").alias("hamming"))
-            )
 
-        return contracted_pairs_generic(
-            df,
-            lambda reps: simhash_near_pairs(
-                reps, text_col, id_col, max_hamming, blocks,
-                contract_exact=False, hash_family=hash_family,
-            ),
-            within_fn,
-            text_col,
-            id_col,
-        )
+def simhash_near_pairs_reps(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    max_hamming: int = 8,
+    blocks: int = 4,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """SimHash near-dup candidates via block permutation, on ``df`` as
+    given: split the 64-bit signature into ``blocks`` chunks; by
+    pigeonhole, any pair within Hamming distance < blocks shares a
+    chunk — so an equi-join per chunk finds all such pairs without n²
+    comparisons. Pairs are then verified with the exact popcount
+    distance."""
     sigs = simhash(df, text_col, id_col, hash_family)
     return hamming_near_pairs(
         sigs,
@@ -864,63 +858,6 @@ def hamming_near_pairs(
     )
 
 
-def contracted_signature_pairs(
-    sigs: DataFrame,
-    pair_fn,
-    id_col: str = "doc_id",
-    sig_col: str = "sig",
-) -> DataFrame:
-    """Exact-contraction for SIGNATURE pair operators (the fingerprint
-    twin of similarity.contracted_vector_pairs): group rows with
-    IDENTICAL signatures, run ``pair_fn`` on one representative per
-    group, expand pairs back to member ids.
-
-    Exactly output-preserving for any chunk/band candidate relation
-    that depends only on the signature: identical signatures share
-    every chunk (within-group pairs always candidates, Hamming 0), and
-    a cross-group member pair is a candidate iff its representatives
-    are. k byte-identical assets otherwise cost k^2 in every bucket —
-    the duplicated-corpus blowup the sf5 sweep measured on pHash.
-
-    ``pair_fn(reps) -> (doc_a, doc_b, hamming)`` must be content-pure.
-    """
-    groups = sigs.groupBy(sig_col).agg(F.min(id_col).alias("_rep"))
-    members = (
-        sigs.join(groups, sig_col)
-        .select(F.col(id_col), "_rep")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
-    )
-    reps = sigs.join(
-        members.where(F.col(id_col) == F.col("_rep")).select(id_col),
-        id_col,
-        "left_semi",
-    )
-    rep_pairs = pair_fn(reps)
-    m_a = members.select(F.col("_rep").alias("doc_a"), F.col(id_col).alias("_da"))
-    m_b = members.select(F.col("_rep").alias("doc_b"), F.col(id_col).alias("_db"))
-    cross = (
-        rep_pairs.join(m_a, "doc_a")
-        .join(m_b, "doc_b")
-        .select(
-            F.least("_da", "_db").alias("doc_a"),
-            F.greatest("_da", "_db").alias("doc_b"),
-            "hamming",
-        )
-    )
-    wa = members.select("_rep", F.col(id_col).alias("_da"))
-    wb = members.select("_rep", F.col(id_col).alias("_db"))
-    within = (
-        wa.join(wb, "_rep")
-        .where(F.col("_da") < F.col("_db"))
-        .select(
-            F.col("_da").alias("doc_a"),
-            F.col("_db").alias("doc_b"),
-            F.lit(0).cast("integer").alias("hamming"),
-        )
-    )
-    return cross.unionAll(within)
-
-
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -953,7 +890,7 @@ def connected_components(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
 
     def _stat(e: DataFrame):
@@ -991,7 +928,7 @@ def connected_components(
             .where(F.col("n") != F.col("m"))
             .select(F.col("n").alias("u"), F.col("m").alias("v"))
             .distinct()
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
         cur = _stat(new_edges)
         edges = new_edges
@@ -1064,35 +1001,14 @@ def dedup_clusters(
 
     Returns (id, cluster_id, cluster_size, is_rep) for every row of df.
     """
-    groups = exact_dedup_groups(df, text_col, id_col)
-    doc_rep = df.select(
-        F.col(id_col), F.md5(F.col(text_col)).alias("text_hash")
-    ).join(
-        groups.select("text_hash", F.col("first_doc").alias("rep")), "text_hash"
-    )
-    # Checkpoint + fan_out: the semi-join output inherits the scan's
-    # split count (1 at small SF), and fan_out alone can't probe a wide
-    # plan — materialize first, then spread. The shingle explode below
-    # was a measured 2.7 s single task at sf0.1; no-op once the scan
-    # has ≥ parallelism splits.
-    reps = fan_out(
-        dedup_representatives(df, text_col, id_col).localCheckpoint(
-            storageLevel=_CKPT_LEVEL
-        )
-    )
-    pairs = ngram_jaccard_pairs(
-        reps,
-        text_col,
-        id_col,
-        n=n,
-        threshold=threshold,
-        max_doc_freq=max_doc_freq,
-        contract_exact=False,  # reps are already unique content
+    members, reps = exact_groups(fan_out(df), F.md5(F.col(text_col)), id_col)
+    pairs = ngram_jaccard_pairs_reps(
+        reps, text_col, id_col, n=n, threshold=threshold, max_doc_freq=max_doc_freq
     )
     comp = connected_components(pairs, "doc_a", "doc_b")
-    out = doc_rep.join(comp, F.col("rep") == F.col("node"), "left").select(
+    out = members.join(comp, F.col("_rep") == F.col("node"), "left").select(
         F.col(id_col),
-        F.coalesce(F.col("component"), F.col("rep")).alias("cluster_id"),
+        F.coalesce(F.col("component"), F.col("_rep")).alias("cluster_id"),
     )
     w = Window.partitionBy("cluster_id")
     return out.select(
@@ -1110,11 +1026,83 @@ def longest_common_span(
     w: int = 8,
     min_span_tokens: int = 8,
     max_doc_freq: int | None = None,
-    contract_exact: bool = True,
 ) -> DataFrame:
-    """Longest shared CONSECUTIVE token span per document pair — the
-    cross-document substring-duplication signal (Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better"): near-
+    """:func:`longest_common_span_reps` under exact contraction
+    (:func:`contracted_pairs`). Two identical documents match at every
+    (i, j) with equal window CONTENT, so their pair carries
+    n_shared = Σ cᵢ² over the window multiset (cᵢ = multiplicity;
+    internally-repeated windows match off the zero diagonal too) and
+    max_span = full token length (the zero diagonal is one unbroken run
+    of all n_windows positions — no other diagonal can beat it). Σ cᵢ²
+    is a per-row sorted-run fold: each element contributes 2·run − 1,
+    summing runs to squares. Qualifies iff len ≥ min_span_tokens (raw
+    emits the pair only then). k copies otherwise multiply posting
+    lists k× and the diagonal-run window k² (measured 64 s → ~11 s at
+    sf5/50×).
+    """
+
+    def diag_fn(reps: DataFrame) -> DataFrame:
+        n_toks = F.size(F.split(F.col(text_col), " "))
+        sorted_w = F.array_sort(
+            F.transform(shingles(text_col, w), lambda g: F.xxhash64(g))
+        )
+        pair_state = F.named_struct(
+            F.lit("prev"), F.lit(None).cast("long"),
+            F.lit("run"), F.lit(0).cast("long"),
+            F.lit("acc"), F.lit(0).cast("long"),
+        )
+        self_pairs = F.aggregate(
+            sorted_w,
+            pair_state,
+            lambda acc, x: F.named_struct(
+                F.lit("prev"), x,
+                F.lit("run"),
+                F.when(x == acc["prev"], acc["run"] + 1).otherwise(
+                    F.lit(1).cast("long")
+                ),
+                F.lit("acc"),
+                acc["acc"]
+                + F.lit(2)
+                * F.when(x == acc["prev"], acc["run"] + 1).otherwise(
+                    F.lit(1).cast("long")
+                )
+                - F.lit(1),
+            ),
+            lambda acc: acc["acc"],
+        )
+        return (
+            fan_out(reps)
+            .where(n_toks >= F.lit(max(min_span_tokens, w)))
+            .select(
+                F.col(id_col),
+                self_pairs.cast("bigint").alias("n_shared_windows"),
+                n_toks.cast("int").alias("max_span_tokens"),
+            )
+        )
+
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: longest_common_span_reps(
+            reps, text_col, id_col, w, min_span_tokens, max_doc_freq
+        ),
+        diag_fn,
+        id_col,
+    )
+
+
+def longest_common_span_reps(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    w: int = 8,
+    min_span_tokens: int = 8,
+    max_doc_freq: int | None = None,
+) -> DataFrame:
+    """Longest shared CONSECUTIVE token span per document pair, on
+    ``df`` as given (no exact contraction) — the cross-document
+    substring-duplication signal (Lee et al. 2022, "Deduplicating
+    Training Data Makes Language Models Better"): near-
     dup METRICS like Jaccard miss a verbatim paragraph pasted into an
     otherwise-different document; a long common span catches exactly
     that.
@@ -1141,68 +1129,6 @@ def longest_common_span(
     window; ``max_doc_freq`` bounds hot-window posting lists exactly as
     in :func:`ngram_jaccard_pairs`.
     """
-    if contract_exact:
-        # Exact-contraction (contracted_pairs_generic): two identical
-        # documents match at every (i, j) with equal window CONTENT, so
-        # their pair carries n_shared = Σ cᵢ² over the window multiset
-        # (cᵢ = multiplicity; internally-repeated windows match off the
-        # zero diagonal too) and max_span = full token length (the zero
-        # diagonal is one unbroken run of all n_windows positions — no
-        # other diagonal can beat it). Σ cᵢ² is a per-row sorted-run
-        # fold: each element contributes 2·run − 1, summing runs to
-        # squares. Qualifies iff len ≥ min_span_tokens (raw emits the
-        # pair only then). Cross-group pairs are content-pure. k copies
-        # otherwise multiply posting lists k× and the diagonal-run
-        # window k² (measured 64 s → ~11 s at sf5/50×).
-        def within_fn(reps: DataFrame) -> DataFrame:
-            n_toks = F.size(F.split(F.col(text_col), " "))
-            sorted_w = F.array_sort(
-                F.transform(shingles(text_col, w), lambda g: F.xxhash64(g))
-            )
-            pair_state = F.named_struct(
-                F.lit("prev"), F.lit(None).cast("long"),
-                F.lit("run"), F.lit(0).cast("long"),
-                F.lit("acc"), F.lit(0).cast("long"),
-            )
-            self_pairs = F.aggregate(
-                sorted_w,
-                pair_state,
-                lambda acc, x: F.named_struct(
-                    F.lit("prev"), x,
-                    F.lit("run"),
-                    F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                        F.lit(1).cast("long")
-                    ),
-                    F.lit("acc"),
-                    acc["acc"]
-                    + F.lit(2)
-                    * F.when(x == acc["prev"], acc["run"] + 1).otherwise(
-                        F.lit(1).cast("long")
-                    )
-                    - F.lit(1),
-                ),
-                lambda acc: acc["acc"],
-            )
-            return (
-                fan_out(reps)
-                .where(n_toks >= F.lit(max(min_span_tokens, w)))
-                .select(
-                    F.col(id_col),
-                    self_pairs.cast("bigint").alias("n_shared_windows"),
-                    n_toks.cast("int").alias("max_span_tokens"),
-                )
-            )
-
-        return contracted_pairs_generic(
-            df,
-            lambda reps: longest_common_span(
-                reps, text_col, id_col, w, min_span_tokens, max_doc_freq,
-                contract_exact=False,
-            ),
-            within_fn,
-            text_col,
-            id_col,
-        )
     # Stage the tokenization in its OWN projection: HOF lambdas have no
     # CSE, so an inline split() subtree would re-tokenize the document
     # once PER WINDOW (measured 3.1 s → 0.6 s on the sf0.1 postings).
@@ -1236,7 +1162,7 @@ def longest_common_span(
     # Both sides of the self-join reference the postings — materialize
     # them once (the window-string building is the expensive part;
     # recomputing it doubles the operator's cost).
-    posts = posts.localCheckpoint(storageLevel=_CKPT_LEVEL)
+    posts = posts.localCheckpoint(storageLevel=CKPT_LEVEL)
     a = posts.select(
         F.col(id_col).alias("doc_a"), F.col("pos").alias("pa"), "h"
     )
@@ -1268,40 +1194,39 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    contract_exact: bool = True,
 ) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs: max(|A∩B|/|A|, |A∩B|/|B|) =
-    |A∩B| / min(|A|, |B|) ≥ threshold — the asymmetric near-dup measure
-    that catches subset duplicates (a doc embedded verbatim inside a
-    longer one), which Jaccard structurally misses: a 100-shingle doc
-    contained in a 10 000-shingle doc has jaccard ≈ 0.01 but
-    containment 1.0. Standard in training-data dedup for boilerplate
-    wrappers and quote-expansion copies.
+    """:func:`ngram_containment_pairs_reps` under exact contraction
+    (:func:`contracted_pairs`): copies of a document contain each other
+    fully, so the diagonal is (full set size, 1.0) —
+    :func:`shingle_diagonal`."""
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: ngram_containment_pairs_reps(reps, text_col, id_col, n, threshold),
+        lambda reps: shingle_diagonal(reps, text_col, id_col, n, "containment"),
+        id_col,
+    )
 
-    Same inverted-index plan as :func:`ngram_jaccard_pairs` (hashed
+
+def ngram_containment_pairs_reps(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """Exact n-gram CONTAINMENT pairs on ``df`` as given:
+    max(|A∩B|/|A|, |A∩B|/|B|) = |A∩B| / min(|A|, |B|) ≥ threshold — the
+    asymmetric near-dup measure that catches subset duplicates (a doc
+    embedded verbatim inside a longer one), which Jaccard structurally
+    misses: a 100-shingle doc contained in a 10 000-shingle doc has
+    jaccard ≈ 0.01 but containment 1.0. Standard in training-data dedup
+    for boilerplate wrappers and quote-expansion copies.
+
+    Same inverted-index plan as :func:`ngram_jaccard_pairs_reps` (hashed
     posting self-join, checkpointed postings feeding both sides and the
-    size aggregate) with the min-size denominator, and the same
-    exact-contraction wrapper — copies of a document contain each other
-    fully, so the diagonal is (full set size, 1.0), the condition
-    :func:`contracted_pairs_generic` requires (raw ≡ contracted pinned
-    by the differential test, per the pair-operator checklist).
+    size aggregate) with the min-size denominator.
     """
-    if contract_exact:
-        return contracted_pairs_generic(
-            df,
-            lambda reps: ngram_containment_pairs(
-                reps, text_col, id_col, n, threshold, contract_exact=False
-            ),
-            lambda reps: shingle_sizes(reps, text_col, id_col, n)
-            .where(F.col("n_shingles") > 0)
-            .select(
-                F.col(id_col),
-                F.col("n_shingles").cast("long").alias("n_shared"),
-                F.lit(1.0).alias("containment"),
-            ),
-            text_col,
-            id_col,
-        )
     posts = (
         fan_out(df)
         .select(
@@ -1312,7 +1237,7 @@ def ngram_containment_pairs(
                 )
             ).alias("sh"),
         )
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     a, b = posts.alias("a"), posts.alias("b")
     shared = (
@@ -1363,8 +1288,8 @@ def fuzzy_levenshtein_pairs_reps(
     explode), so the join stays hash-partitioned; the exact
     |len_a − len_b| ≤ band filter then trims the bucket slack. Pairs
     at distance 0 are excluded here — exact copies are the contraction
-    layer's job (:func:`contracted_pairs_generic`), which is what
-    keeps k-copy corpora off the k² path.
+    layer's job (:func:`fuzzy_levenshtein_pairs`), which is what keeps
+    k-copy corpora off the k² path.
 
     Levenshtein itself is Spark's built-in (JVM codegen; identical
     unit-cost DP as every engine's, so the oracle replays it exactly).
@@ -1418,26 +1343,20 @@ def fuzzy_levenshtein_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Full-corpus fuzzy pairs: exact-first contraction around
-    :func:`fuzzy_levenshtein_pairs_reps` (standing rule: every pair
-    operator ships contraction-wrapped). Exact copies appear as
-    distance-0 diagonal pairs; near-misses are computed once per
-    unique text and fanned back out."""
-
-    def pair_fn(reps: DataFrame) -> DataFrame:
-        return fuzzy_levenshtein_pairs_reps(
+    """Full-corpus fuzzy pairs: :func:`fuzzy_levenshtein_pairs_reps`
+    under exact contraction (:func:`contracted_pairs`). Near-misses are
+    computed once per unique text and fanned back out. The diagonal is
+    empty: the raw operator would pair exact copies (same block and
+    bucket) at distance 0, which it excludes by contract."""
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: fuzzy_levenshtein_pairs_reps(
             reps, max_dist=max_dist, len_band=len_band,
             text_col=text_col, id_col=id_col,
-        )
-
-    def within_fn(reps: DataFrame) -> DataFrame:
-        # a pair of exact copies: the raw blocked operator would emit
-        # it (same text -> same block/bucket) at distance 0 — but the
-        # raw op EXCLUDES dist 0 by contract, so the diagonal is empty.
-        return reps.select(F.col(id_col), F.lit(None).cast("int").alias("dist")).where(
+        ),
+        lambda reps: reps.select(F.col(id_col), F.lit(None).cast("int").alias("dist")).where(
             F.lit(False)
-        )
-
-    return contracted_pairs_generic(
-        df, pair_fn, within_fn, text_col=text_col, id_col=id_col
+        ),
+        id_col,
     )

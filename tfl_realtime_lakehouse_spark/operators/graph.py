@@ -28,15 +28,10 @@ same iterations in SQL).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Lineage-cut blocks are stored SERIALIZED with disk spill: the default
-# deserialized on-heap level holds ~10x the on-wire size, which is what
-# OOMed an sf5 sweep's ~30M-row edge checkpoints on an 8 GiB local JVM.
-# Storage level changes only the cached representation, never the values.
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 
 def pagerank(
@@ -56,13 +51,13 @@ def pagerank(
     e0 = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     nodes = (
         e0.select(F.col("src").alias("node"))
         .union(e0.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     n = nodes.count()  # one scalar of driver state — the model, not the data
     # outdeg stays NODE-sized and joins into the rank side each round;
@@ -74,9 +69,9 @@ def pagerank(
     # result hashes equal, ~20% faster warm at sf5).
     outdeg = e0.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
 
-    pr = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    pr = nodes.select("node", F.lit(1.0 / n).alias("pr")).localCheckpoint(storageLevel=CKPT_LEVEL)
     base = (1 - damping) / n  # IEEE-evaluated once; oracle mirrors the op tree
     for _ in range(iters):
         ratio = pr.join(outdeg, pr["node"] == outdeg["src"]).select(
@@ -103,7 +98,7 @@ def pagerank(
                     * F.coalesce(F.col("s").cast("double"), F.lit(0.0))
                 ).alias("pr"),
             )
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return pr.select("node", F.round("pr", 6).alias("pagerank"))
 
@@ -132,7 +127,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -154,7 +149,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         F.when(lo_first, F.struct("degb", "b"))
         .otherwise(F.struct(F.col("dega").alias("degb"), F.col("a").alias("b")))
         .alias("vkey"),
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     # wedges at u: u->v, u->w with vkey(v) < vkey(w); the closing edge
     # (v, w) is oriented v->w under the same total order
     o1 = oriented.select(F.col("u"), F.col("v").alias("x"), F.col("vkey").alias("xkey"))
@@ -210,10 +205,10 @@ def label_propagation(
     adj = (
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
-    nodes = adj.select(F.col("a").alias("node")).distinct().localCheckpoint(storageLevel=_CKPT_LEVEL)
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    nodes = adj.select(F.col("a").alias("node")).distinct().localCheckpoint(storageLevel=CKPT_LEVEL)
+    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(storageLevel=CKPT_LEVEL)
     for _ in range(iters):
         neigh = adj.join(
             labels.select(F.col("node").alias("b"), "label"), "b"
@@ -241,7 +236,7 @@ def label_propagation(
                 "node",
                 F.coalesce(F.col("label"), F.col("node")).alias("label"),
             )
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return labels
 
@@ -274,13 +269,13 @@ def bfs_khop(
     adj = (
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     dist = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
         .select("node", F.lit(0).alias("dist"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     for _ in range(hops):
         reached = adj.join(
@@ -290,7 +285,7 @@ def bfs_khop(
             dist.unionAll(reached)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return dist
 
@@ -323,7 +318,7 @@ def hits_scores(
             f"hits_scores requires rounds >= 1 (got {rounds}): the authority "
             "relation only exists after the first half-iteration"
         )
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct().localCheckpoint(storageLevel=_CKPT_LEVEL)
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct().localCheckpoint(storageLevel=CKPT_LEVEL)
     h = e.select("s").distinct().select("s", F.lit(1).cast("bigint").alias("h"))
     a = None
     for _ in range(rounds):
@@ -331,13 +326,13 @@ def hits_scores(
             e.join(h, "s")
             .groupBy("d")
             .agg(F.sum("h").alias("a"))
-            .localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
         )
         h = (
             e.join(a, "d")
             .groupBy("s")
             .agg(F.sum("a").alias("h"))
-            .localCheckpoint(eager=False, storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(eager=False, storageLevel=CKPT_LEVEL)
         )
     tot_a = a.agg(F.sum("a").alias("ta"))
     tot_h = h.agg(F.sum("h").alias("th"))
@@ -388,7 +383,7 @@ def kcore_peel(
                      F.greatest(F.col(src), F.col(dst)).alias("b"))
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     for _ in range(rounds):
         deg = (
@@ -402,7 +397,7 @@ def kcore_peel(
             e.join(keep.withColumnRenamed("n", "a"), "a")
             .join(keep.withColumnRenamed("n", "b"), "b")
             .select("a", "b")
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return (
         e.select(F.col("a").alias("node"))

@@ -14,10 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL, fan_out
 
 
 def hash_bucket(key: Column | str, buckets: int = 100) -> Column:
@@ -92,8 +90,6 @@ def importance_weights(
     the token explode is map-side, and the two aggregations shuffle
     fixed-width keys.
     """
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
-
     # Fanned out (single-row-group scans otherwise tokenize+md5 on one
     # core) and checkpointed: `toks` feeds BOTH the distribution build
     # and the final per-doc scoring join — without materialization the
@@ -106,7 +102,7 @@ def importance_weights(
             F.explode(F.split(F.col(text_col), " ")).alias("tok"),
         )
         .select(id_col, "_t", hash_bucket(F.col("tok"), buckets).alias("b"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     counts = toks.groupBy("b").agg(
         F.count(F.lit(1)).alias("n_all"),
@@ -257,7 +253,7 @@ def ordered_prefix_sum(
         df.repartitionByRange(partitions, *order_by)
         .sortWithinPartitions(*order_by)
         .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     totals = {
         r[pid]: [r[c] or 0 for c in values]

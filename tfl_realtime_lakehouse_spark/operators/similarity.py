@@ -24,16 +24,9 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 from pyspark.sql import types as T
 
-# Lineage-cut blocks are stored SERIALIZED with disk spill: the default
-# deserialized on-heap level holds ~10x the on-wire size, which is what
-# OOMed an sf5 sweep's ~30M-row edge checkpoints on an 8 GiB local JVM.
-# Storage level changes only the cached representation, never the values.
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
-
-from tfl_realtime_lakehouse_spark.sources.tables import fan_out
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL, fan_out
 
 
 def _as_double(arr: Column) -> Column:
@@ -97,6 +90,25 @@ def cosine_topk(
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(query_id_col, id_col, "score", "rnk")
+    )
+
+
+def copy_pair_scores(
+    reps: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Diagonal of the cosine pair operators under exact contraction
+    (``dedup.contracted_pairs`` keyed on the vector itself): two
+    exactly-equal vectors score 1.0 — identical unit vectors dot to
+    1 ± ulps and every pair operator here rounds to 6 decimals.
+    Zero-norm vectors are left out, matching the raw path where they
+    score 0 or NaN and fail every positive threshold."""
+    sq_norm = F.aggregate(vec_col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
+    nonzero = reps.where(sq_norm > 0).select(id_col)
+    # Semi-join, not a plain filter: joining the member pairs to a
+    # filtered scan makes the optimizer inject a runtime bloom filter
+    # (two extra jobs, measured +1.7 s cold JVM CPU at sf0.1).
+    return reps.select(F.col(id_col), F.lit(1.0).alias("score")).join(
+        nonzero, id_col, "left_semi"
     )
 
 
@@ -572,13 +584,13 @@ def kmeans_train(
     # iteration i+1's assign does not re-execute iteration i's whole
     # lineage (without this the plan nests one full assign+update pass
     # per iteration and the loop cost grows superlinearly in iters).
-    cents = seeds.localCheckpoint(storageLevel=_CKPT_LEVEL)
+    cents = seeds.localCheckpoint(storageLevel=CKPT_LEVEL)
     for _ in range(iters):
         assigned = kmeans_assign(corpus, cents, id_col, vec_col, cell_col="cell")
         cents = (
             label_centroids(assigned, cell_col="cell", vec_col=vec_col)
             .select("cell", "centroid")
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return cents
 
@@ -731,7 +743,7 @@ def kmeans_train_exact(
         topk.withColumn("_r", F.row_number().over(w))
         .select((F.col("_r") - 1).cast("int").alias("cell"), "centroid")
     )
-    cents = seeds.localCheckpoint(storageLevel=_CKPT_LEVEL)
+    cents = seeds.localCheckpoint(storageLevel=CKPT_LEVEL)
     # EXACT-VECTOR CONTRACTION (r9, transparent): byte-identical copies
     # share every assignment (same fold → same (dist, cell) struct) and
     # contribute cnt-weighted decimal sums that EQUAL summing the
@@ -746,7 +758,7 @@ def kmeans_train_exact(
         .repartition(par, F.col("_e"))
         .groupBy("_e")
         .agg(F.count(F.lit(1)).cast("bigint").alias("_cnt"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     ex = reps.select("_e", "_cnt", F.posexplode("_e").alias("_dim", "_x"))
     for _ in range(iters):
@@ -801,7 +813,7 @@ def kmeans_train_exact(
             .select(
                 "cell", F.coalesce(F.col("_nc"), F.col("centroid")).alias("centroid")
             )
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return cents
 
@@ -1205,70 +1217,6 @@ def pq_topk(
     )
 
 
-def contracted_vector_pairs(
-    corpus: DataFrame,
-    pair_fn,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact-contraction for vector pair operators (the embedding twin
-    of ``dedup.contracted_pairs``): group EXACTLY-equal vectors (array
-    equality — no hashing, no tolerance), run ``pair_fn`` on one
-    representative per group, expand pairs back to member ids.
-
-    ``pair_fn(reps) -> (vec_a, vec_b, score)`` must be content-pure.
-    Within-group pairs carry score 1.0 — identical unit vectors dot to
-    1 ± ulps and every pair operator here rounds to 6 decimals, so this
-    matches the raw arithmetic; zero-norm vectors are skipped, matching
-    the raw path where a NaN score fails every threshold. k exact copies
-    otherwise cost k² in any all-pairs/bucketed comparison — on the
-    10x-replicated sf1 corpus this is the difference between 200k- and
-    20k-row matmuls (~100x the dot products).
-    """
-    groups = corpus.groupBy(vec_col).agg(F.min(id_col).alias("_rep"))
-    members = (
-        corpus.join(groups, vec_col)
-        .select(F.col(id_col), "_rep")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
-    )
-    reps = corpus.join(
-        members.where(F.col(id_col) == F.col("_rep")).select(id_col),
-        id_col,
-        "left_semi",
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)  # reps feeds pair_fn AND the norm filter
-    rep_pairs = pair_fn(reps)
-    m_a = members.select(F.col("_rep").alias("vec_a"), F.col(id_col).alias("_da"))
-    m_b = members.select(F.col("_rep").alias("vec_b"), F.col(id_col).alias("_db"))
-    cross = (
-        rep_pairs.join(m_a, "vec_a")
-        .join(m_b, "vec_b")
-        .select(
-            F.least("_da", "_db").alias("vec_a"),
-            F.greatest("_da", "_db").alias("vec_b"),
-            "score",
-        )
-    )
-    sq_norm = F.aggregate(
-        vec_col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-    )
-    nonzero = reps.select(F.col(id_col).alias("_rep")).join(
-        reps.where(sq_norm > 0).select(F.col(id_col).alias("_rep")), "_rep", "left_semi"
-    )
-    wa = members.select("_rep", F.col(id_col).alias("_da"))
-    wb = members.select("_rep", F.col(id_col).alias("_db"))
-    within = (
-        wa.join(wb, "_rep")
-        .where(F.col("_da") < F.col("_db"))
-        .join(nonzero, "_rep", "left_semi")
-        .select(
-            F.col("_da").alias("vec_a"),
-            F.col("_db").alias("vec_b"),
-            F.lit(1.0).alias("score"),
-        )
-    )
-    return cross.unionByName(within)
-
-
 def semantic_dedup(
     corpus: DataFrame,
     k: int | None = 10,
@@ -1431,7 +1379,7 @@ def semantic_dedup_exact(
             F.min(F.col(id_col)).alias("rep_id"),
             F.collect_list(F.col(id_col)).alias("_ids"),
         )
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     reps = members.select("cell", "rep_id", "_e")
     # SALTED pair scan (guide §2.5): the join key has only k distinct
@@ -1470,7 +1418,7 @@ def semantic_dedup_exact(
         .select("cell", "_a", "_b")
         # bounded (threshold-clearing rep pairs only); the eager cut also
         # makes the cogroup sides distinct relations (the X96 idiom)
-        .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
     )
     mem_rows = members.select(
         "cell", "rep_id", F.explode("_ids").alias(id_col)
@@ -1562,7 +1510,7 @@ def ivfpq_build(
                 _as_double(F.col(vec_col)), F.col("centroid"), lambda x, c: x - c
             ).alias("residual"),
         )
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)  # feeds PQ training AND encoding
+        .localCheckpoint(storageLevel=CKPT_LEVEL)  # feeds PQ training AND encoding
     )
     books = pq_train(resid, m=m, codes=codes, iters=iters, id_col=id_col, vec_col="residual")
     coded = pq_encode(resid, books, m=m, id_col=id_col, vec_col="residual").join(
@@ -1957,11 +1905,11 @@ def kcenter_select(
         )
         .where(F.col(id_col) != F.col("_cid"))
         .drop("_cid")
-        .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
     )
     sel = first.select(
         F.lit(1).alias("step"), F.col("_cid").alias(id_col), F.lit(0.0).alias("sel_dist")
-    ).localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
     for i in range(2, k + 1):
         pick = cur.agg(
             F.max(F.struct(F.col("mind"), (-F.col(id_col)).alias("_nid"))).alias("m")
@@ -1970,7 +1918,7 @@ def kcenter_select(
             (-F.col("m._nid")).alias(id_col),
             F.col("m.mind").alias("sel_dist"),
         )
-        sel = sel.unionAll(pick).localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+        sel = sel.unionAll(pick).localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
         if i == k:
             break
         new_center = cur.join(
@@ -1989,7 +1937,7 @@ def kcenter_select(
                     ),
                 ).alias("mind"),
             )
-            .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
         )
     return sel
 
@@ -2103,8 +2051,8 @@ def pca_cov_exact(corpus: DataFrame, vec_col: str = "embedding", dims: int = 64)
     """
     corpus = corpus.where(F.col(vec_col).isNotNull())
     xd = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    # EXACT-VECTOR CONTRACTION (r9, the contracted_vector_pairs recipe
-    # applied to moments): k byte-identical copies of a vector
+    # EXACT-VECTOR CONTRACTION (the dedup.exact_groups idea applied to
+    # moments): k byte-identical copies of a vector
     # contribute k·x and k·xᵢxⱼ, and decimal arithmetic makes the
     # weighted sum EXACTLY equal to summing the copies (cnt·cast(v) is
     # exact in decimal — unlike float weighting), so the d²-per-row

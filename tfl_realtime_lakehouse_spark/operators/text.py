@@ -528,6 +528,29 @@ def mg_heavy_hitters(
     )
 
 
+def _tfidf_weights(
+    df: DataFrame, max_doc_freq: int, text_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(id, term, w) TF-IDF weights over the kept vocabulary (document
+    frequency ≤ ``max_doc_freq``) and the per-doc squared norms
+    (id, n2), summed as exact decimals."""
+    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
+    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
+    n_docs = df.count()
+    kept = tf.join(
+        F.broadcast(dfreq.where(F.col("df_t") <= max_doc_freq)), "term"
+    )
+    w = F.col("tf").cast("double") * F.log(
+        F.lit(float(n_docs)) / F.col("df_t").cast("double")
+    )
+    weights = kept.select(id_col, "term", w.alias("w"))
+    norms = weights.groupBy(id_col).agg(
+        F.sum((F.col("w") * F.col("w")).cast("decimal(27,12)")).alias("n2")
+    )
+    return weights, norms
+
+
 def tfidf_cosine_pairs_reps(
     df: DataFrame,
     threshold: float = 0.3,
@@ -554,20 +577,7 @@ def tfidf_cosine_pairs_reps(
     Returns (doc_a, doc_b, cosine) with doc_a < doc_b, cosine ≥
     threshold.
     """
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-    n_docs = df.count()
-    kept = tf.join(
-        F.broadcast(dfreq.where(F.col("df_t") <= max_doc_freq)), "term"
-    )
-    w = F.col("tf").cast("double") * F.log(
-        F.lit(float(n_docs)) / F.col("df_t").cast("double")
-    )
-    weights = kept.select(id_col, "term", w.alias("w"))
-    norms = weights.groupBy(id_col).agg(
-        F.sum((F.col("w") * F.col("w")).cast("decimal(27,12)")).alias("n2")
-    )
+    weights, norms = _tfidf_weights(df, max_doc_freq, text_col, id_col)
     a = weights.select(
         F.col(id_col).alias("doc_a"), "term", F.col("w").alias("wa")
     )
@@ -602,44 +612,31 @@ def tfidf_cosine_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Contraction-wrapped full-corpus TF-IDF cosine pairs (standing
-    rule). Exact copies pair through the diagonal with the SAME
-    expression tree the raw op gives a self-pair — n2/(√n2·√n2), which
-    is 1.0 only up to IEEE sqrt rounding, so the diagonal recomputes it
-    rather than hard-coding 1.0."""
-    from tfl_realtime_lakehouse_spark.operators.dedup import (
-        contracted_pairs_generic,
-    )
+    """Full-corpus TF-IDF cosine pairs: :func:`tfidf_cosine_pairs_reps`
+    under exact contraction (``dedup.contracted_pairs``). Exact copies
+    pair through the diagonal with the SAME expression tree the raw op
+    gives a self-pair — n2/(√n2·√n2), which is 1.0 only up to IEEE sqrt
+    rounding, so the diagonal recomputes it rather than hard-coding
+    1.0."""
+    from tfl_realtime_lakehouse_spark.operators.dedup import contracted_pairs
+    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
 
-    def pair_fn(reps: DataFrame) -> DataFrame:
-        return tfidf_cosine_pairs_reps(
+    def diag_fn(reps: DataFrame) -> DataFrame:
+        n2 = F.col("n2").cast("double")
+        cos = n2 / (F.sqrt(n2) * F.sqrt(n2))
+        return (
+            _tfidf_weights(reps, max_doc_freq, text_col, id_col)[1]
+            .select(F.col(id_col), F.round(cos, 6).alias("cosine"))
+            .where(F.col("cosine") >= threshold)
+        )
+
+    return contracted_pairs(
+        fan_out(df),
+        F.md5(F.col(text_col)),
+        lambda reps: tfidf_cosine_pairs_reps(
             reps, threshold=threshold, max_doc_freq=max_doc_freq,
             text_col=text_col, id_col=id_col,
-        )
-
-    def within_fn(reps: DataFrame) -> DataFrame:
-        toks = reps.select(F.col(id_col), F.explode(tokens(text_col)).alias("term"))
-        tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-        dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-        n_docs = reps.count()
-        kept = tf.join(
-            F.broadcast(dfreq.where(F.col("df_t") <= max_doc_freq)), "term"
-        )
-        w = F.col("tf").cast("double") * F.log(
-            F.lit(float(n_docs)) / F.col("df_t").cast("double")
-        )
-        n2 = (
-            kept.select(F.col(id_col), w.alias("w"))
-            .groupBy(id_col)
-            .agg(F.sum((F.col("w") * F.col("w")).cast("decimal(27,12)")).alias("n2"))
-        )
-        cos = F.col("n2").cast("double") / (
-            F.sqrt(F.col("n2").cast("double")) * F.sqrt(F.col("n2").cast("double"))
-        )
-        return n2.select(
-            F.col(id_col), F.round(cos, 6).alias("cosine")
-        ).where(F.col("cosine") >= threshold)
-
-    return contracted_pairs_generic(
-        df, pair_fn, within_fn, text_col=text_col, id_col=id_col
+        ),
+        diag_fn,
+        id_col,
     )

@@ -14,12 +14,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
-
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 from tfl_realtime_lakehouse_spark.queries.registry import load_views, register, table
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 DEC = "decimal(18,2)"
 
@@ -787,7 +784,7 @@ def fuzzy_name_pairs_plan(
     # (length filter in the join), thresholded levenshtein (banded DP,
     # -1 past k) bails early, and same-name pairs are d=0 by definition.
     pt = table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size", "p_name")
-    uniq = pt.select("p_brand", "p_size", "p_name").distinct().localCheckpoint(storageLevel=_CKPT_LEVEL)
+    uniq = pt.select("p_brand", "p_size", "p_name").distinct().localCheckpoint(storageLevel=CKPT_LEVEL)
     a = uniq.alias("a")
     b = uniq.alias("b")
     d = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"), 5)

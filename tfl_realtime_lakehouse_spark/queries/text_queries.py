@@ -6,14 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
-
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 from tfl_realtime_lakehouse_spark.operators import dedup as D
 from tfl_realtime_lakehouse_spark.operators import text as X
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL, fan_out
 
 
 @register(
@@ -294,7 +291,13 @@ def _minhash_oracle_sql(num_hashes: int = 16, bands: int = 4) -> str:
     "(40 s → 5 s at sf1).",
 )
 def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
+    return _minhash_verified_pairs(table(spark, sf_dir, "documents"))
+
+
+def _minhash_verified_pairs(docs: DataFrame) -> DataFrame:
+    """md5-family MinHash(16) + LSH(4 bands) candidates verified at
+    exact Jaccard ≥ 0.2, under exact contraction with the shingle
+    diagonal (identical docs collide on every band)."""
 
     def _pairs(reps):
         cands = D.minhash_lsh_candidates(
@@ -302,7 +305,13 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return D.verify_pairs_jaccard(reps, cands, n=3, threshold=0.2)
 
-    return D.contracted_pairs(docs, _pairs, n=3)
+    return D.contracted_pairs(
+        fan_out(docs),
+        F.md5("text"),
+        _pairs,
+        lambda reps: D.shingle_diagonal(reps, "text", "doc_id", 3, "jaccard"),
+        "doc_id",
+    )
 
 
 _SIMHASH_ORACLE = """
@@ -1277,8 +1286,6 @@ def text_c4_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").where(F.length("text") > 0)
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
-
     chars = fan_out(docs).select(
         "doc_id",
         F.length("text").alias("n_chars"),
@@ -1900,14 +1907,7 @@ def text_unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     exact = D.ngram_jaccard_pairs(docs, n=3, threshold=0.2).select("doc_a", "doc_b")
-
-    def _pairs(reps):
-        cands = D.minhash_lsh_candidates(
-            reps, n=3, num_hashes=16, bands=4, hash_family="md5"
-        )
-        return D.verify_pairs_jaccard(reps, cands, n=3, threshold=0.2)
-
-    approx = D.contracted_pairs(docs, _pairs, n=3).select("doc_a", "doc_b")
+    approx = _minhash_verified_pairs(docs).select("doc_a", "doc_b")
     e = exact.withColumn("_e", F.lit(1))
     a = approx.withColumn("_a", F.lit(1))
     both = e.join(a, ["doc_a", "doc_b"], "full_outer")
@@ -2654,8 +2654,6 @@ def scalar_url_parse_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     "algebra. Exact ints both engines.",
 )
 def scalar_luhn_card_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
-
     orders = table(spark, sf_dir, "orders")
     # The 16-digit HOF checksum is compute-dense and map-only, so it
     # ran whole-query serial on the single-split scan (sf1 re-eval,
@@ -3284,7 +3282,7 @@ def text_quality_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("x1"),
         (F.col("n_chars").cast("double") / F.lit(1000.0)).alias("x2"),
         (F.col("n_chars") >= 200).cast("int").cast("double").alias("y"),
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     nd = float(
         feats.agg(F.sum("m").alias("s")).collect()[0].s
     )
@@ -3510,7 +3508,7 @@ def text_decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "94.5 s -> distinct-text-bound on the 50x-duplicated sf5 corpus.",
 )
 def text_crossdoc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out, keyed_spread
+    from tfl_realtime_lakehouse_spark.sources.tables import keyed_spread
 
     docs = table(spark, sf_dir, "documents")
     # fan_out the scan once: `keyed` feeds the rep groupBy, the gram

@@ -7,12 +7,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
-
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 from tfl_realtime_lakehouse_spark.queries.registry import load_views, register, table
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 
 @register(
@@ -760,7 +757,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded distinct-pair relation reused 2-3× downstream
         # (cap filter + join + seeds): one materialization, not per-use
         # recomputes of the corpus scan + distinct.
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     # hot-key guard: cap the per-part pair expansion (oracle mirrors)
     ok = ps.groupBy("p").agg(F.count(F.lit(1)).alias("ns")).where("ns <= 64").select("p")
@@ -891,7 +888,7 @@ def _lpa_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded distinct-pair relation reused 2-3× downstream
         # (cap filter + join + seeds): one materialization, not per-use
         # recomputes of the corpus scan + distinct.
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     keep_part = (
         F.conv(
@@ -935,7 +932,7 @@ def _contracted_basket_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         baskets.groupBy("parts")
         .agg(F.count(F.lit(1)).alias("m"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
 
 
@@ -1076,7 +1073,7 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded distinct-pair relation reused 2-3× downstream
         # (cap filter + join + seeds): one materialization, not per-use
         # recomputes of the corpus scan + distinct.
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     keep_part = (
         F.conv(
@@ -1299,7 +1296,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded distinct-pair relation reused 2-3× downstream
         # (cap filter + join + seeds): one materialization, not per-use
         # recomputes of the corpus scan + distinct.
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     keep_part = (
         F.conv(
@@ -1334,7 +1331,7 @@ def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (
         e0.unionAll(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     deg = adj.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     centers = deg.where("d <= 96").select(F.col("node").alias("b"))
@@ -1760,7 +1757,7 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     keep_part = (
         F.conv(

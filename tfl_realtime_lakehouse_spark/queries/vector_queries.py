@@ -6,14 +6,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark import StorageLevel
 
-# Serialized+spillable storage for lineage-cut blocks (see operators/graph.py)
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
-
+from tfl_realtime_lakehouse_spark.operators import dedup as D
 from tfl_realtime_lakehouse_spark.operators import multimodal as M
 from tfl_realtime_lakehouse_spark.operators import similarity as S
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 _COSINE_DOUBLE = """
     LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE))
@@ -66,8 +64,13 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact contraction on ARRAY-equal vectors: the matmul tier sees one
     # representative per identical vector; copies expand back through
     # joins (k copies otherwise cost k^2 dot products).
-    return S.contracted_vector_pairs(
-        emb, lambda reps: S.neardup_pairs_numpy(reps, threshold=0.4)
+    return D.contracted_pairs(
+        emb,
+        F.col("embedding"),
+        lambda reps: S.neardup_pairs_numpy(reps, threshold=0.4),
+        S.copy_pair_scores,
+        "vec_id",
+        ("vec_a", "vec_b"),
     )
 
 
@@ -92,14 +95,8 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "AQE can broadcast.",
 )
 def embedding_neardup_docs_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = table(spark, sf_dir, "embeddings")
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    # exact-contraction before the block plan: k byte-identical copies
-    # of a vector otherwise cost k^2 dot products (sf1->sf5 sweep
-    # measured alpha=2.82 / 206 s uncontracted on the 50x corpus)
-    pairs = S.contracted_vector_pairs(
-        emb, lambda reps: S.blocked_neardup_pairs(reps, threshold=0.4, n_blocks=8)
-    )
+    pairs = embedding_neardup_blocked(spark, sf_dir)
     return (
         pairs.join(
             docs.select(
@@ -144,8 +141,16 @@ def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     # exact-contraction first (see embedding_neardup_pairs): the block
     # plan runs on distinct vectors, copies expand back through joins
-    return S.contracted_vector_pairs(
-        emb, lambda reps: S.blocked_neardup_pairs(reps, threshold=0.4, n_blocks=8)
+    # (k byte-identical copies otherwise cost k^2 dot products; the
+    # sf1->sf5 sweep measured alpha=2.82 / 206 s uncontracted on the
+    # 50x corpus)
+    return D.contracted_pairs(
+        emb,
+        F.col("embedding"),
+        lambda reps: S.blocked_neardup_pairs(reps, threshold=0.4, n_blocks=8),
+        S.copy_pair_scores,
+        "vec_id",
+        ("vec_a", "vec_b"),
     )
 
 
@@ -415,7 +420,7 @@ def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the code table: pq_topk's scoring plan would otherwise
     # re-run the whole encode (explode + argmin + reassemble) inside its
     # own lineage. At scale this is the persisted IVF-PQ index anyway.
-    codes = S.pq_encode(emb, books, m=8).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    codes = S.pq_encode(emb, books, m=8).localCheckpoint(storageLevel=CKPT_LEVEL)
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -724,21 +729,21 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(per-chunk equi-joins, never n^2).",
 )
 def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.operators import dedup as D
-
     docs = table(spark, sf_dir, "documents")
     sigs = M.ahash64(M.synth_gradient_assets(docs))
     # signature-level exact-contraction: byte-identical assets hash to
     # the same 64-bit sig and otherwise cost k^2 in every chunk bucket
-    # (sf1->sf5 sweep: alpha=1.58 / 129 s uncontracted on the 50x corpus)
-    pairs = D.contracted_signature_pairs(
+    # (sf1->sf5 sweep: alpha=1.58 / 129 s uncontracted on the 50x corpus);
+    # copies share every chunk, so the diagonal is Hamming 0
+    pairs = D.contracted_pairs(
         sigs,
+        F.col("phash"),
         lambda reps: D.hamming_near_pairs(
             reps, sig_col="phash", id_col="asset_id", max_hamming=10,
             blocks=4, total_bits=64,
         ),
-        id_col="asset_id",
-        sig_col="phash",
+        lambda reps: reps.select("asset_id", F.lit(0).cast("int").alias("hamming")),
+        "asset_id",
     )
     return pairs.select(
         F.col("doc_a").alias("asset_a"),
@@ -1054,7 +1059,7 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (
         S.cosine_topk(emb, queries, k=20)
         .select("query_id", "vec_id", F.col("score").alias("rel"))
-        .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)
     )
     e_x = emb.select(F.col("vec_id").alias("_xid"), F.col("embedding").alias("_xe"))
     e_y = emb.select(F.col("vec_id").alias("_yid"), F.col("embedding").alias("_ye"))
@@ -1071,7 +1076,7 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "b",
             F.round(S.cosine(F.col("_xe"), F.col("_ye")), 6).alias("sim"),
         )
-        .localCheckpoint(eager=True, storageLevel=_CKPT_LEVEL)  # bounded N²·|queries| pairs; cuts the
+        .localCheckpoint(eager=True, storageLevel=CKPT_LEVEL)  # bounded N²·|queries| pairs; cuts the
         # shared cand lineage so the cogroup sides are distinct relations
     )
     sel = S.mmr_select(cand, ps, k=8, lam=0.7)

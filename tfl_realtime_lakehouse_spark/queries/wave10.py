@@ -34,13 +34,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
-
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 # ---------------------------------------------------------------------------
 # X215 — IVF recall@k with SQL-replayable k-means training
@@ -253,7 +251,7 @@ def embedding_ann_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
         embd.join(D, "e")
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "d")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)  # exact + cand legs
+        .localCheckpoint(storageLevel=CKPT_LEVEL)  # exact + cand legs
     )
     wk = Window.partitionBy("query_id").orderBy("d", "vec_id")
     cand = probe.join(mem, "cell").select("query_id", "vec_id")
@@ -413,7 +411,7 @@ def embedding_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the first shape paid); copies pick their ADC up through one
     # vector-keyed join, and slicing the double array equals casting
     # the float slice, so every distance is bit-identical.
-    dv = embd.select("e").distinct().localCheckpoint(storageLevel=_CKPT_LEVEL)
+    dv = embd.select("e").distinct().localCheckpoint(storageLevel=CKPT_LEVEL)
 
     def build_part(s: int) -> DataFrame:
         sub = emb.select(

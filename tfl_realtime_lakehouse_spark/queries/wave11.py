@@ -35,7 +35,6 @@ float/ADC sums pin to exact decimals; counts stay integer end to end.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -47,8 +46,7 @@ from tfl_realtime_lakehouse_spark.queries.wave10 import (
     _kmeans_ctes,
     _recall_fold,
 )
-
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 # ---------------------------------------------------------------------------
 # X224 — IVF-PQ (coarse cells + residual PQ) recall@k, fully SQL-replayable
@@ -193,7 +191,7 @@ def embedding_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
     cc = cells.select(F.col("cell").alias("_cc"), F.col("centroid").alias("_cv"))
 
     # distinct-vector coarse assignment + residual (content-pure)
-    dv = embd.select("e").distinct().localCheckpoint(storageLevel=_CKPT_LEVEL)
+    dv = embd.select("e").distinct().localCheckpoint(storageLevel=CKPT_LEVEL)
     dvc = (
         dv.join(F.broadcast(cc))
         .select(
@@ -219,7 +217,7 @@ def embedding_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
             "cell",
             F.zip_with(F.col("e"), F.col("_rv"), lambda x, c: x - c).alias("r"),
         )
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     # per-id residual relation: PQ training seeds by id, so copies ride
     # along (the trainer contracts them again internally). Checkpointed
@@ -228,7 +226,7 @@ def embedding_ann_ivfpq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFra
     resid = (
         embd.join(dvr.select("e", "r"), "e")
         .select("vec_id", "r")
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
 
     q = embd.where(F.col("vec_id") < nq).select(

@@ -11,14 +11,12 @@ at 6 dp, counts stay integer end to end.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
 from tfl_realtime_lakehouse_spark.queries.tpch_extra import _lpa_oracle
-
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 
 @register(
@@ -95,7 +93,7 @@ def docs_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = (
         d.groupBy("h")
         .agg(F.sort_array(F.collect_set("source")).alias("ss"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     pairs = sets.select(
         F.explode(
@@ -116,7 +114,7 @@ def docs_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         sets.select(F.explode("ss").alias("source"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)  # |sources| rows, 2 legs
+        .localCheckpoint(storageLevel=CKPT_LEVEL)  # |sources| rows, 2 legs
     )
     ta = tot.select(F.col("source").alias("sa"), F.col("n").alias("n_a"))
     tb = tot.select(F.col("source").alias("sb"), F.col("n").alias("n_b"))
@@ -333,7 +331,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 8
         == 0
     )
-    e0 = eraw.where(keep_edge).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    e0 = eraw.where(keep_edge).localCheckpoint(storageLevel=CKPT_LEVEL)
     labels = label_propagation(e0, src="a", dst="b", iters=3)
     mm = e0.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     deg = (

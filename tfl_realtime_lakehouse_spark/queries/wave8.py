@@ -14,13 +14,11 @@ top-k ranks order on (6-dp score, id) total orders.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
-
-_CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK
+from tfl_realtime_lakehouse_spark.sources.tables import CKPT_LEVEL
 
 
 # ---------------------------------------------------------------------------
@@ -268,7 +266,7 @@ def _minhash_est_jac_pairs(
         F.min("text").alias("text"),
     )
     reps = classes.select("doc_id", "text").localCheckpoint(
-        storageLevel=_CKPT_LEVEL
+        storageLevel=CKPT_LEVEL
     )
     sig = D.minhash_signatures(
         reps, n=3, num_hashes=num_hashes, hash_family="md5"
@@ -466,7 +464,7 @@ def eval_pairwise_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n",
             )
         )
-        .localCheckpoint(storageLevel=_CKPT_LEVEL)
+        .localCheckpoint(storageLevel=CKPT_LEVEL)
     )
     # W_i and the duel totals: ww values are exact binary multiples of
     # 0.5, so the double SUM is exact and order-free
@@ -474,7 +472,7 @@ def eval_pairwise_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ww").alias("w_tot"),
         F.sum("n").cast("bigint").alias("n_duels"),
         F.sum(F.col("ww") - F.lit(0.5)).cast("bigint").alias("wins"),
-    ).localCheckpoint(storageLevel=_CKPT_LEVEL)
+    ).localCheckpoint(storageLevel=CKPT_LEVEL)
     g = wtot.select("src", F.lit(1.0).alias("g"))
     # Every per-round relation here is MODEL-sized (γ and W_i are one
     # row per source, bounded by the source enum at any corpus scale),
@@ -507,7 +505,7 @@ def eval_pairwise_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         g = (
             upd.crossJoin(F.broadcast(sg))
             .select("src", (F.col("g") / F.col("sg")).alias("g"))
-            .localCheckpoint(storageLevel=_CKPT_LEVEL)
+            .localCheckpoint(storageLevel=CKPT_LEVEL)
         )
     return wtot.join(F.broadcast(g), "src").select(
         F.col("src").alias("source"),

@@ -13,10 +13,18 @@ from __future__ import annotations
 import glob
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from tfl_realtime_lakehouse_spark.schemas import ARRIVALS_BRONZE_SCHEMA
+
+# Storage level of every lineage-cut block (localCheckpoint): SERIALIZED
+# with disk spill. The default deserialized on-heap level holds ~10x the
+# on-wire size, which is what OOMed an sf5 sweep's ~30M-row edge
+# checkpoints on an 8 GiB local JVM. Storage level changes only the
+# cached representation, never the values.
+CKPT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in PySpark
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -81,13 +81,11 @@ _HEADWAY_OUTPUT = T.StructType(
 _HEADWAY_STATE = T.StructType([T.StructField("last_us", T.LongType())])
 
 
-def _headway_state_fn(
-    key: tuple,
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    line_id, stop_id = key
-    last_us = state.get[0] if state.exists else None
+def _headway_gaps(
+    last_us: int | None, pdfs: Iterator[pd.DataFrame]
+) -> tuple[list, list, int | None]:
+    """One key's arrivals → (event timestamps, headway gaps in seconds,
+    new last-arrival state). The loop both state APIs share."""
     out_ts: list = []
     out_gap: list = []
     for pdf in pdfs:
@@ -103,6 +101,18 @@ def _headway_state_fn(
             out_ts.append(ts)
             out_gap.append(gap)
             last_us = max(us, last_us) if last_us is not None else us
+    return out_ts, out_gap, last_us
+
+
+def _headway_state_fn(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    line_id, stop_id = key
+    out_ts, out_gap, last_us = _headway_gaps(
+        state.get[0] if state.exists else None, pdfs
+    )
     if last_us is not None:
         state.update((last_us,))
     yield pd.DataFrame(
@@ -157,22 +167,9 @@ try:  # the API is new in Spark 4; keep the module importable elsewhere
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
             line_id, stop_id = key
-            last_us = self.last.get()[0] if self.last.exists() else None
-            out_ts, out_gap = [], []
-            for pdf in rows:
-                pdf = pdf.sort_values("event_ts")
-                for ts in pdf["event_ts"]:
-                    if pd.isna(ts):
-                        continue
-                    us = int(pd.Timestamp(ts).value // 1000)
-                    gap = (
-                        None
-                        if last_us is None or us < last_us
-                        else (us - last_us) / 1_000_000.0
-                    )
-                    out_ts.append(ts)
-                    out_gap.append(gap)
-                    last_us = us if last_us is None else max(us, last_us)
+            out_ts, out_gap, last_us = _headway_gaps(
+                self.last.get()[0] if self.last.exists() else None, rows
+            )
             if last_us is not None:
                 self.last.update((last_us,))
             yield pd.DataFrame(

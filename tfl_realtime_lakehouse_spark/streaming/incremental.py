@@ -29,7 +29,8 @@ Replay safety: foreachBatch delivery is at-least-once, so the silver
 append is keyed by ``batch_id`` — each micro-batch writes its own
 ``batch_id=N`` partition under dynamic partition overwrite, making a
 redelivered batch rewrite the same bytes instead of duplicating rows
-(the same mechanism as :mod:`~tfl_realtime_lakehouse_spark.streaming.sink`).
+(:func:`~tfl_realtime_lakehouse_spark.streaming.sink.write_batch_partition`,
+shared with the silver sink).
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from tfl_realtime_lakehouse_spark.plans.marts import fct_headways
 from tfl_realtime_lakehouse_spark.sources.lakehouse import merge_upsert
+from tfl_realtime_lakehouse_spark.streaming.sink import write_batch_partition
 
 
 def incremental_gold_writer(silver_dir: str, gold_dir: str):
@@ -54,23 +56,8 @@ def incremental_gold_writer(silver_dir: str, gold_dir: str):
                 return
             # foreachBatch is at-least-once: a replayed batch must not
             # duplicate silver rows (duplicates would surface as zero
-            # headways in the recomputed gold). Idempotence the same way
-            # sink.py gets it: each micro-batch owns its batch_id
-            # partition, and dynamic partition overwrite makes a replay
-            # rewrite that partition instead of appending to it.
-            prev = spark.conf.get(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    batch_df.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(silver_dir)
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            # headways in the recomputed gold).
+            write_batch_partition(batch_df, silver_dir, batch_id)
             touched = batch_df.select("line_id", "stop_id").distinct()
 
             silver = spark.read.parquet(silver_dir).drop("batch_id")
