@@ -3727,39 +3727,6 @@ def test_tar_member_bytes_rejects_oversized_name_and_payload():
         tar_member_bytes("big.bin", _Huge())
 
 
-def test_did_state_fn_skips_null_post_rows():
-    """r9 ADVICE: a purchase with NULL ts (is_post=None) used to fall
-    through `if is_post:` into the PRE period; the batch query drops
-    the post=NULL group entirely, so the twin must skip the row."""
-    from decimal import Decimal
-
-    import pandas as pd
-
-    from tfl_realtime_lakehouse_spark.streaming.did import _did_state_fn
-
-    class _FakeState:
-        exists = False
-
-        def __init__(self):
-            self.updated = None
-
-        def update(self, v):
-            self.updated = v
-
-    st = _FakeState()
-    pdf = pd.DataFrame(
-        {
-            "yr": [Decimal("5"), Decimal("7"), None, Decimal("11")],
-            "_post": [False, None, True, True],
-        }
-    )
-    (out,) = _did_state_fn((42, 1), iter([pdf]), st)
-    # 7 (null post) skipped; None yr skipped; 5 pre; 11 post
-    assert out["y_pre"].iloc[0] == "5"
-    assert out["y_post"].iloc[0] == "11"
-    assert st.updated == ("5", "11")
-
-
 def test_kmeans_train_exact_overflow_fails_loudly(spark):
     """r9 ADVICE: the decimal(38,12)→(25,12) downcast in the weighted
     centroid update silently NULLed past 1e13 with ANSI off; the

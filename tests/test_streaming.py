@@ -2086,16 +2086,18 @@ def test_streaming_source_scorecard_matches_batch_query(spark, tmp_path):
 
 def test_streaming_centroid_drift_matches_batch_query(spark, tmp_path):
     """Cross-batch centroid-drift maintenance (X201 twin): after both
-    micro-batches each label's drift row must equal the BATCH
-    embedding_centroid_drift query over the union — bit-for-bit
-    (decimal moments merge in Python; every float step is a JVM
-    post-projection tree-identical to the batch's). Planted: a null
-    embedding, a null coordinate, a label seen in one half only, and a
-    label whose second half arrives only in batch 2."""
+    micro-batches the readout over the maintained moments table (latest
+    row per (label, half, dim)) must equal the BATCH
+    embedding_centroid_drift query over the union — bit-for-bit (the
+    stream runs the batch moments aggregation; the readout is the batch
+    readout). Planted: a null embedding, a null coordinate, a label
+    seen in one half only, and a label whose second half arrives only
+    in batch 2."""
     import random
 
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.drift import (
+        drift_readout,
         streaming_centroid_drift,
     )
 
@@ -2126,9 +2128,19 @@ def test_streaming_centroid_drift_matches_batch_query(spark, tmp_path):
     )
     out = streaming_centroid_drift(stream)
     _run_stream(out, tmp_path, "drift_out", mode="update")
+    # maintained table: the latest emission per (label, half, dim) —
+    # the row count only grows, so the largest n is the final state
+    latest = {}
+    for r in spark.sql("select * from drift_out").collect():
+        key = (r["label"], r["half"], r["dim"])
+        if key not in latest or r["n"] >= latest[key]["n"]:
+            latest[key] = r
+    moments = spark.createDataFrame(
+        list(latest.values()), "label int, half long, dim int, mu double, n long"
+    )
     final = {
         r["label"]: (r["n0"], r["n1"], r["centroid_l2_shift"])
-        for r in spark.sql("select * from drift_out").collect()
+        for r in drift_readout(moments).collect()
     }
 
     union_dir = str(tmp_path / "drift-union")
@@ -2160,8 +2172,6 @@ def test_streaming_cuped_matches_batch_query(spark, tmp_path):
     a user whose events are all other types (x=0, y=0 row — the batch
     COALESCE), and a user whose covariate arrives in batch 1 but whose
     metric arrives only in batch 2 (the cross-batch leg)."""
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.cuped import (
         cuped_readout,
@@ -2207,16 +2217,16 @@ def test_streaming_cuped_matches_batch_query(spark, tmp_path):
     out = streaming_cuped_per_user(stream)
     _run_stream(out, tmp_path, "cuped_out", mode="update")
     # maintained table: the LATEST emission per user (update-mode memory
-    # sink appends; values are nonnegative here so the row with the
-    # largest exact (sx + sy) is the final state — order-independent)
+    # sink appends; values are nonnegative here so x, y and np only grow
+    # and the largest (x, y, np) is the final state — order-independent)
     latest = {}
     for r in spark.sql("select * from cuped_out").collect():
-        tot = (Decimal(r["sx"]) + Decimal(r["sy"]), r["np"])
+        tot = (r["x"], r["y"], r["np"])
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, sx string, sy string, np long",
+        "user_id long, variant int, x double, y double, np long",
     )
     got = {
         r["variant"]: (
@@ -2292,18 +2302,16 @@ def test_streaming_bootstrap_ci_matches_batch_query(spark, tmp_path):
     out = streaming_bootstrap_replicas(stream)
     _run_stream(out, tmp_path, "boot_out", mode="update")
     # latest emission per (variant, b): sums are nonnegative here, so
-    # the row with the largest (sw, swx-decimal) is the final state
-    from decimal import Decimal
-
+    # the row with the largest (sw, swx) is the final state
     latest = {}
     for r in spark.sql("select * from boot_out").collect():
         key = (r["variant"], r["b"])
-        rank = (r["sw"], Decimal(r["swx"]))
+        rank = (r["sw"], r["swx"])
         if key not in latest or rank >= latest[key][0]:
             latest[key] = (rank, r)
     reps = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "variant int, b int, sw long, swx string",
+        "variant int, b int, sw long, swx double",
     )
     cols = ["n_rows", "mean_value", "boot_se", "ci_lo", "ci_hi"]
     got = {
@@ -2417,8 +2425,6 @@ def test_streaming_uplift_by_decile_matches_batch_query(spark, tmp_path):
     on both sides)."""
     import datetime
     import hashlib
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.uplift import (
         streaming_uplift_per_user,
@@ -2470,12 +2476,12 @@ def test_streaming_uplift_by_decile_matches_batch_query(spark, tmp_path):
     _run_stream(out, tmp_path, "uplift_out", mode="update")
     latest = {}
     for r in spark.sql("select * from uplift_out").collect():
-        tot = (Decimal(r["sx"]) + Decimal(r["sy"]), r["np"])
+        tot = (r["x"], r["y"], r["np"])
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, sx string, sy string, np long",
+        "user_id long, variant int, x double, y double, np long",
     )
     cols = ("n0", "n1", "mean_y0", "mean_y1", "uplift")
     got = {
@@ -2509,12 +2515,12 @@ def test_streaming_did_matches_batch_query(spark, tmp_path):
     own downstream function. Planted: a user whose PRE purchase
     arrives in batch 1 and POST purchase only in batch 2 (the
     straddling leg), an all-other-type user (counts in n_arm, adds
-    0 to every cell), a null purchase value, and no arm-1 pre
-    purchases at all (empty-cell COALESCE)."""
+    0 to every cell), a null purchase value, no arm-1 pre purchases at
+    all (empty-cell COALESCE), and an arm-1 purchase with a NULL ts
+    (post is NULL: the batch drops that cell, so the twin must book it
+    in neither period — as "pre" it would move pre_trt off 0.0)."""
     import datetime
     import hashlib
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.did import (
         did_readout,
@@ -2545,6 +2551,7 @@ def test_streaming_did_matches_batch_query(spark, tmp_path):
     b2 = [ev(straddler, POST, "purchase", 99.75)]  # straddling metric
     b2 += [ev(a0[4], POST, "purchase", 3.125)]
     b2 += [ev(a1[2], POST, "purchase", 60.5), ev(a1[3], PRE, "click", 1.0)]
+    b2 += [ev(a1[0], None, "purchase", 1000.0)]  # NULL ts: no period
     src = str(tmp_path / "did-src")
     spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f=1")
     spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f=2")
@@ -2558,12 +2565,12 @@ def test_streaming_did_matches_batch_query(spark, tmp_path):
     _run_stream(out, tmp_path, "did_out", mode="update")
     latest = {}
     for r in spark.sql("select * from did_out").collect():
-        tot = Decimal(r["y_pre"]) + Decimal(r["y_post"])
+        tot = r["y_pre"] + r["y_post"]
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, y_pre string, y_post string",
+        "user_id long, variant int, y_pre decimal(37,12), y_post decimal(37,12)",
     )
     cols = ("n_ctl", "n_trt", "pre_ctl", "post_ctl", "pre_trt", "post_trt", "did")
     [g] = did_readout(per_user).collect()
@@ -2589,8 +2596,6 @@ def test_streaming_srm_matches_batch_query(spark, tmp_path):
     set must dedupe), tripping the flag on both sides."""
     import datetime
     import hashlib
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.srm import (
         srm_readout,
@@ -2627,12 +2632,12 @@ def test_streaming_srm_matches_batch_query(spark, tmp_path):
     _run_stream(out, tmp_path, "srm_out", mode="update")
     latest = {}
     for r in spark.sql("select * from srm_out").collect():
-        tot = (Decimal(r["sx"]) + Decimal(r["sy"]), r["np"])
+        tot = (r["x"], r["y"], r["np"])
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, sx string, sy string, np long",
+        "user_id long, variant int, x double, y double, np long",
     )
     cols = ("n_ctl", "n_trt", "trt_share", "chi2", "srm_flag")
     [g] = srm_readout(per_user).collect()
@@ -2658,8 +2663,6 @@ def test_streaming_lift_matches_batch_query(spark, tmp_path):
     (np=2, still one conversion), and purchase-free users in both
     arms."""
     import datetime
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.lift import (
         lift_readout,
@@ -2704,12 +2707,12 @@ def test_streaming_lift_matches_batch_query(spark, tmp_path):
     _run_stream(out, tmp_path, "lift_out", mode="update")
     latest = {}
     for r in spark.sql("select * from lift_out").collect():
-        tot = (Decimal(r["sx"]) + Decimal(r["sy"]), r["np"])
+        tot = (r["x"], r["y"], r["np"])
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, sx string, sy string, np long",
+        "user_id long, variant int, x double, y double, np long",
     )
     cols = (
         "n_a", "conv_a", "n_b", "conv_b", "rate_a", "rate_b", "lift", "z_score",
@@ -2823,23 +2826,21 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
     registered batch queries over the same union IN THE SAME TEST —
     lift, CUPED, uplift deciles, and SRM read the single maintained
     table (four dashboards, one state store); DiD rides its own
-    (y_pre, y_post) struct over the same source, as its state-migration
-    note documents (pre/post is not derivable from (sx, sy, np)).
+    (y_pre, y_post) aggregate over the same source (pre/post is not
+    derivable from (x, y, np)).
 
     The five per-readout pytests pin each twin individually; this test
-    pins the COMPOSITION: the same maintained rows, decoded once, feed
-    every readout, so a platform wiring all five dashboards off one
+    pins the COMPOSITION: the same maintained rows feed every readout,
+    so a platform wiring all five dashboards off one
     state store gets batch-identical answers everywhere after any
     prefix of micro-batches. Fixture plants every family's edge in one
-    corpus: a null-value purchase (converts, adds nothing to sy), an
+    corpus: a null-value purchase (converts, adds nothing to y), an
     other-type-only user (x=0, y=0, counts in SRM/n_arm), a covariate-
     in-batch-1 / metric-in-batch-2 straddler, a repeat purchaser
     (np=2, one conversion), and purchases on both sides of the DiD
     2024-01-16 cutoff including a pre-in-b1 / post-in-b2 straddle."""
     import datetime
     import hashlib
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.cuped import (
         cuped_readout,
@@ -2878,7 +2879,7 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
         b2.append(ev(i, POST, "click", 3.0 + 0.5 * (i % 9)))
         if i % 3 == 0:
             b2.append(ev(i, POST, "purchase", 55.0 + i))
-    b1.append(ev(300, PRE, "purchase", None))   # null value: converts, sy += 0
+    b1.append(ev(300, PRE, "purchase", None))   # null value: converts, y += 0
     b1.append(ev(301, PRE, "scroll", 99.0))     # other-type-only user
     b1.append(ev(302, PRE, "view", 42.5))       # covariate now ...
     b2.append(ev(302, POST, "purchase", 17.25))  # ... metric in batch 2
@@ -2905,12 +2906,12 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
     )
     latest = {}
     for r in spark.sql("select * from composed_out").collect():
-        tot = (Decimal(r["sx"]) + Decimal(r["sy"]), r["np"])
+        tot = (r["x"], r["y"], r["np"])
         if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
             latest[r["user_id"]] = (tot, r)
     per_user = spark.createDataFrame(
         [v[1] for v in latest.values()],
-        "user_id long, variant int, sx string, sy string, np long",
+        "user_id long, variant int, x double, y double, np long",
     )
 
     def rows(df, cols, key=None):
@@ -2944,19 +2945,19 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
     got_srm = rows(srm_readout(per_user), srm_cols)
     assert got_srm == rows(batch("events_srm_check"), srm_cols)
 
-    # readout 5: DiD — its own (y_pre, y_post) struct over the SAME
-    # source (pre/post is not a function of the CUPED struct)
+    # readout 5: DiD — its own (y_pre, y_post) aggregate over the SAME
+    # source (pre/post is not a function of the CUPED frame)
     _run_stream(
         streaming_did_per_user(stream()), tmp_path, "composed_did", mode="update"
     )
     dlatest = {}
     for r in spark.sql("select * from composed_did").collect():
-        tot = Decimal(r["y_pre"]) + Decimal(r["y_post"])
+        tot = r["y_pre"] + r["y_post"]
         if r["user_id"] not in dlatest or tot >= dlatest[r["user_id"]][0]:
             dlatest[r["user_id"]] = (tot, r)
     did_per_user = spark.createDataFrame(
         [v[1] for v in dlatest.values()],
-        "user_id long, variant int, y_pre string, y_post string",
+        "user_id long, variant int, y_pre decimal(37,12), y_post decimal(37,12)",
     )
     did_cols = ("n_ctl", "n_trt", "pre_ctl", "post_ctl", "pre_trt",
                 "post_trt", "did")
@@ -3014,8 +3015,6 @@ def test_soak_bootstrap_state_bound_20_batches(spark, tmp_path):
     equal the batch query over the union (state stayed correct, not
     just bounded)."""
     import datetime
-    from decimal import Decimal
-
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.bootstrap import (
         bootstrap_readout,
@@ -3051,12 +3050,12 @@ def test_soak_bootstrap_state_bound_20_batches(spark, tmp_path):
     latest = {}
     for r in spark.sql("select * from soakboot_out").collect():
         key = (r["variant"], r["b"])
-        rank = (r["sw"], Decimal(r["swx"]))
+        rank = (r["sw"], r["swx"])
         if key not in latest or rank >= latest[key][0]:
             latest[key] = (rank, r)
     assert len(latest) == 130
     reps = spark.createDataFrame(
-        [v[1] for v in latest.values()], "variant int, b int, sw long, swx string"
+        [v[1] for v in latest.values()], "variant int, b int, sw long, swx double"
     )
     union_dir = str(tmp_path / "soakboot-union")
     spark.createDataFrame(allrows, schema).write.parquet(
@@ -3351,7 +3350,7 @@ def test_streaming_neyman_matches_batch_query(spark, tmp_path):
             latest[r["source"]] = r
     per_source = spark.createDataFrame(
         list(latest.values()),
-        "source string, n_docs long, n_vals long, sx long, sx2 long",
+        "source string, n_docs long, sx long, sx2 long",
     )
 
     def frame(df):
@@ -3366,3 +3365,42 @@ def test_streaming_neyman_matches_batch_query(spark, tmp_path):
     w = {r["source"]: r for r in neyman_readout(per_source).collect()}
     assert w["s1"]["sigma_chars"] is None and w["s1"]["alloc_n"] is None
     assert w["s0"]["sigma_chars"] > 0 and w["s3"]["n_docs"] == 3
+
+
+
+_EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+_SUM_STATE_TWINS = {
+    "cuped": ("streaming_cuped_per_user", _EVENTS_SCHEMA),
+    "did": ("streaming_did_per_user", _EVENTS_SCHEMA),
+    "bootstrap": ("streaming_bootstrap_replicas", _EVENTS_SCHEMA),
+    "neyman": (
+        "streaming_neyman_stats",
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ),
+    "drift": (
+        "streaming_centroid_drift",
+        "vec_id long, embedding array<float>, label int",
+    ),
+}
+
+
+@pytest.mark.parametrize("module", sorted(_SUM_STATE_TWINS))
+def test_sum_state_twins_are_native_streaming_aggregates(spark, tmp_path, module):
+    """The five twins whose state is a per-key sum or count run as
+    native streaming aggregates: no Python state function in the
+    analyzed plan, one Aggregate that the engine incrementalizes."""
+    import importlib
+
+    fn, schema = _SUM_STATE_TWINS[module]
+    build = getattr(
+        importlib.import_module(f"tfl_realtime_lakehouse_spark.streaming.{module}"),
+        fn,
+    )
+    df = build(spark.readStream.schema(schema).parquet(str(tmp_path)))
+    assert df.isStreaming
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "Aggregate" in plan

@@ -160,21 +160,25 @@ def corpus_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB-safe by construction.",
 )
 def eval_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents")
-    s = docs.groupBy("source").agg(
+    return _neyman_readout(_neyman_stats(table(spark, sf_dir, "documents")))
+
+
+def _neyman_stats(docs: DataFrame) -> DataFrame:
+    """Per-source exact partials ``(source, n_docs, sx, sx2)``: row
+    count, char sum and char sum-of-squares. SUM skips NULL ``n_chars``
+    while the count keeps the row, so an all-NULL source has NULL sums.
+    The streaming twin (``streaming/neyman.py``) runs this same
+    aggregation in update mode."""
+    return docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("sx"),
         F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("sx2"),
     )
-    return _neyman_readout(s)
 
 
 def _neyman_readout(s: DataFrame) -> DataFrame:
-    """Allocation readout over the per-source exact partials
-    ``(source, n_docs, sx, sx2)`` — shared function object between the
-    batch query above and the streaming twin (``streaming/neyman.py``),
-    the experimentation-twin discipline: the stream maintains ONLY the
-    mergeable integer partials, and the float math is this one
+    """Allocation readout over ``_neyman_stats`` — shared between the
+    batch query above and the streaming twin, so the float math is one
     expression tree on both sides."""
     v = s.withColumn(
         "sigma",

@@ -712,11 +712,16 @@ def events_abtest_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cuped_per_user(ev: DataFrame) -> DataFrame:
-    """The per-user (variant, x, y) experiment frame shared by the
-    CUPED readout (X207) and the wave-9 uplift-by-decile query: exact
-    decimal conditional sums of the pre-exposure covariate x
-    (view+click value) and the metric y (purchase value), COALESCE'd to
-    0 so every user with any event participates."""
+    """The per-user (variant, x, y, np) experiment frame shared by the
+    CUPED readout (X207), the wave-9 uplift-by-decile query and the
+    streaming experiment twins (streaming/cuped.py runs this same
+    aggregation in update mode): exact decimal conditional sums of the
+    pre-exposure covariate x (view+click value) and the metric y
+    (purchase value), COALESCE'd to 0 so every user with any event
+    participates, and np, the purchase-event count (a NULL-value
+    purchase still converts the user for the lift readout). The batch
+    readouts never read np, so column pruning drops it from their
+    plans."""
     variant = _cuped_variant_col()
     dec = "decimal(27,12)"
     return ev.groupBy("user_id", variant.alias("variant")).agg(
@@ -741,6 +746,7 @@ def _cuped_per_user(ev: DataFrame) -> DataFrame:
         )
         .cast("double")
         .alias("y"),
+        F.count(F.when(F.col("event_type") == "purchase", 1)).alias("np"),
     )
 
 

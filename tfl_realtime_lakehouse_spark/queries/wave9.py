@@ -139,12 +139,8 @@ def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out the purchase rows BEFORE the (B+1)-way replica explode:
     # the md5 Poisson weights are compute-dense and otherwise run on
     # the scan's single split (measured: one 4.6 s single-task map at
-    # sf0.1). Batch-only — the streaming twin keeps its own plan.
-    reps = _boot_replica_rows(fan_out(_boot_purchases(ev))).groupBy("variant", "b").agg(
-        F.sum("w").cast("bigint").alias("sw"),
-        F.sum("wx").cast("double").alias("swx"),
-    )
-    return _bootstrap_readout(reps)
+    # sf0.1). Batch-only: the streaming twin sums the stream unspread.
+    return _bootstrap_readout(_boot_replica_sums(fan_out(_boot_purchases(ev))))
 
 
 def _boot_purchases(ev: DataFrame) -> DataFrame:
@@ -157,14 +153,14 @@ def _boot_purchases(ev: DataFrame) -> DataFrame:
     ).select("event_id", "value", _cuped_variant_col().alias("variant"))
 
 
-def _boot_replica_rows(pur: DataFrame) -> DataFrame:
-    """(variant, b, w, wx) replica rows: b = −1 is the BASE 'replica'
-    (w ≡ 1 — its sums are exactly the row count and the exact decimal
-    value sum, since 1.0·x = x in IEEE), b = 0…B−1 carry the
-    hash-seeded Poisson weights. One expression tree shared by the
-    batch query and the streaming twin; the per-(variant, b) sums it
-    feeds are mergeable, so the twin's state is bounded at
-    |arms|·(B+1) structs."""
+def _boot_replica_sums(pur: DataFrame) -> DataFrame:
+    """The (variant, b, sw, swx) replica table: b = −1 is the BASE
+    'replica' (w ≡ 1 — its sums are exactly the row count and the exact
+    decimal value sum, since 1.0·x = x in IEEE), b = 0…B−1 carry the
+    hash-seeded Poisson weights. One aggregation shared by the batch
+    query and the streaming twin (streaming/bootstrap.py runs it in
+    update mode); its sums are mergeable, so the twin's state is
+    bounded at |arms|·(B+1) rows."""
     dec = "decimal(27,12)"
     h = F.conv(
         F.substring(
@@ -196,6 +192,11 @@ def _boot_replica_rows(pur: DataFrame) -> DataFrame:
             "b",
             "w",
             (F.col("w").cast("double") * F.col("value")).cast(dec).alias("wx"),
+        )
+        .groupBy("variant", "b")
+        .agg(
+            F.sum("w").cast("bigint").alias("sw"),
+            F.sum("wx").cast("double").alias("swx"),
         )
     )
 

@@ -3,123 +3,44 @@ batch ``events_poisson_bootstrap_ci`` query (SURVEY §2.12 X209).
 
 The Poisson bootstrap is the rare resampling scheme that is ALSO a
 streaming-native one: every (row, replica) weight is a pure hash of the
-row key, so the per-(arm, replica) weighted sums are mergeable state —
+row key, so the per-(arm, replica) weighted sums are mergeable —
 ``sw`` (exact bigint weight total) and ``swx`` (exact decimal(27,12)
-weighted value sum) just add across micro-batches. Unlike the scorecard
-twin's distinct-hash leg there is NO data-sized component: state is
-bounded at |arms|·(B+1) tiny structs forever (B = 64 replicas plus the
-b = −1 base 'replica' whose w ≡ 1 sums are the row count and the exact
-value sum).
+weighted value sum) just add across micro-batches. There is NO
+data-sized component: state is bounded at |arms|·(B+1) rows forever
+(B = 64 replicas plus the b = −1 base 'replica' whose w ≡ 1 sums are
+the row count and the exact value sum).
 
 Split along the CUPED-twin line (streaming/cuped.py):
 
-- ``streaming_bootstrap_replicas``: (variant, b)-keyed
-  ``applyInPandasWithState`` maintenance of the replica sums. All
-  per-row features — the purchase filter, the md5 arm, the ×(B+1)
-  replica explosion, the hash→threshold Poisson weight, the
-  decimal(27,12) w·value pin — are the batch query's own
-  ``_boot_purchases`` / ``_boot_replica_rows`` expression trees,
-  applied JVM-side before the stateful operator; Python only adds an
-  int and Decimals (the kmv.py discipline, with the exact-int sum
-  idiom from the r7 advice: never trust a pandas nullable-int sum).
-- ``bootstrap_readout``: a STATELESS readout over the maintained
-  replica table — literally the batch query's own downstream function
-  (``queries.wave9._bootstrap_readout``), applied to rows decoded with
-  the same decimal(37,12)→double cast the batch aggregate performs.
-  After ANY prefix of micro-batches the maintained table holds exactly
-  the batch per-replica frame for the union (decimal/int addition is
-  exact and order-free), so the readout is bit-for-bit the batch
-  answer — the experimentation dashboard's CI tightens live as
-  purchases stream in.
+- ``streaming_bootstrap_replicas``: the batch query's own
+  ``_boot_purchases`` filter and ``_boot_replica_sums`` aggregation
+  (``queries.wave9``) run as a native update-mode streaming aggregate.
+  The batch query spreads the purchases with ``fan_out`` first; the
+  stream does not.
+- ``bootstrap_readout``: the batch query's downstream function
+  (``queries.wave9._bootstrap_readout``) applied to the maintained
+  replica table (latest row per (variant, b)).
+
+After ANY prefix of micro-batches the maintained table holds exactly
+the batch replica table for the union (decimal/int addition is exact
+and order-free), so the readout is bit-for-bit the batch answer — the
+experimentation dashboard's CI tightens live as purchases stream in.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from decimal import Decimal
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_RAW = T.StructType(
-    [
-        T.StructField("variant", T.IntegerType()),
-        T.StructField("b", T.IntegerType()),
-        T.StructField("sw", T.LongType()),
-        T.StructField("swx", T.StringType()),  # exact Decimal, stringified
-    ]
+from tfl_realtime_lakehouse_spark.queries.wave9 import (
+    _boot_purchases,
+    _boot_replica_sums,
+    _bootstrap_readout,
 )
 
-_STATE = T.StructType(
-    [
-        T.StructField("sw", T.LongType()),
-        T.StructField("swx", T.StringType()),
-    ]
-)
-
-
-def _boot_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    variant, b = key
-    if state.exists:
-        sw, swx_str = state.get
-        swx = Decimal(swx_str)
-    else:
-        sw, swx = 0, Decimal(0)
-    for pdf in pdfs:
-        # exact integer sum (r7 advice: pandas materializes nullable
-        # ints as float64, whose sum is IEEE — sum python ints instead)
-        sw += sum(int(v) for v in pdf["w"])
-        swx += sum((v for v in pdf["wx"] if v is not None), Decimal(0))
-    state.update((sw, str(swx)))
-    yield pd.DataFrame(
-        {
-            "variant": [variant],
-            "b": [b],
-            "sw": [sw],
-            "swx": [str(swx)],
-        }
-    )
+bootstrap_readout = _bootstrap_readout
 
 
 def streaming_bootstrap_replicas(events: DataFrame) -> DataFrame:
-    """(variant, b)-keyed maintenance of the bootstrap replica sums:
-    one (variant, b, sw, swx) row per touched replica per micro-batch,
-    exact over every purchase event seen so far."""
-    from tfl_realtime_lakehouse_spark.queries.wave9 import (
-        _boot_purchases,
-        _boot_replica_rows,
-    )
-
-    rows = _boot_replica_rows(_boot_purchases(events))
-    return rows.groupBy("variant", "b").applyInPandasWithState(
-        _boot_state_fn,
-        outputStructType=_RAW,
-        stateStructType=_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def bootstrap_readout(replica_rows: DataFrame) -> DataFrame:
-    """The batch CI readout over the maintained replica table (latest
-    row per (variant, b)): decodes the exact decimal strings with the
-    batch aggregate's own decimal→double cast, then applies
-    ``queries.wave9._bootstrap_readout`` — the SAME function object the
-    registered batch query calls."""
-    from tfl_realtime_lakehouse_spark.queries.wave9 import _bootstrap_readout
-
-    # batch: SUM(decimal(27,12)) is decimal(37,12) before the double
-    # cast — decode through the same width
-    reps = replica_rows.select(
-        "variant",
-        "b",
-        F.col("sw").cast("bigint").alias("sw"),
-        F.col("swx").cast("decimal(37,12)").cast("double").alias("swx"),
-    )
-    return _bootstrap_readout(reps)
+    """(variant, b, sw, swx) replica sums over every purchase event
+    seen so far, one row per touched replica per micro-batch."""
+    return _boot_replica_sums(_boot_purchases(events))

@@ -3,168 +3,39 @@
 
 CUPED's readout mixes three scopes — per-user covariate/metric sums,
 GLOBAL moments (θ = cov/var over every user), and per-arm means — so
-unlike the scorecard/drift twins a single stateful emission cannot be
-the final answer: a micro-batch only touches the users it contains,
-while θ depends on all of them. The twin therefore splits along the
-line Spark's execution model draws anyway:
+a single stateful emission cannot be the final answer: a micro-batch
+only touches the users it contains, while θ depends on all of them.
+The twin therefore splits into a maintained table and a readout:
 
-- ``streaming_cuped_per_user``: user-keyed ``applyInPandasWithState``
-  maintenance of each user's exact decimal(27,12) conditional sums
-  (x = view+click value, y = purchase value). This is THE scalable
-  shape — state is one tiny struct per user, hash-partitioned by the
-  state store exactly like any streaming dedup, no global state — and
-  the update-mode output is the maintained per-user table (in
-  production: MERGEd into a compacted lakehouse table by
-  ``foreachBatch``, the repo's sources/lakehouse.py pattern).
-- ``cuped_readout``: a STATELESS readout over that maintained table —
-  literally the batch query's own downstream function
-  (``queries.wave8._cuped_readout``), applied to per-user rows decoded
-  with the same decimal→double cast the batch aggregate performs. The
-  bit-for-bit claim is structural: after ANY prefix of micro-batches,
-  the maintained table holds exactly the batch per-user frame for the
-  union of those batches (decimal addition is exact and order-free,
-  and a user's x/y start at the batch COALESCE's 0), and the readout
-  IS the batch expression tree.
+- ``streaming_cuped_per_user``: the batch query's own per-user
+  aggregation (``queries.wave8._cuped_per_user``) run as a native
+  update-mode streaming aggregate. The engine keeps each user's exact
+  decimal(27,12) partial sums (x = view+click value, y = purchase
+  value, np = purchase-event count) in the state store, one row per
+  (user_id, variant), and emits the touched users' (user_id, variant,
+  x, y, np) rows each micro-batch. In production the update stream is
+  MERGEd into a compacted lakehouse table by ``foreachBatch`` (the
+  sources/lakehouse.py pattern).
+- ``cuped_readout``: the batch query's downstream function
+  (``queries.wave8._cuped_readout``) applied to the maintained table
+  (latest row per user).
 
-All per-row features (md5 arm assignment, the event-type gating, the
-decimal(27,12) value pin) are computed JVM-side with the batch query's
-shared expression trees before the stateful operator; the Python state
-function only adds Decimals (the kmv.py discipline). Null semantics
-mirror the batch: a null ``value`` adds nothing (SUM skips nulls) but
-the event still registers its user; a user whose events are all other
-types (neither view/click nor purchase) still emits an (x=0, y=0) row,
-exactly like the batch GROUP BY + COALESCE.
+After ANY prefix of micro-batches the maintained table equals the
+batch per-user frame over the union of those batches (decimal
+addition is exact and order-free), and the readout IS the batch
+expression tree, so the twin matches the batch query bit-for-bit.
 
-At 100 TB the only change is where the readout runs: the per-user
-state scales horizontally with the state store, and θ/ρ²/arm means are
-one 5-moment fold over the sink table — the same plan the batch query
-runs today.
+The same maintained table also serves the uplift-decile, SRM and lift
+readouts (streaming/uplift.py, srm.py, lift.py): one state store, four
+dashboards.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from decimal import Decimal
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-# the maintained per-user table: exact decimal sums ride as strings
-# (exact round-trip, the scorecard.py idiom)
-_RAW = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("variant", T.IntegerType()),
-        T.StructField("sx", T.StringType()),
-        T.StructField("sy", T.StringType()),
-        T.StructField("np", T.LongType()),
-    ]
+from tfl_realtime_lakehouse_spark.queries.wave8 import (
+    _cuped_per_user,
+    _cuped_readout,
 )
 
-# STATE MIGRATION NOTE (r10): the struct gained ``np`` — the user's
-# purchase-EVENT count (int, never null — set on every update, so the
-# Arrow float64-null trap cannot touch it). It is what the lift twin's
-# conversion needs (conv = any purchase event, INCLUDING null-value
-# purchases, which sy cannot see). applyInPandasWithState state
-# schemas are not evolvable in place: a deployment upgrading from the
-# r9 (sx, sy) layout starts a new checkpoint (or backfills np from the
-# batch query once) — the same note X208 carried when it adopted this
-# layer. One state store now serves FIVE readouts: CUPED, uplift
-# deciles, SRM, lift, and (via its own struct) DiD.
-_STATE = T.StructType(
-    [
-        T.StructField("sx", T.StringType()),
-        T.StructField("sy", T.StringType()),
-        T.StructField("np", T.LongType()),
-    ]
-)
-
-
-def _cuped_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    user_id, variant = key
-    if state.exists:
-        sx_str, sy_str, np_cnt = state.get
-        sx, sy = Decimal(sx_str), Decimal(sy_str)
-        np_cnt = int(np_cnt)
-    else:
-        # the batch COALESCE: a user exists with x = y = 0 the moment
-        # ANY of their events arrives
-        sx, sy, np_cnt = Decimal(0), Decimal(0), 0
-    for pdf in pdfs:
-        # xr/yr arrive as decimal(27,12) objects or None — exact adds
-        # only; SUM-skips-null semantics match the batch aggregate.
-        # pr is the purchase-event marker (1/None): counting it — not
-        # null-skipping yr — is what makes a NULL-VALUE purchase a
-        # conversion, exactly like the batch lift query's DISTINCT
-        # purchase-user set.
-        sx += sum((v for v in pdf["xr"] if v is not None), Decimal(0))
-        sy += sum((v for v in pdf["yr"] if v is not None), Decimal(0))
-        # Arrow hands a nullable int column to pandas as float64 with
-        # NaN (the r9 trap): pd.isna, not `is not None`
-        np_cnt += int(sum(1 for v in pdf["pr"] if not pd.isna(v)))
-    state.update((str(sx), str(sy), np_cnt))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "variant": [variant],
-            "sx": [str(sx)],
-            "sy": [str(sy)],
-            "np": pd.array([np_cnt], dtype="int64"),
-        }
-    )
-
-
-def streaming_cuped_per_user(events: DataFrame) -> DataFrame:
-    """User-keyed maintenance of the CUPED per-user frame: one
-    (user_id, variant, sx, sy) row per touched user per micro-batch,
-    where sx/sy are the exact decimal conditional sums over every
-    event seen so far for that user."""
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
-
-    dec = "decimal(27,12)"
-    base = events.select(
-        "user_id",
-        # identical md5 arm-assignment tree to the batch query
-        _cuped_variant_col().alias("variant"),
-        F.when(
-            F.col("event_type").isin("view", "click"),
-            F.col("value").cast(dec),
-        ).alias("xr"),
-        F.when(
-            F.col("event_type") == "purchase", F.col("value").cast(dec)
-        ).alias("yr"),
-        F.when(F.col("event_type") == "purchase", F.lit(1)).alias("pr"),
-    )
-    return base.groupBy("user_id", "variant").applyInPandasWithState(
-        _cuped_state_fn,
-        outputStructType=_RAW,
-        stateStructType=_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def cuped_readout(per_user_rows: DataFrame) -> DataFrame:
-    """The batch CUPED readout over the maintained per-user table
-    (latest row per user): decodes the exact decimal strings with the
-    batch aggregate's own decimal→double cast, then applies
-    ``queries.wave8._cuped_readout`` — the SAME function object the
-    registered batch query calls, so the downstream float tree cannot
-    drift."""
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_readout
-
-    # the batch per-user frame: SUM(decimal(27,12)) is decimal(37,12);
-    # COALESCE'd 0 is the state's initial Decimal(0). Cast through the
-    # same width so the double rounding is the batch's.
-    per_user = per_user_rows.select(
-        "variant",
-        F.col("sx").cast("decimal(37,12)").cast("double").alias("x"),
-        F.col("sy").cast("decimal(37,12)").cast("double").alias("y"),
-    )
-    return _cuped_readout(per_user)
+streaming_cuped_per_user = _cuped_per_user
+cuped_readout = _cuped_readout

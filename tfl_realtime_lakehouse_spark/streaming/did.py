@@ -1,21 +1,24 @@
 """Streaming difference-in-differences monitor — the realtime twin of
 the batch ``events_did_estimator`` query (SURVEY §2.12 X219).
 
-Same split the CUPED/uplift twins draw: a user-keyed state layer
-maintains each user's exact decimal (y_pre, y_post) purchase sums —
-bounded structs in the state store, horizontal like any streaming
-dedup — and a STATELESS readout over the maintained table rebuilds the
-batch query's one-row wide frame (four decimal cell sums + fixed
-per-arm user counts) and calls ``queries.wave10._did_readout``, the
-SAME function object the registered batch query calls. The state key
-includes the md5 arm so every user row carries its variant; a user
-whose events are all non-purchase still registers (0, 0) — exactly the
-batch's fixed-denominator semantics (inactive users contribute 0 to a
-cell but still count in n_arm). Decimal addition is exact and
-order-free, so after ANY prefix of micro-batches the maintained table
-sums to the batch cell sums over the union, bit-for-bit — pinned by
-the cross-batch pytest with a pre/post-straddling user and an empty
-(trt, pre) cell.
+Same split the CUPED/uplift twins draw: a native update-mode streaming
+aggregate keyed (user_id, variant) maintains each user's exact
+decimal (y_pre, y_post) purchase sums in the state store, and a
+STATELESS readout over the maintained table rebuilds the batch query's
+one-row wide frame (four decimal cell sums + fixed per-arm user
+counts) and calls ``queries.wave10._did_readout``, the SAME function
+object the registered batch query calls. The key includes the md5 arm
+(the batch ``_cuped_variant_col`` tree) so every user row carries its
+variant; a user whose events are all non-purchase still registers
+(0, 0) — exactly the batch's fixed-denominator semantics (inactive
+users contribute 0 to a cell but still count in n_arm). A NULL ``ts``
+makes ``post`` NULL, so neither period's sum sees that row, matching
+the batch query, which drops its post=NULL cell. Decimal addition is
+exact and order-free, so after ANY prefix of micro-batches the
+maintained table sums to the batch cell sums over the union,
+bit-for-bit — pinned by the cross-batch pytest with a
+pre/post-straddling user, an empty (trt, pre) cell and a NULL-``ts``
+purchase.
 
 At 100 TB: per-user state scales with the state store; the readout is
 a 4-cell fold over the sink table — the same plan the batch runs.
@@ -23,93 +26,27 @@ a 4-cell fold over the sink table — the same plan the batch runs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from decimal import Decimal
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-_DID_CUT = "2024-01-16"  # the batch query's window midpoint
+from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
+from tfl_realtime_lakehouse_spark.queries.wave10 import _DID_CUT, _did_readout
 
-_RAW = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("variant", T.IntegerType()),
-        T.StructField("y_pre", T.StringType()),
-        T.StructField("y_post", T.StringType()),
-    ]
-)
-
-_STATE = T.StructType(
-    [
-        T.StructField("y_pre", T.StringType()),
-        T.StructField("y_post", T.StringType()),
-    ]
-)
-
-
-def _did_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    user_id, variant = key
-    if state.exists:
-        pre_str, post_str = state.get
-        pre, post = Decimal(pre_str), Decimal(post_str)
-    else:
-        pre, post = Decimal(0), Decimal(0)
-    for pdf in pdfs:
-        # yr arrives as decimal(27,12) or None (non-purchase / null
-        # value); _post is computed JVM-side with the batch's cut
-        for yr, is_post in zip(pdf["yr"], pdf["_post"]):
-            if yr is None:
-                continue
-            # null ts → _post is null: the BATCH query groups those rows
-            # into a post=NULL fifth cell that the MAX/CASE wide frame
-            # drops, so the twin must skip them too (a bare `if is_post`
-            # would silently count them as pre-period)
-            if is_post is None or pd.isna(is_post):
-                continue
-            if is_post:
-                post += yr
-            else:
-                pre += yr
-    state.update((str(pre), str(post)))
-    yield pd.DataFrame(
-        {
-            "user_id": [user_id],
-            "variant": [variant],
-            "y_pre": [str(pre)],
-            "y_post": [str(post)],
-        }
-    )
+_DEC = "decimal(37,12)"  # SUM(decimal(27,12)), the batch cell-sum type
 
 
 def streaming_did_per_user(events: DataFrame) -> DataFrame:
-    """User-keyed maintenance of the DiD per-user frame: one
-    (user_id, variant, y_pre, y_post) row per touched user per
-    micro-batch, exact decimal purchase sums split at the batch
-    query's cut."""
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
-
-    dec = "decimal(27,12)"
-    base = events.select(
-        "user_id",
-        _cuped_variant_col().alias("variant"),
-        F.when(
-            F.col("event_type") == "purchase", F.col("value").cast(dec)
-        ).alias("yr"),
-        (F.col("ts") >= F.lit(_DID_CUT).cast("timestamp")).alias("_post"),
+    """Per-user DiD frame: one (user_id, variant, y_pre, y_post) row
+    per touched user per micro-batch, exact decimal purchase sums split
+    at the batch query's cut."""
+    y = F.when(
+        F.col("event_type") == "purchase", F.col("value").cast("decimal(27,12)")
     )
-    return base.groupBy("user_id", "variant").applyInPandasWithState(
-        _did_state_fn,
-        outputStructType=_RAW,
-        stateStructType=_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    post = F.col("ts") >= F.lit(_DID_CUT).cast("timestamp")
+    zero = F.lit(0).cast(_DEC)
+    return events.groupBy("user_id", _cuped_variant_col().alias("variant")).agg(
+        F.coalesce(F.sum(F.when(~post, y)), zero).alias("y_pre"),
+        F.coalesce(F.sum(F.when(post, y)), zero).alias("y_post"),
     )
 
 
@@ -119,38 +56,23 @@ def did_readout(per_user_rows: DataFrame) -> DataFrame:
     decimal(37,12) cell sums + fixed per-arm counts — and applies
     ``queries.wave10._did_readout``, the registered batch query's own
     downstream function object."""
-    from tfl_realtime_lakehouse_spark.queries.wave10 import _did_readout
 
-    dec = "decimal(37,12)"
-    pu = per_user_rows.select(
-        "variant",
-        F.col("y_pre").cast(dec).alias("yp"),
-        F.col("y_post").cast(dec).alias("yq"),
-    )
-    narm = pu.agg(
-        F.sum(F.when(F.col("variant") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("variant") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-    )
+    def n(v):
+        return F.sum(F.when(F.col("variant") == v, 1).otherwise(0)).cast("bigint")
 
     def cell(v, col):
         # SUM(decimal(37,12)) widens to (38,12); re-pin to the batch
         # wide frame's type so _did_readout's double casts are its own
-        return (
-            F.coalesce(
-                F.sum(F.when(F.col("variant") == v, F.col(col))),
-                F.lit(0),
-            )
-            .cast(dec)
-        )
+        return F.coalesce(
+            F.sum(F.when(F.col("variant") == v, F.col(col))), F.lit(0)
+        ).cast(_DEC)
 
-    wide = pu.agg(
-        cell(0, "yp").alias("s0pre"),
-        cell(0, "yq").alias("s0post"),
-        cell(1, "yp").alias("s1pre"),
-        cell(1, "yq").alias("s1post"),
-    ).crossJoin(F.broadcast(narm))
+    wide = per_user_rows.agg(
+        cell(0, "y_pre").alias("s0pre"),
+        cell(0, "y_post").alias("s0post"),
+        cell(1, "y_pre").alias("s1pre"),
+        cell(1, "y_post").alias("s1post"),
+        n(0).alias("n0"),
+        n(1).alias("n1"),
+    )
     return _did_readout(wide)

@@ -3,170 +3,31 @@
 
 The batch query's state IS a set of mergeable moments: per
 (label, half, dim) a decimal(38,12)-exact coordinate sum and a row
-count. Sums and counts merge by addition, so the cross-batch update is
-trivial and ORDER-FREE (decimal addition is exact and associative).
-After ANY prefix of micro-batches the emission equals the batch query
-over the union of those batches' rows — bit-for-bit, because
+count. ``streaming_centroid_drift`` runs the batch query's own
+aggregation (``queries.wave7._drift_moments``) as a native update-mode
+streaming aggregate and emits the maintained (label, half, dim, mu, n)
+moments table; ``drift_readout`` IS the batch readout
+(``queries.wave7._drift_readout``) and turns the latest moments row per
+(label, half, dim) into the per-label (label, n0, n1,
+centroid_l2_shift) rows. Sums and counts merge by exact, order-free
+addition, so after ANY prefix of micro-batches the readout equals the
+batch query over the union of those batches' rows, bit-for-bit.
 
-- the per-row feature (``vec_id % 2`` half, posexploded dim, the
-  double→decimal(38,12) coordinate pin) is computed JVM-side with the
-  SAME expression tree before the stateful operator sees a row (the
-  kmv.py discipline: Python state code only merges numbers, never
-  computes features), and
-- every float step (mean division, diff, squared-diff decimal(27,12)
-  re-pin, the over-dims fold, sqrt, round) is a JVM post-projection
-  expression-tree-identical to the batch query's — the fold uses
-  ``F.aggregate`` over the dim-sorted array, which equals the batch
-  decimal SUM because exact addition makes order irrelevant (the
-  scorecard.py discipline).
+Null semantics are the batch's by construction: a null embedding
+explodes to nothing (the vector contributes no dims); a null coordinate
+still COUNTS (the batch divides by ``count(1)``) but adds nothing to
+the sum; a label populated on one half only gives no row (the
+half-vs-half join is inner).
 
-Null semantics mirror the batch exactly: a null embedding explodes to
-nothing (the vector contributes no dims); a null coordinate still
-COUNTS (the batch divides by ``count(1)``) but adds nothing to the sum;
-a label half-populated on one side only emits no row (the batch's
-half-vs-half join is inner). At production scale the raw per-dim rows
-would be partially aggregated to (label, half, dim, sum, n) in
-``foreachBatch`` before the state merge; here the state function folds
-them with a pandas groupby, which is the same arithmetic.
+State bound: 2·|labels|·|dims| rows, data-independent.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from decimal import Decimal
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-# dim-sorted parallel arrays over the dims present in BOTH halves;
-# decimal sums ride as strings (exact round-trip, like scorecard's sq)
-_RAW = T.StructType(
-    [
-        T.StructField("label", T.IntegerType()),
-        T.StructField("dims", T.ArrayType(T.IntegerType())),
-        T.StructField("sum0s", T.ArrayType(T.StringType())),
-        T.StructField("n0s", T.ArrayType(T.LongType())),
-        T.StructField("sum1s", T.ArrayType(T.StringType())),
-        T.StructField("n1s", T.ArrayType(T.LongType())),
-    ]
+from tfl_realtime_lakehouse_spark.queries.wave7 import (
+    _drift_moments,
+    _drift_readout,
 )
 
-# state: parallel arrays keyed by (half, dim) — bounded at 2·|dims|
-# entries per label, data-independent
-_STATE = T.StructType(
-    [
-        T.StructField("halfs", T.ArrayType(T.IntegerType())),
-        T.StructField("dims", T.ArrayType(T.IntegerType())),
-        T.StructField("sums", T.ArrayType(T.StringType())),
-        T.StructField("ns", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def _drift_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (label,) = key
-    if state.exists:
-        halfs, dims, sums, ns = state.get
-        st = {
-            (h, d): [Decimal(s), n]
-            for h, d, s, n in zip(halfs, dims, sums, ns)
-        }
-    else:
-        st = {}
-    for pdf in pdfs:
-        for (h, d), grp in pdf.groupby(["half", "dim"])["xd"]:
-            cur = st.setdefault((int(h), int(d)), [Decimal(0), 0])
-            # batch semantics: count(1) counts every exploded row, the
-            # decimal sum skips nulls
-            cur[0] += sum((v for v in grp if v is not None), Decimal(0))
-            cur[1] += len(grp)
-    keys = sorted(st)
-    state.update(
-        (
-            [k[0] for k in keys],
-            [k[1] for k in keys],
-            [str(st[k][0]) for k in keys],
-            [st[k][1] for k in keys],
-        )
-    )
-    common = sorted(
-        {d for h, d in st if h == 0} & {d for h, d in st if h == 1}
-    )
-    if not common:
-        # batch's half-vs-half join is inner: no row until both halves
-        # have contributed this label
-        yield pd.DataFrame(
-            {c.name: pd.Series(dtype=object) for c in _RAW.fields}
-        )
-        return
-    yield pd.DataFrame(
-        {
-            "label": [label],
-            "dims": [common],
-            "sum0s": [[str(st[(0, d)][0]) for d in common]],
-            "n0s": [[st[(0, d)][1] for d in common]],
-            "sum1s": [[str(st[(1, d)][0]) for d in common]],
-            "n1s": [[st[(1, d)][1] for d in common]],
-        }
-    )
-
-
-def streaming_centroid_drift(emb: DataFrame) -> DataFrame:
-    """Per-label centroid-drift stream: one (label, n0, n1,
-    centroid_l2_shift) row per label per micro-batch, covering every
-    vector seen so far — identical columns and values to the batch
-    ``embedding_centroid_drift`` query over the union."""
-    # identical feature tree to the batch query (queries/wave7.py):
-    # half = vec_id % 2, dim/x from the same posexplode(transform),
-    # coordinate pinned to decimal(38,12) BEFORE the stateful operator
-    base = emb.select(
-        "label",
-        (F.col("vec_id") % 2).cast("int").alias("half"),
-        F.posexplode(
-            F.transform("embedding", lambda v: v.cast("double"))
-        ).alias("dim", "x"),
-    ).select(
-        "label",
-        "half",
-        "dim",
-        F.col("x").cast("decimal(38,12)").alias("xd"),
-    )
-    raw = base.groupBy("label").applyInPandasWithState(
-        _drift_state_fn,
-        outputStructType=_RAW,
-        stateStructType=_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    # JVM post-projection, expression-tree-identical to the batch query:
-    # mu = exact-decimal sum → double, / count (double / bigint); the
-    # over-dims fold re-pins diff² to decimal(27,12) and accumulates in
-    # exact decimal, so it equals the batch SUM regardless of order.
-    mus0 = F.zip_with(
-        "sum0s",
-        "n0s",
-        lambda s, n: s.cast("decimal(38,12)").cast("double") / n,
-    )
-    mus1 = F.zip_with(
-        "sum1s",
-        "n1s",
-        lambda s, n: s.cast("decimal(38,12)").cast("double") / n,
-    )
-    diffs = F.zip_with(mus0, mus1, lambda a, b: a - b)
-    total = F.aggregate(
-        F.transform(diffs, lambda d: (d * d).cast("decimal(27,12)")),
-        F.lit("0").cast("decimal(38,12)"),
-        lambda acc, x: (acc + x).cast("decimal(38,12)"),
-    )
-    return raw.select(
-        "label",
-        F.array_min("n0s").alias("n0"),
-        F.array_min("n1s").alias("n1"),
-        F.round(F.sqrt(total.cast("double")), 6).alias("centroid_l2_shift"),
-    )
+streaming_centroid_drift = _drift_moments
+drift_readout = _drift_readout

@@ -3,13 +3,13 @@
 experimentation family: every registered experiment readout now has a
 cross-batch twin).
 
-ZERO new state OPERATOR (the X217/X223 trick, applied a third time),
-but ONE new state FIELD: conversion is "any purchase EVENT", which the
-CUPED layer's exact value sums cannot see (a NULL-value purchase
-converts a user while adding nothing to sy). ``streaming/cuped.py``'s
-per-user struct therefore gained ``np`` — the purchase-event count,
-an int maintained on every update (see the STATE MIGRATION NOTE
-there) — and this module is just the re-export plus a stateless
+ZERO new state (the X217/X223 trick, applied a third time):
+conversion is "any purchase EVENT", which the CUPED frame's exact
+value sums cannot see (a NULL-value purchase converts a user while
+adding nothing to y), so the shared per-user frame
+(``queries.wave8._cuped_per_user``) carries ``np``, the
+purchase-event count. This module is just the re-export of
+``streaming/cuped.py``'s streaming aggregate plus a stateless
 readout: fold the maintained table into the (na, ca, nb, cb) one-row
 wide frame (conv = np > 0, the batch's DISTINCT purchase-user set)
 and call ``queries.pipeline_queries._lift_readout``, the SAME function
@@ -38,7 +38,7 @@ from tfl_realtime_lakehouse_spark.streaming.cuped import (
     streaming_cuped_per_user,
 )
 
-# the shared state layer, re-exported (X208's operator verbatim)
+# the shared per-user aggregate, re-exported
 streaming_lift_per_user = streaming_cuped_per_user
 
 

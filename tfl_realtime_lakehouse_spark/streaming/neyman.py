@@ -3,111 +3,30 @@ batch ``eval_neyman_allocation`` query (SURVEY §2.12 X228).
 
 The batch query's per-source state is three EXACT integers — row
 count, char sum, char sum-of-squares — the textbook mergeable-moments
-decomposition: integer addition is associative and order-free, so
-after ANY prefix of micro-batches the maintained partials equal the
-batch aggregates over the union, and every downstream float (sigma,
-the DECIMAL-pinned weight, the share, the floor allocation) is the
-batch query's own expression tree (``queries.wave12._neyman_readout``,
-the SAME function object) applied to identical inputs — bit-for-bit.
+decomposition. ``streaming_neyman_stats`` runs the batch query's own
+aggregation (``queries.wave12._neyman_stats``) as a native update-mode
+streaming aggregate, so after ANY prefix of micro-batches the
+maintained partials equal the batch aggregates over the union (integer
+addition is associative and order-free). ``neyman_readout`` IS the
+batch readout (``queries.wave12._neyman_readout``): every downstream
+float (sigma, the DECIMAL-pinned weight, the share, the floor
+allocation) is one expression tree on both sides — bit-for-bit.
 
-NULL discipline: the batch ``SUM`` skips NULL ``n_chars`` while
-``COUNT(*)`` counts the row, and an all-NULL source yields NULL sums
-(sigma/share/alloc NULL, excluded from the weight total by SUM's
-null-skip). The state therefore tracks ``n_vals`` (non-null count)
-separately and the readout surfaces ``sx``/``sx2`` as NULL when
-``n_vals`` is 0 — the exact batch semantics, pinned by the cross-batch
+NULL discipline is the batch's by construction: SUM skips NULL
+``n_chars`` while the count keeps the row, and an all-NULL source has
+NULL sums (sigma/share/alloc NULL) — pinned by the cross-batch
 pytest's all-NULL source.
 
-State bound: one 4-long row per source, forever — |sources| rows total
-regardless of corpus size (the 100 TB shape; same class as the CUPED
-store's per-user bound but smaller).
+State bound: one row per source, forever — |sources| rows total
+regardless of corpus size (the 100 TB shape).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_RAW = T.StructType(
-    [
-        T.StructField("source", T.StringType()),
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("n_vals", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sx2", T.LongType()),
-    ]
+from tfl_realtime_lakehouse_spark.queries.wave12 import (
+    _neyman_readout,
+    _neyman_stats,
 )
 
-_STATE = T.StructType(
-    [
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("n_vals", T.LongType()),
-        T.StructField("sx", T.LongType()),
-        T.StructField("sx2", T.LongType()),
-    ]
-)
-
-
-def _neyman_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (source,) = key
-    n_docs, n_vals, sx, sx2 = state.get if state.exists else (0, 0, 0, 0)
-    for pdf in pdfs:
-        n_docs += len(pdf)
-        # Arrow hands a nullable bigint to pandas as float64; cast the
-        # non-null values back to int64 per element so the sums stay
-        # exact past 2^53 (the standing kmv.py/scorecard.py discipline)
-        vals = pdf["n_chars"].dropna().astype("int64")
-        n_vals += len(vals)
-        sx += int(vals.sum())
-        sx2 += int((vals * vals).sum())
-    state.update((n_docs, n_vals, sx, sx2))
-    yield pd.DataFrame(
-        [
-            {
-                "source": source,
-                "n_docs": n_docs,
-                "n_vals": n_vals,
-                "sx": sx,
-                "sx2": sx2,
-            }
-        ]
-    )
-
-
-def streaming_neyman_stats(docs: DataFrame) -> DataFrame:
-    """Maintain the per-source exact partials over a documents-shaped
-    stream (needs ``source`` and ``n_chars`` columns)."""
-    return (
-        docs.select("source", "n_chars")
-        .groupBy("source")
-        .applyInPandasWithState(
-            _neyman_state_fn,
-            outputStructType=_RAW,
-            stateStructType=_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def neyman_readout(per_source_rows: DataFrame) -> DataFrame:
-    """The batch allocation over the maintained table (latest row per
-    source): restore the batch NULL semantics (all-NULL source → NULL
-    sums) and apply the registered query's own readout function."""
-    from tfl_realtime_lakehouse_spark.queries.wave12 import _neyman_readout
-
-    s = per_source_rows.select(
-        "source",
-        "n_docs",
-        F.when(F.col("n_vals") > 0, F.col("sx")).alias("sx"),
-        F.when(F.col("n_vals") > 0, F.col("sx2")).alias("sx2"),
-    )
-    return _neyman_readout(s)
+streaming_neyman_stats = _neyman_stats
+neyman_readout = _neyman_readout

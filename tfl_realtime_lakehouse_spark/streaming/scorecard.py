@@ -92,17 +92,20 @@ _STATE_KMV = T.StructType(
 )
 
 
-def _scorecard_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (source,) = key
+def _scorecard_fold(key, pdfs, state, load, members, keep, distinct):
+    """The per-source fold both modes share: volume, exact char and
+    quality sums and the lang counts, plus a distinct leg given as
+    ``load`` (state array → member set), ``members`` (batch → new
+    members), ``keep`` (member set → state array) and ``distinct``
+    (output column, kept array → its value). Updates the state and
+    returns the source's raw output row."""
     if state.exists:
-        n_docs, sch, sq_str, hs, langs, lcnts = state.get
+        n_docs, sch, sq_str, kept, langs, lcnts = state.get
         sq = Decimal(sq_str)
-        hset = set(hs)
+        acc = load(kept)
         lmap = dict(zip(langs, lcnts))
     else:
-        n_docs, sch, sq, hset, lmap = 0, 0, Decimal(0), set(), {}
+        n_docs, sch, sq, acc, lmap = 0, 0, Decimal(0), set(), {}
     for pdf in pdfs:
         n_docs += len(pdf)
         # exact bigint accumulation: with nulls present pandas holds
@@ -112,23 +115,38 @@ def _scorecard_state_fn(
         sch += int(pdf["n_chars"].dropna().astype("int64").sum())
         # decimal(27,12) values arrive as Decimal objects — exact sum
         sq += sum((d for d in pdf["_sq"] if d is not None), Decimal(0))
-        hset.update(h for h in pdf["_h"] if h is not None)
+        acc.update(members(pdf))
         for lang, c in pdf["lang"].value_counts(dropna=False).items():
             k = _NULL_LANG if pd.isna(lang) else str(lang)
             lmap[k] = lmap.get(k, 0) + int(c)
+    kept = keep(acc)
     langs = sorted(lmap)
-    state.update(
-        (n_docs, sch, str(sq), sorted(hset), langs, [lmap[k] for k in langs])
-    )
-    yield pd.DataFrame(
+    lcnts = [lmap[k] for k in langs]
+    state.update((n_docs, sch, str(sq), kept, langs, lcnts))
+    col, value = distinct
+    return pd.DataFrame(
         {
-            "source": [source],
+            "source": [key[0]],
             "n_docs": [n_docs],
-            "n_distinct": [len(hset)],
+            col: [value(kept)],
             "sch": [sch],
             "sq": [str(sq)],
-            "lcnts": [[lmap[k] for k in langs]],
+            "lcnts": [lcnts],
         }
+    )
+
+
+def _scorecard_state_fn(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    yield _scorecard_fold(
+        key,
+        pdfs,
+        state,
+        set,
+        lambda pdf: (h for h in pdf["_h"] if h is not None),
+        sorted,
+        ("n_distinct", len),
     )
 
 
@@ -137,40 +155,18 @@ def _scorecard_kmv_state_fn(
 ) -> Iterator[pd.DataFrame]:
     from tfl_realtime_lakehouse_spark.streaming.kmv import KMV_K, kmv_estimate
 
-    (source,) = key
-    if state.exists:
-        n_docs, sch, sq_str, mins, langs, lcnts = state.get
-        sq = Decimal(sq_str)
-        acc = set(int(v) for v in mins)
-        lmap = dict(zip(langs, lcnts))
-    else:
-        n_docs, sch, sq, acc, lmap = 0, 0, Decimal(0), set(), {}
-    for pdf in pdfs:
-        n_docs += len(pdf)
-        sch += int(pdf["n_chars"].dropna().astype("int64").sum())
-        sq += sum((d for d in pdf["_sq"] if d is not None), Decimal(0))
-        acc.update(int(h) for h in pdf["_hv"] if h is not None)
-        for lang, c in pdf["lang"].value_counts(dropna=False).items():
-            k = _NULL_LANG if pd.isna(lang) else str(lang)
-            lmap[k] = lmap.get(k, 0) + int(c)
     # bottom-k merge (streaming/kmv.py): a hash outside the bottom k is
     # ≥ the current k-th min, and the k-th min only ever decreases, so
     # dropping it now can never change a later sketch — state stays ≤ k
     # longs per source FOREVER, the bound the exact mode can't give.
-    merged = sorted(acc)[:KMV_K]
-    langs = sorted(lmap)
-    state.update(
-        (n_docs, sch, str(sq), merged, langs, [lmap[k] for k in langs])
-    )
-    yield pd.DataFrame(
-        {
-            "source": [source],
-            "n_docs": [n_docs],
-            "est_distinct": [kmv_estimate(merged)],
-            "sch": [sch],
-            "sq": [str(sq)],
-            "lcnts": [[lmap[k] for k in langs]],
-        }
+    yield _scorecard_fold(
+        key,
+        pdfs,
+        state,
+        lambda kept: {int(v) for v in kept},
+        lambda pdf: (int(h) for h in pdf["_hv"] if h is not None),
+        lambda acc: sorted(acc)[:KMV_K],
+        ("est_distinct", kmv_estimate),
     )
 
 

@@ -2,11 +2,11 @@
 batch ``events_srm_check`` query (SURVEY §2.12 X218).
 
 ZERO new state (the X217 trick, applied a second time): the experiment
-user population IS what ``streaming/cuped.py``'s per-user state layer
-already maintains — a user row exists the moment any of their events
-arrives, keyed (user_id, variant) — so the SRM twin re-exports that
-operator and adds only a stateless readout: count the maintained
-table's rows per arm and call ``queries.wave10._srm_readout``, the
+user population IS what ``streaming/cuped.py``'s per-user streaming
+aggregate already maintains — a user row exists the moment any of
+their events arrives, keyed (user_id, variant) — so the SRM twin
+re-exports that aggregate and adds only a stateless readout: count
+the maintained table's rows per arm and call ``queries.wave10._srm_readout``, the
 SAME function object the registered batch query calls. One state store
 therefore serves CUPED, uplift deciles, AND the validity gate that
 decides whether to trust either — which is exactly how a real
@@ -29,7 +29,7 @@ from tfl_realtime_lakehouse_spark.streaming.cuped import (
     streaming_cuped_per_user,
 )
 
-# the shared state layer, re-exported (X208's operator verbatim)
+# the shared per-user aggregate, re-exported
 streaming_srm_per_user = streaming_cuped_per_user
 
 

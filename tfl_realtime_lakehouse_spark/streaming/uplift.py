@@ -2,29 +2,20 @@
 ``events_uplift_by_decile`` query (SURVEY §2.12 X212).
 
 X212 is a different READOUT over the SAME per-user experiment frame
-X207 (CUPED) maintains: per user, the exact decimal conditional sums
-of the pre-exposure covariate x (view+click value) and the metric y
-(purchase value). So the twin adds NO new state operator at all —
-``streaming_uplift_per_user`` IS ``streaming/cuped.py``'s
-``streaming_cuped_per_user`` (same key, same decimal state, same JVM
-feature trees), re-exported so a deployment monitoring both dashboards
-runs ONE state store, not two. That sharing is the point of the
-maintained-table design: state layers are keyed by what they maintain,
-readouts multiply for free.
+X207 (CUPED) maintains, so the twin adds no state operator:
+``streaming_uplift_per_user`` IS ``streaming/cuped.py``'s native
+streaming aggregate (the batch ``_cuped_per_user``), and a deployment
+monitoring both dashboards runs ONE state store, not two.
 
-``uplift_decile_readout`` is the stateless downstream over the
-maintained table (latest row per user): decodes the exact decimal
-strings with the batch aggregate's own decimal(37,12)→double cast,
-then applies ``queries.wave9._uplift_decile_readout`` — the SAME
-function object the registered batch query calls, so the ntile order,
-the per-(decile, arm) decimal sums, and the NULL-guarded uplift tree
-cannot drift from the batch. After ANY prefix of micro-batches the
-maintained table equals the batch per-user frame over the union
-(decimal addition is exact and order-free), so the readout equals the
-batch query bit-for-bit — pinned by the cross-batch pytest with a
-boundary-straddling user and a planted missing-arm decile.
+``uplift_decile_readout`` is the batch query's own downstream function
+(``queries.wave9._uplift_decile_readout``), applied to the maintained
+table (latest row per user). After ANY prefix of micro-batches that
+table equals the batch per-user frame over the union, so the readout
+(ntile order, per-(decile, arm) decimal sums, NULL-guarded uplift)
+equals the batch query bit-for-bit — pinned by the cross-batch pytest
+with a boundary-straddling user and a planted missing-arm decile.
 
-Scale note: the state layer is per-user bounded structs in the state
+Scale note: the state is one row per experiment user in the state
 store (horizontal); the readout's global ntile sorts the AGGREGATED
 per-user frame — O(experiment users), not O(events) — the same
 deliberate, documented exchange as the batch query.
@@ -32,33 +23,10 @@ deliberate, documented exchange as the batch query.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
+from tfl_realtime_lakehouse_spark.queries.wave9 import _uplift_decile_readout
 from tfl_realtime_lakehouse_spark.streaming.cuped import (
     streaming_cuped_per_user,
 )
 
-# the shared state layer, re-exported (X208's operator verbatim)
 streaming_uplift_per_user = streaming_cuped_per_user
-
-
-def uplift_decile_readout(per_user_rows: DataFrame) -> DataFrame:
-    """The batch uplift-by-decile readout over the maintained per-user
-    table (latest row per user): (user_id, variant, sx, sy) →
-    10-decile uplift table, via the registered batch query's own
-    downstream function object."""
-    from tfl_realtime_lakehouse_spark.queries.wave9 import (
-        _uplift_decile_readout,
-    )
-
-    per_user = per_user_rows.select(
-        "user_id",
-        "variant",
-        # SUM(decimal(27,12)) is decimal(37,12) in the batch frame;
-        # decode through the same width so the double rounding (and
-        # therefore the ntile order on x) is the batch's
-        F.col("sx").cast("decimal(37,12)").cast("double").alias("x"),
-        F.col("sy").cast("decimal(37,12)").cast("double").alias("y"),
-    )
-    return _uplift_decile_readout(per_user)
+uplift_decile_readout = _uplift_decile_readout

@@ -19,25 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _release_blocks  # noqa: E402
 from tfl_realtime_lakehouse_spark import hoststamp  # noqa: E402
 from tfl_realtime_lakehouse_spark.queries import REGISTRY  # noqa: E402
 from tfl_realtime_lakehouse_spark.session import get_spark  # noqa: E402
-
-
-def _release_blocks(spark) -> None:
-    """bench.py's discipline: drop retained localCheckpoint blocks
-    between trials — accumulated blocks GC-thrash the heap and poison
-    later timings (r7 measured a 280 s outlier on a 40 s query)."""
-    import gc
-
-    gc.collect()
-    try:
-        jsc = spark.sparkContext._jsc.sc()
-        retained = jsc.getPersistentRDDs().values().toList()
-        for i in range(retained.size()):
-            retained.apply(i).unpersist(False)
-    except Exception:
-        pass
 
 
 def main():
@@ -51,6 +36,7 @@ def main():
         "trials": trials,
         "load_before": [round(v, 2) for v in os.getloadavg()],
         "queries": {},
+        "release_failures": 0,
     }
     for name in names:
         times, cpu, steal = [], [], []
@@ -68,7 +54,10 @@ def main():
                 round(c1 - c0, 2) if c0 is not None and c1 is not None else -1.0
             )
             steal.append((s1 - s0) if s0 is not None and s1 is not None else -1)
-            _release_blocks(spark)
+            # drop retained localCheckpoint blocks between trials:
+            # accumulated blocks GC-thrash the heap and poison later
+            # timings (a 280 s outlier on a 40 s query was measured)
+            out["release_failures"] += _release_blocks(spark)
         warm = sorted(times[1:])
         # cpu/steal PER TRIAL (r10 ask #2): when warm wall climbs but
         # warm cpu stays flat the escalation is host steal; when cpu
