@@ -26,6 +26,13 @@ steal-jiffies DELTA ("steal_delta" per run) and every query records the
 JVM's CPU seconds ("cpu_sec" — utime+stime of the local-mode JVM, which
 steal time is never charged to). When steal_delta is non-trivial for a
 window, compare rounds on cpu_sec, not wall.
+
+Compile stamps: every query records the generated classes the JVM
+compiled while it ran ("compiles", one dict per run), and every run
+records its total ("compiles_total") and HotSpot's C1/C2 compile time
+("jit_s"), both also in the headline. A warm run that still compiles
+much means the codegen cache is too small or a query's literals change
+per run.
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ import json
 import os
 import sys
 import time
+from typing import TypeVar
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -70,27 +78,34 @@ def _session_alive(spark) -> bool:
         return False
 
 
+Counter = TypeVar("Counter", int, float)
+
+
+def _delta(before: Counter | None, after: Counter | None) -> Counter:
+    """after - before of a cumulative counter, or -1 when it is
+    meaningless: a read returned None (no /proc or no JVM), or the
+    counter went backwards because a new JVM started in between."""
+    if before is None or after is None or after < before:
+        return -1
+    return after - before
+
+
 def _run_suite(
     spark, sf_dir: str
-) -> tuple[dict[str, float], dict[str, float], float, object, int]:
+) -> tuple[dict[str, float], dict[str, float], dict[str, int], float, object, int]:
     timings: dict[str, float] = {}
     cpus: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     release_failures = 0
     t_suite = time.time()
     for name, rq in sorted(REGISTRY.items()):
         t0 = time.time()
         c0 = hoststamp.jvm_cpu_sec(spark)
+        k0 = hoststamp.codegen_compiles(spark)
         try:
             rq.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = round(time.time() - t0, 3)
-            c1 = hoststamp.jvm_cpu_sec(spark)
-            # c1 < c0 would mean the JVM was rebuilt mid-query; both
-            # None on non-Linux. Either way the delta is meaningless.
-            cpus[name] = (
-                round(c1 - c0, 3)
-                if c0 is not None and c1 is not None and c1 >= c0
-                else -1.0
-            )
+            cpus[name] = round(_delta(c0, hoststamp.jvm_cpu_sec(spark)), 3)
         except Exception as exc:  # keep the suite running; surface the error
             timings[name] = -1.0
             cpus[name] = -1.0
@@ -103,12 +118,21 @@ def _run_suite(
                 print(f"# session died in {name}; rebuilding", file=sys.stderr)
                 try:
                     spark.stop()
-                except Exception:
-                    pass
+                except Exception as stop_exc:  # rebuild regardless; report it
+                    print(f"# stop of dead session failed: {stop_exc}", file=sys.stderr)
                 spark = get_spark(app_name="tfl-lakehouse-bench")
                 spark.sparkContext.setLogLevel("ERROR")
+        # JVM-wide counter: a session rebuilt in the same JVM keeps it.
+        compiles[name] = _delta(k0, hoststamp.codegen_compiles(spark))
         release_failures += _release_blocks(spark)
-    return timings, cpus, round(time.time() - t_suite, 3), spark, release_failures
+    return (
+        timings,
+        cpus,
+        compiles,
+        round(time.time() - t_suite, 3),
+        spark,
+        release_failures,
+    )
 
 
 def main() -> None:
@@ -128,15 +152,22 @@ def main() -> None:
     load_before = os.getloadavg()
     runs = []
     steal_deltas: list[int] = []
+    compiles_runs: list[dict[str, int]] = []
+    compiles_total: list[int] = []
+    jit_s: list[float] = []
     release_failures = 0
     for _ in range(max(1, repeat)):
         s0 = hoststamp.steal_jiffies()
-        timings_i, cpus_i, total_i, spark, failed_i = _run_suite(spark, sf_dir)
-        release_failures += failed_i
-        s1 = hoststamp.steal_jiffies()
-        steal_deltas.append(
-            (s1 - s0) if s0 is not None and s1 is not None else -1
+        k0, j0 = hoststamp.codegen_compiles(spark), hoststamp.jit_ms(spark)
+        timings_i, cpus_i, compiles_i, total_i, spark, failed_i = _run_suite(
+            spark, sf_dir
         )
+        release_failures += failed_i
+        steal_deltas.append(_delta(s0, hoststamp.steal_jiffies()))
+        compiles_runs.append(compiles_i)
+        compiles_total.append(_delta(k0, hoststamp.codegen_compiles(spark)))
+        jit = _delta(j0, hoststamp.jit_ms(spark))
+        jit_s.append(round(jit / 1000, 1) if jit >= 0 else -1.0)
         runs.append((timings_i, cpus_i, total_i))
     timings, cpus, total = runs[0]
     out = {
@@ -159,6 +190,9 @@ def main() -> None:
         # unpersist failures between queries: retained blocks that may
         # skew later queries' timings
         "release_failures": release_failures,
+        "compiles": compiles_runs,
+        "compiles_total": compiles_total,
+        "jit_s": jit_s,
     }
     if len(runs) > 1:
         names = sorted(REGISTRY)
@@ -196,6 +230,8 @@ def main() -> None:
         "load_after": out["load_after"],
         "steal_delta": steal_deltas,
         "release_failures": release_failures,
+        "compiles_total": compiles_total,
+        "jit_s": jit_s,
         "headline": True,
     }
     if len(runs) > 1:

@@ -14,13 +14,28 @@ bespoke A/B experiment into data carried by every bench artifact:
   CPU deltas are the noise-immune comparison metric: when steal is
   non-trivial, quote cpu_sec, not wall.
 
-Both are Linux-proc reads (this engine's measurement boxes are Linux);
-callers degrade gracefully to None/-1 elsewhere.
+Two more read the JVM's own compile counters through the gateway, so a
+pass that recompiles code it already compiled shows up in the numbers:
+
+- ``codegen_compiles(spark)`` — generated classes (whole-stage and
+  expression codegen) compiled by Janino so far (Spark's ``CodegenMetrics`` compilation-time histogram
+  count). A codegen cache hit compiles nothing.
+- ``jit_ms(spark)`` — HotSpot's accumulated C1/C2 compile time from the
+  ``CompilationMXBean``. The JVM keeps this total itself; summing the
+  CPU of ``C1/C2 CompilerThread`` entries under /proc/<pid>/task is not
+  an option, because HotSpot's dynamic compiler threads exit and their
+  CPU leaves the per-thread files with them (per-query deltas read
+  negative).
+
+The /proc reads are Linux-only (this engine's measurement boxes are
+Linux); every helper degrades to None elsewhere and callers report -1.
 """
 
 from __future__ import annotations
 
 import os
+
+from py4j.protocol import Py4JError
 
 
 def steal_jiffies() -> int | None:
@@ -31,7 +46,7 @@ def steal_jiffies() -> int | None:
             parts = f.readline().split()
         # cpu user nice system idle iowait irq softirq steal ...
         return int(parts[8])
-    except Exception:
+    except (OSError, IndexError, ValueError):
         return None
 
 
@@ -42,7 +57,7 @@ def _proc_cpu_sec(pid: int) -> float | None:
             tail = f.read().rsplit(")", 1)[1].split()
         clk = os.sysconf("SC_CLK_TCK")
         return (int(tail[11]) + int(tail[12])) / clk  # utime + stime
-    except Exception:
+    except (OSError, IndexError, ValueError):
         return None
 
 
@@ -56,7 +71,7 @@ def jvm_cpu_sec(spark) -> float | None:
         if proc is None:
             return None
         return _proc_cpu_sec(proc.pid)
-    except Exception:
+    except AttributeError:  # Spark Connect sessions have no sparkContext
         return None
 
 
@@ -65,3 +80,25 @@ def self_cpu_sec() -> float:
     decode overhead lives here, not in the JVM counter)."""
     t = os.times()
     return t.user + t.system
+
+
+def codegen_compiles(spark) -> int | None:
+    """Generated classes the session's JVM has compiled so far
+    (JVM-wide, cumulative). None when the JVM is unreachable."""
+    try:
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(metrics.METRIC_COMPILATION_TIME().getCount())
+    except (AttributeError, Py4JError):
+        return None
+
+
+def jit_ms(spark) -> int | None:
+    """Milliseconds HotSpot's C1/C2 compilers have spent so far, or None
+    when the JVM is unreachable, runs without a JIT compiler (no bean)
+    or does not support the counter (a Java-side error)."""
+    try:
+        mx = spark._jvm.java.lang.management.ManagementFactory
+        bean = mx.getCompilationMXBean()
+        return None if bean is None else int(bean.getTotalCompilationTime())
+    except (AttributeError, Py4JError):
+        return None

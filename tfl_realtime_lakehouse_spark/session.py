@@ -102,6 +102,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Codegen class cache, keyed by generated source text, so
+        # a hit returns the same class and results cannot change. At
+        # Spark's default of 100 entries every warm pass recompiled
+        # (Janino, then C1/C2 JIT) nearly all it had already compiled:
+        # the perfbench query_mix pass generates 187 classes, and one
+        # pass of the whole registry at sf0.001 4,273 distinct ones.
+        # 8192 holds about twice that working set; the cost is JVM
+        # Metaspace for the retained classes (after two registry passes
+        # at sf0.001: 199 -> 224 MB). Static conf: it sizes a JVM-wide
+        # cache built on first codegen, so only the first session in
+        # the JVM sets it and spark.conf.set cannot change it.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
