@@ -3,6 +3,8 @@ delta-spark which this environment doesn't ship)."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.sources.lakehouse import merge_delete, merge_upsert
@@ -38,6 +40,22 @@ def test_merge_upsert_delete_keys_clears_stale_rows(spark, tmp_path):
     touched = spark.createDataFrame([(1,)], "k long")
     merge_upsert(spark, path, empty, ["k"], delete_keys=touched)
     assert _rows(spark, path) == {2: ("b", 2.0)}
+
+
+def test_merge_upsert_schema_drift_raises_and_keeps_target(spark, tmp_path):
+    """An upsert whose columns do not match the target must raise, not
+    be taken for a first write that replaces the whole table."""
+    path = str(tmp_path / "tbl")
+    merge_upsert(
+        spark,
+        path,
+        spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], SCHEMA),
+        ["k"],
+    )
+    drifted = spark.createDataFrame([(2, "B", 20.0, 9)], SCHEMA + ", w long")
+    with pytest.raises(Exception, match="NUM_COLUMNS_MISMATCH"):
+        merge_upsert(spark, path, drifted, ["k"])
+    assert _rows(spark, path) == {1: ("a", 1.0), 2: ("b", 2.0), 3: ("c", 3.0)}
 
 
 def test_merge_delete_predicate_null_semantics(spark, tmp_path):

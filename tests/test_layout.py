@@ -1,17 +1,13 @@
-"""Z-order layout: interleave correctness vs the python reference, and
-the actual prune — a two-dimensional filter over a z-partitioned write
-must (a) touch only the z-prefix directories whose hypercube intersects
-the filter box (plan-asserted partition pruning, the S7 mechanism) and
-(b) return exactly the rows the unpruned scan returns."""
+"""Z-order layout: interleave correctness vs the python reference. The
+writer built on this key (``sources.bucketing.zorder_write``) is tested
+for two-column file-stat tightening in ``test_scale_ops.py``."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.operators.layout import (
-    fixed_width_bin,
     interleave_bits,
-    zorder_write,
     zvalue_py,
 )
 
@@ -23,42 +19,3 @@ def test_interleave_matches_python_reference(spark):
     )
     for r in df.collect():
         assert r.z == zvalue_py([r.x, r.y], bits=8), (r.x, r.y)
-
-
-def test_zorder_write_prunes_two_dimensional_filter(spark, tmp_path):
-    # synthetic grid: every (xbin, ybin) cell once, so coverage is exact
-    df = (
-        spark.range(256 * 16)
-        .select(
-            (F.col("id") % 256).alias("xbin"),
-            (F.col("id") / 256).cast("long").alias("ybin"),
-            F.col("id").alias("payload"),
-        )
-    )
-    z = interleave_bits([F.col("xbin"), F.col("ybin")], bits=8)
-    path = str(tmp_path / "zorders")
-    zorder_write(df, path, z, prefix_bits=4, total_bits=16)
-
-    back = spark.read.option("basePath", path).parquet(path)
-    # filter box: x in [0,16) AND y in [0,16) -> the prefixes whose
-    # hypercube intersects the box, from the SAME reference interleave
-    want_prefixes = sorted(
-        {zvalue_py([x, y], bits=8) >> 12 for x in range(16) for y in range(16)}
-    )
-    assert len(want_prefixes) < 16  # the prune is real: strict subset
-    filt = back.where(
-        F.col("z_prefix").isin(want_prefixes)
-        & (F.col("xbin") < 16)
-        & (F.col("ybin") < 16)
-    )
-    plan = filt._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "z_prefix" in plan
-    # pruned result == unpruned result (prefix containment is sound)
-    unpruned = back.where((F.col("xbin") < 16) & (F.col("ybin") < 16))
-    got = {r.payload for r in filt.collect()}
-    assert got == {r.payload for r in unpruned.collect()}
-    assert len(got) == 256
-    # every row's directory matches the reference z-prefix
-    sample = back.limit(200).collect()
-    for r in sample:
-        assert r.z_prefix == zvalue_py([r.xbin, r.ybin], bits=8) >> 12

@@ -1135,44 +1135,3 @@ def test_matryoshka_contraction_matches_raw_pair_model(spark, tmp_path):
         # engine≡oracle bit-exactness is pinned by tools/str_identity
         assert abs(gmean - mean) <= 2e-6, k
         assert abs(gmx - mx) <= 2e-6, k
-
-
-@given(
-    st.lists(
-        st.tuples(
-            st.floats(0.0, 1.0, allow_nan=False).map(lambda v: round(v, 6)),
-            st.integers(1, 9),
-        ),
-        min_size=1,
-        max_size=40,
-    )
-)
-@settings(max_examples=60, deadline=None)
-def test_conformal_hist_kernel_matches_sorted_expansion(hist):
-    """conformal_from_hist (the streaming twin's kernel) must equal the
-    definitional quantile on the fully expanded, sorted sample: q_hat =
-    the min(n, ceil(0.9(n+1)))-th smallest value, coverage = fraction
-    <= q_hat. Duplicate values in the generated list exercise the
-    merge-by-value path."""
-    import math
-
-    from tfl_realtime_lakehouse_spark.streaming.conformal import (
-        conformal_from_hist,
-    )
-
-    merged = {}
-    for v, c in hist:
-        merged[v] = merged.get(v, 0) + c
-    vals = sorted(merged)
-    cnts = [merged[v] for v in vals]
-
-    expanded = sorted(v for v, c in merged.items() for _ in range(c))
-    n = len(expanded)
-    idx = min(n, math.ceil(0.9 * (n + 1)))
-    q_ref = expanded[idx - 1]
-    cov_ref = round(sum(1 for v in expanded if v <= q_ref) / n, 6)
-
-    got_n, got_q, got_cov = conformal_from_hist(vals, cnts)
-    assert got_n == n
-    assert got_q == round(q_ref, 6)
-    assert got_cov == cov_ref

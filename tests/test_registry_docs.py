@@ -4,6 +4,7 @@ for a judge)."""
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -55,3 +56,144 @@ def test_survey_x_rows_reference_registered_queries():
     assert len(rows) >= 100
     missing = [n for n in rows if n not in REGISTRY]
     assert not missing, f"SURVEY §2.12 cites unregistered queries: {missing}"
+
+
+# Top-level operators/ functions that no query, stream, pipeline or CLI
+# path runs but that stay, each with its reason.
+_KEPT_TEST_REFERENCES = {
+    "operators.dedup.cluster_assignments": (
+        "the un-contracted reference dedup_clusters is checked against"
+    ),
+    "operators.dedup.fuzzy_levenshtein_pairs": (
+        "the contracted entry point every *_reps pair operator has"
+    ),
+    "operators.layout.zvalue_py": "pure-Python oracle for interleave_bits",
+    "operators.sketches.countmin_merge": "public Count-Min sketch merge helper",
+    "operators.sampling.stratified_sample": "public per-stratum sampling helper",
+    "operators.multimodal.gradient_params": (
+        "id-to-gradient model the synthetic PNG assets are checked against"
+    ),
+}
+
+
+def _top_level(body):
+    """Module-level statements, descending into if/try/with blocks."""
+    for node in body:
+        if isinstance(node, (ast.If, ast.Try, ast.With)):
+            blocks = [node.body, getattr(node, "orelse", []), getattr(node, "finalbody", [])]
+            blocks += [h.body for h in getattr(node, "handlers", [])]
+            for block in blocks:
+                yield from _top_level(block)
+        else:
+            yield node
+
+
+def _package_graph(pkg_root: Path):
+    """Parse the package: top-level definitions, import bindings and
+    module-level code per module (names relative to the package)."""
+    modules = {}
+    for path in sorted(pkg_root.rglob("*.py")):
+        rel = path.relative_to(pkg_root).with_suffix("")
+        parts = rel.parts[:-1] if rel.name == "__init__" else rel.parts
+        modules[".".join(parts)] = ast.parse(path.read_text())
+    prefix = pkg_root.name + "."
+    defs, binds, module_code = {}, {}, {}
+    for mod, tree in modules.items():
+        b = binds[mod] = {}
+        code = module_code[mod] = []
+        for node in _top_level(tree.body):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[f"{mod}.{node.name}"] = node
+                code += node.decorator_list
+                if not isinstance(node, ast.ClassDef):
+                    code += node.args.defaults
+                    code += [d for d in node.args.kw_defaults if d is not None]
+            else:
+                code.append(node)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(prefix):
+                src = node.module[len(prefix):]
+                for a in node.names:
+                    b[a.asname or a.name] = f"{src}.{a.name}"
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith(prefix) and a.asname:
+                        b[a.asname] = a.name[len(prefix):]
+    return modules, defs, binds, module_code
+
+
+def _reachable(modules, defs, binds, roots):
+    """Every definition transitively referenced from ``roots`` (a list of
+    (module, AST node) pairs)."""
+
+    def resolve(name: str):
+        for _ in range(8):  # follow re-export chains
+            if name in defs or name in modules:
+                return name
+            mod, _, attr = name.rpartition(".")
+            target = binds.get(mod, {}).get(attr)
+            if target is None:
+                return None
+            name = target
+        return None
+
+    def refs(mod, node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                name = binds[mod].get(n.id, f"{mod}.{n.id}")
+            elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                base = resolve(binds[mod].get(n.value.id, f"{mod}.{n.value.id}"))
+                if base not in modules:
+                    continue
+                name = f"{base}.{n.attr}"
+            else:
+                continue
+            hit = resolve(name)
+            if hit in defs:
+                yield hit
+
+    seen: set[str] = set()
+    stack = list(roots)
+    while stack:
+        mod, node = stack.pop()
+        for hit in refs(mod, node):
+            if hit not in seen:
+                seen.add(hit)
+                stack.append((hit.rpartition(".")[0], defs[hit]))
+    return seen
+
+
+def test_every_operator_has_a_caller():
+    """Every top-level ``operators/`` function is run by a registered
+    query, a public streaming/plans/sources/dq/cli entry point or
+    module-level code, transitively, or is a named test reference. A
+    second implementation that nothing runs fails here."""
+    pkg_root = Path(__file__).resolve().parents[1] / "tfl_realtime_lakehouse_spark"
+    modules, defs, binds, module_code = _package_graph(pkg_root)
+    entry_pkgs = ("streaming", "plans", "sources", "dq", "cli")
+    roots = [(mod, node) for mod, code in module_code.items() for node in code]
+    for name, node in defs.items():
+        mod, _, short = name.rpartition(".")
+        registered = any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in getattr(node, "decorator_list", [])
+        )
+        public_entry = mod.split(".")[0] in entry_pkgs and not short.startswith("_")
+        if registered or public_entry:
+            roots.append((mod, node))
+    seen = _reachable(modules, defs, binds, roots)
+    operators = {
+        name
+        for name, node in defs.items()
+        if name.startswith("operators.")
+        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    stale = sorted(set(_KEPT_TEST_REFERENCES) - operators)
+    assert not stale, f"kept test references that no longer exist: {stale}"
+    unreached = sorted(operators - seen - set(_KEPT_TEST_REFERENCES))
+    assert not unreached, (
+        f"{len(unreached)} operators/ functions have no query, stream, "
+        f"pipeline or CLI caller: {unreached}"
+    )
+    needless = sorted(set(_KEPT_TEST_REFERENCES) & seen)
+    assert not needless, f"kept test references that now have a caller: {needless}"

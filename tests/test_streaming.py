@@ -96,95 +96,17 @@ def test_gold_hourly_stream_windows(spark, bronze_dir, tmp_path):
     assert got[("victoria", "S1", "2025-01-01T10:00:00")] == 1
 
 
-def test_transform_with_state_headways_match_batch(spark, bronze_dir, tmp_path):
-    from tfl_realtime_lakehouse_spark.streaming.headways import streaming_headways_tws
-
-    if streaming_headways_tws is None:
-        pytest.skip("transformWithStateInPandas unavailable")
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        # Environmentally impossible, not a coverage gap: Spark 4's
-        # transformWithStateInPandas serializes state through protobuf,
-        # the sandbox has no `google.protobuf` and no network to fetch
-        # it (pip resolution fails with NewConnectionError — probed
-        # 2026-08-14, see COVERAGE.md "Environment-gated branches").
-        # The applyInPandasWithState implementation of the SAME stateful
-        # per-key gap semantics is fully exercised against batch
-        # equivalence by test_stateful_gap_headways_match_batch; this
-        # test exists so the TWS variant lights up automatically in any
-        # environment that has protobuf.
-        pytest.skip(
-            "transformWithState runtime needs the python protobuf package: "
-            "absent here and unfetchable (no network). "
-            "applyInPandasWithState covers the same T5 semantics."
-        )
-    # transformWithState requires the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    raw_batch = spark.read.option("basePath", bronze_dir).parquet(f"{bronze_dir}/date=*")
-    batch = {
-        (r.line_id, r.stop_id, r.event_ts): r.headway_s
-        for r in headway_events(stg_arrivals(raw_batch)).collect()
-    }
-    stream = streaming_headways_tws(stg_arrivals(read_bronze_stream(spark, bronze_dir)))
-    _run_stream(stream, tmp_path, "headways_tws")
-    try:
-        got = {
-            (r.line_id, r.stop_id, r.event_ts): r.headway_s
-            for r in spark.sql(
-                "select * from headways_tws where headway_s is not null"
-            ).collect()
-        }
-        assert got == batch
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_tws_processor_state_contract_matches_apply_in_pandas_twin():
-    """Execute the TWS surface WITHOUT the protobuf runtime: protobuf is
-    only the state-serialization transport between the Python worker
-    and the JVM — the operator's entire logic lives in
-    ``HeadwayProcessor.init/handleInputRows``, which this test drives
-    directly with a stub handle. Feeding identical multi-batch streams
-    (in-order, out-of-order, cross-batch carry) to the processor AND to
-    ``_headway_state_fn`` (the applyInPandasWithState twin the cluster
-    test exercises end-to-end) must produce identical emitted rows AND
-    identical persisted state after every batch — the 'identical state
-    contract' claim, now executed instead of asserted in prose. The
-    end-to-end TWS test above still lights up wherever protobuf exists."""
+    """The per-key state contract of ``_headway_state_fn`` (the
+    applyInPandasWithState function ``streaming_headways`` runs), driven
+    directly with a stub GroupState over four micro-batches: in-order
+    arrivals, a late event versus state (NULL gap, state keeps the max),
+    an empty batch (no rows, state unchanged) and a duplicate timestamp
+    (0 s gap). Emitted (event_ts, headway_s) rows and the persisted
+    last-arrival state are checked after every batch."""
     import pandas as pd
 
     from tfl_realtime_lakehouse_spark.streaming import headways as H
-
-    if H.streaming_headways_tws is None:
-        pytest.skip("transformWithStateInPandas API unavailable")
-
-    class StubValueState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = tuple(v)
-
-    class StubHandle:
-        def __init__(self):
-            self.states = {}
-
-        def getValueState(self, name, schema):
-            return self.states.setdefault(name, StubValueState())
 
     class StubGroupState:
         def __init__(self):
@@ -201,38 +123,43 @@ def test_tws_processor_state_contract_matches_apply_in_pandas_twin():
         def update(self, v):
             self.v = tuple(v)
 
-    batches = [  # (ts list per batch) incl. out-of-order + duplicates
-        ["2025-01-01T10:00:00", "2025-01-01T10:04:00"],
-        ["2025-01-01T10:10:00", "2025-01-01T10:02:00"],  # 10:02 late
-        [],
-        ["2025-01-01T11:07:00", "2025-01-01T11:07:00"],
+    def us(ts):
+        return int(pd.Timestamp(ts).value // 1000)
+
+    steps = [  # (batch timestamps, expected rows, expected state)
+        (
+            ["2025-01-01T10:00:00", "2025-01-01T10:04:00"],
+            [("2025-01-01T10:00:00", None), ("2025-01-01T10:04:00", 240.0)],
+            "2025-01-01T10:04:00",
+        ),
+        (
+            ["2025-01-01T10:10:00", "2025-01-01T10:02:00"],  # 10:02 late
+            [("2025-01-01T10:02:00", None), ("2025-01-01T10:10:00", 360.0)],
+            "2025-01-01T10:10:00",
+        ),
+        ([], [], "2025-01-01T10:10:00"),
+        (
+            ["2025-01-01T11:07:00", "2025-01-01T11:07:00"],
+            [("2025-01-01T11:07:00", 3420.0), ("2025-01-01T11:07:00", 0.0)],
+            "2025-01-01T11:07:00",
+        ),
     ]
     key = ("central", "S1")
-
-    proc = H.HeadwayProcessor()
-    handle = StubHandle()
-    proc.init(handle)
-    twin_state = StubGroupState()
-
-    for ts_list in batches:
+    state = StubGroupState()
+    for ts_list, want_rows, want_state in steps:
         pdf = pd.DataFrame({"event_ts": pd.to_datetime(ts_list)})
-        got_tws = pd.concat(
-            list(proc.handleInputRows(key, iter([pdf.copy()]), None)),
+        out = pd.concat(
+            list(H._headway_state_fn(key, iter([pdf]), state)),
             ignore_index=True,
         )
-        got_twin = pd.concat(
-            list(H._headway_state_fn(key, iter([pdf.copy()]), twin_state)),
-            ignore_index=True,
-        )
-        pd.testing.assert_frame_equal(got_tws, got_twin)
-        # persisted state identical after every batch
-        assert handle.states["last_us"].v == twin_state.v
-
-    # cross-batch ground truth: gaps against the max-so-far watermark
-    assert handle.states["last_us"].v == (
-        int(pd.Timestamp("2025-01-01T11:07:00").value // 1000),
-    )
-    proc.close()
+        got_rows = [
+            (pd.Timestamp(ts), None if pd.isna(gap) else gap)
+            for ts, gap in zip(out["event_ts"], out["headway_s"])
+        ]
+        assert got_rows == [(pd.Timestamp(t), g) for t, g in want_rows]
+        assert set(out["line_id"]) <= {"central"}
+        assert set(out["stop_id"]) <= {"S1"}
+        assert state.v == (us(want_state),)
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
@@ -1907,9 +1834,12 @@ def test_streaming_conformal_matches_batch_query(spark, tmp_path):
     micro-batches, each lang's (n, q_hat, coverage) must equal the
     BATCH eval_conformal_thresholds query over the union of the
     batches' rows — bit-for-bit (the nonconformity is the same JVM
-    expression tree; the histogram merge is exact integer addition)."""
+    expression tree; the histogram merge is exact integer addition).
+    The stream maintains the (lang, a, cnt) histogram; the latest row
+    per (lang, a) goes through the batch readout."""
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
     from tfl_realtime_lakehouse_spark.streaming.conformal import (
+        conformal_readout,
         streaming_conformal_thresholds,
     )
 
@@ -1924,9 +1854,8 @@ def test_streaming_conformal_matches_batch_query(spark, tmp_path):
     b2 = [doc(200 + i, "en", 45 + i % 30) for i in range(50)] + [
         doc(300 + i, "zh", 10 + i % 50) for i in range(30)
     ] + [(901, None, "fr", "s0", 0)]
-    # the null-text docs must be excluded IDENTICALLY on both sides
-    # (r6 ADVICE: value_counts dropped NaN while the batch query kept
-    # a NULL group) — equality below is only meaningful if they exist
+    # the null-text docs must be excluded IDENTICALLY on both sides —
+    # equality below is only meaningful if they exist
     src = str(tmp_path / "conf-src")
     spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f=1")
     spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f=2")
@@ -1938,10 +1867,18 @@ def test_streaming_conformal_matches_batch_query(spark, tmp_path):
     )
     out = streaming_conformal_thresholds(stream)
     _run_stream(out, tmp_path, "conf_out", mode="update")
-    rows = spark.sql("select * from conf_out").collect()
-    final = {}
-    for r in rows:  # last emission per lang wins
-        final[r["lang"]] = (r["n"], r["q_hat"], r["coverage"])
+    latest = {}
+    for r in spark.sql("select * from conf_out").collect():
+        k = (r["lang"], r["a"])
+        if k not in latest or r["cnt"] > latest[k]["cnt"]:
+            latest[k] = r
+    hist = spark.createDataFrame(
+        list(latest.values()), "lang string, a double, cnt long"
+    )
+    final = {
+        r["lang"]: (r["n"], r["q_hat"], r["coverage"])
+        for r in conformal_readout(hist).collect()
+    }
 
     # batch reference: the registered query over the union parquet
     union_dir = str(tmp_path / "conf-union")
@@ -3384,12 +3321,16 @@ _SUM_STATE_TWINS = {
         "streaming_centroid_drift",
         "vec_id long, embedding array<float>, label int",
     ),
+    "conformal": (
+        "streaming_conformal_thresholds",
+        "doc_id long, text string, lang string, source string, n_chars long",
+    ),
 }
 
 
 @pytest.mark.parametrize("module", sorted(_SUM_STATE_TWINS))
 def test_sum_state_twins_are_native_streaming_aggregates(spark, tmp_path, module):
-    """The five twins whose state is a per-key sum or count run as
+    """The twins whose state is a per-key sum or count run as
     native streaming aggregates: no Python state function in the
     analyzed plan, one Aggregate that the engine incrementalizes."""
     import importlib

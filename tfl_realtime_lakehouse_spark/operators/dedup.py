@@ -375,73 +375,6 @@ def ngram_jaccard_pairs_reps(
     return out
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs with PPJoin-style pruning — the
-    at-scale variant of :func:`ngram_jaccard_pairs`.
-
-    Two exact prunes before any pair is generated (Bayardo et al. 2007):
-    - **length filter**: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so only
-      pairs with |B| ≥ t·|A| can qualify;
-    - **prefix filter**: order every document's shingles by ascending
-      global document frequency (rarest first); any pair with J ≥ t
-      must share a shingle within each side's first
-      ``|S| - ⌈t·|S|⌉ + 1`` shingles under that order.
-
-    Candidates come from an equi-join on *prefix* shingles only — the
-    hottest (most frequent) shingles fall outside most prefixes, which
-    is exactly what kills the posting-list blowup on skewed corpora.
-    Survivors are verified with the exact set intersection.
-
-    When to use which (measured on the sf0.1 corpus): at t=0.2 the
-    prefix is 80% of every set, so the DF computation + per-doc ranking
-    outweigh the pruning and the plain posting join wins (~6 s vs
-    ~12 s); at t ≳ 0.5 the prefix shrinks to ≲ half the set and this
-    variant dominates, increasingly so with shingle-frequency skew.
-    """
-    sets_ = df.select(
-        F.col(id_col), F.array_distinct(shingles(text_col, n)).alias("sh")
-    ).withColumn("size", F.size("sh"))
-
-    posts = sets_.select(id_col, "size", F.explode("sh").alias("sh"))
-    dfreq = posts.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    prefix_len = (F.col("size") - F.ceil(F.lit(threshold) * F.col("size")) + 1).cast(
-        "int"
-    )
-    ranked = (
-        posts.join(dfreq, "sh")
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy("df", "sh")
-            ),
-        )
-        .filter(F.col("rank") <= prefix_len)
-        .select(id_col, "size", "sh")
-    )
-    a, b = ranked.alias("a"), ranked.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            # length filter: smaller/larger ≥ t
-            & (F.col("b.size") >= F.lit(threshold) * F.col("a.size"))
-            & (F.col("a.size") >= F.lit(threshold) * F.col("b.size")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .distinct()
-    )
-    return verify_pairs_jaccard(df, cands, text_col, id_col, n, threshold)
-
-
 def verify_pairs_jaccard(
     df: DataFrame,
     pairs: DataFrame,

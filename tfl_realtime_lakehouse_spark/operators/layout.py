@@ -11,7 +11,8 @@ one Morton key makes every z-contiguous file cover a small HYPERCUBE
 of the filter space, so min/max file statistics (or a z-prefix
 partition directory) prune on ALL interleaved dimensions at once —
 the same mechanism Delta's OPTIMIZE ZORDER BY and Iceberg's
-sort-order z-curves use.
+sort-order z-curves use. :func:`~tfl_realtime_lakehouse_spark.sources.
+bucketing.zorder_write` is the writer built on this key.
 
 Everything here is pure integer arithmetic (shifts/masks composed as
 JVM expressions — whole-stage codegen, zero Python, and an exact SQL
@@ -20,7 +21,7 @@ oracle on any engine with << >> & |).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -52,37 +53,6 @@ def fixed_width_bin(col: Column, width: float, bins: int = 256) -> Column:
     stable as data grows (new data maps into the same grid)."""
     return F.least(
         F.floor(col / F.lit(width)).cast("long"), F.lit(int(bins - 1))
-    )
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    zcol: Column,
-    prefix_bits: int = 4,
-    total_bits: int = 16,
-) -> None:
-    """Write ``df`` z-clustered: partition directories on the z-prefix
-    (coarse pruning via partition discovery — the S7 mechanism, now
-    multi-dimensional) and range-sorted by full z-value within each
-    partition (fine pruning via parquet row-group min/max stats).
-
-    At 100 TB: the z-prefix keeps directory counts bounded (2^prefix_
-    bits), `repartitionByRange` on the full z-value gives each output
-    file a tight z-interval → a tight hypercube of every interleaved
-    dimension; a conjunctive filter on any subset of those dimensions
-    maps to a small set of prefixes (pruned by the catalog) and then a
-    small set of row groups (pruned by stats).
-    """
-    shift = total_bits - prefix_bits
-    (
-        df.withColumn("z", zcol)
-        .withColumn("z_prefix", F.shiftright(F.col("z"), shift))
-        .repartitionByRange("z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .partitionBy("z_prefix")
-        .parquet(path)
     )
 
 

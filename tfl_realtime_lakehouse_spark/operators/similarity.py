@@ -310,7 +310,6 @@ def hyperplane_lsh_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_rows: int | None = None,
-    dims: int | None = None,
 ) -> DataFrame:
     """Random-hyperplane (sign) LSH near-neighbour pairs.
 
@@ -342,7 +341,6 @@ def hyperplane_lsh_pairs(
 
     import numpy as np
 
-    del dims  # retained for API compat; dims now read from the first batch
     if bits is None:
         # auto-tune bucket width to corpus size: target ~16 vectors per
         # bucket so candidate generation stays ~O(n · tables · bucket).
@@ -1942,101 +1940,21 @@ def kcenter_select(
     return sel
 
 
-def pca_train(
-    corpus: DataFrame,
-    k: int = 8,
-    vec_col: str = "embedding",
-):
-    """Distributed PCA training: exact covariance via per-batch BLAS
-    partials, eigendecomposition on the driver.
-
-    Scale shape (the kmeans/BPE/PQ bounded-model-state argument): each
-    Arrow batch contributes one (d, d+1) partial — Xᵀ X plus the column
-    sums — so the shuffle is |batches|·d² floats regardless of corpus
-    size, and the only driver state is the d×d covariance (d = 64 here;
-    a 4 KB matrix). Eigen-decomposition of a d×d symmetric matrix is
-    O(d³) driver work — model-sized, corpus-independent.
-
-    Determinism: float64 covariance partials are summed by Spark
-    (order-variant at the last ulp, like every float reduce), then
-    symmetrized; numpy's LAPACK ``eigh`` is deterministic for a given
-    matrix. Components get a sign convention (largest-|coefficient|
-    entry positive, ties to the earlier index) so the basis is unique
-    up to eigenvalue degeneracy. The differential pytest pins the
-    projection against a single-machine numpy PCA; the registered
-    query is rows-only (no SQL eigen).
-
-    Returns (mean: list[float], components: list[list[float]] — k rows
-    of d, in decreasing-eigenvalue order, eigvals: list[float]).
-    """
-    import numpy as np
-
-    d = len(corpus.select(vec_col).first()[0])
-
-    part_schema = T.StructType(
-        [
-            T.StructField("n", T.LongType()),
-            T.StructField("sums", T.ArrayType(T.DoubleType())),
-            T.StructField("xtx", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            yield pd.DataFrame(
-                {
-                    "n": [x.shape[0]],
-                    "sums": [x.sum(axis=0).tolist()],
-                    "xtx": [(x.T @ x).ravel().tolist()],
-                }
-            )
-
-    rows = (
-        fan_out(corpus.select(vec_col))
-        .mapInPandas(partials, part_schema)
-        .collect()
-    )  # |batches| rows of (1 + d + d²) doubles — model-sized by design
-    n = sum(r["n"] for r in rows)
-    sums = np.zeros(d)
-    xtx = np.zeros((d, d))
-    for r in rows:
-        sums += np.asarray(r["sums"])
-        xtx += np.asarray(r["xtx"]).reshape(d, d)
-    mean = sums / n
-    cov = xtx / n - np.outer(mean, mean)
-    cov = (cov + cov.T) / 2.0
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:k]
-    comps = []
-    for idx in order:
-        v = vecs[:, idx].copy()
-        j = int(np.argmax(np.abs(v)))
-        if v[j] < 0:
-            v = -v
-        comps.append(v.tolist())
-    return mean.tolist(), comps, [float(vals[i]) for i in order]
-
-
 def pca_cov_exact(corpus: DataFrame, vec_col: str = "embedding", dims: int = 64):
     """Decimal-exact covariance: the cross-engine-deterministic input
     the verifiable PCA tier (:func:`pca_train_iter`) needs.
 
-    The BLAS-partials path (:func:`pca_train`) sums float64 partials on
-    the driver — order-variant at the last ulp, which a near-degenerate
-    spectrum amplifies into O(ulp/gap) basis rotation (measured on this
-    corpus: adjacent eigenvalue ratios ≈ 0.99). This tier instead
-    stages every product xᵢ·xⱼ in double (one IEEE multiply) and sums
-    as DECIMAL(38,12) — exact, order-free, bit-identical in any engine.
-    Plan: posexplode to (row, i, xᵢ), self-join per row for the d²
-    products, ONE map-side-combined hash agg onto d² = 4096 keys — the
-    shuffle carries partitions·d² decimal rows, never corpus-sized.
-    (The d²-per-row map-side expansion is the price of exactness;
-    production training keeps the BLAS-partials path.)
+    Summing float64 partials is order-variant at the last ulp, which a
+    near-degenerate spectrum amplifies into O(ulp/gap) basis rotation
+    (measured on this corpus: adjacent eigenvalue ratios ≈ 0.99). This
+    covariance instead stages every product xᵢ·xⱼ in double (one IEEE
+    multiply) and sums as DECIMAL(38,12) — exact, order-free,
+    bit-identical in any engine. Plan: one nested-transform HOF emits
+    the count marker, the d mean entries and the d² products per
+    distinct vector, and ONE map-side-combined hash agg folds them onto
+    1 + d + d² keys — the shuffle carries partitions·d² decimal rows,
+    never corpus-sized. The d²-per-row map-side expansion is the price
+    of exactness.
 
     Returns (n, mean: list, cov: list[list]) with mean/cov derived by
     the pinned tree  meanᵢ = dbl(Sᵢ)/n,  covᵢⱼ = dbl(Sxxᵢⱼ)/n − mᵢ·mⱼ
@@ -2222,45 +2140,6 @@ def pca_project_fold(
         pc = F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
         cols.append(F.round(pc, 6).alias(f"pc{c}"))
     return corpus.select(*cols)
-
-
-def pca_project(
-    corpus: DataFrame,
-    mean,
-    components,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_col: str = "pc",
-) -> DataFrame:
-    """Project vectors onto trained components: one Arrow-batched BLAS
-    matmul per batch against the broadcast (k × d) basis — map-only,
-    zero shuffle, the serving half of :func:`pca_train`."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    b_mean = spark.sparkContext.broadcast(np.asarray(mean, dtype=np.float64))
-    b_w = spark.sparkContext.broadcast(np.asarray(components, dtype=np.float64))
-
-    id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField(out_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def project(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        mu, w = b_mean.value, b_w.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            p = (x - mu) @ w.T
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: list(p)})
-
-    return fan_out(corpus.select(id_col, vec_col)).mapInPandas(project, out_schema)
 
 
 def rademacher_signs(tag: str, table: int, bit: int, dims: int):

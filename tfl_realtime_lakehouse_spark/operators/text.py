@@ -44,24 +44,6 @@ def stopword_count(text: Column | str, stopwords=EN_STOPWORDS) -> Column:
     return F.size(F.filter(tokens(text), lambda w: w.isin(*stopwords)))
 
 
-def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / token / stopword-ratio quality features per document
-    (the classic pre-training quality-filter feature set)."""
-    ntok = token_count(text_col)
-    nstop = stopword_count(text_col)
-    return df.withColumns(
-        {
-            "n_chars_m": F.length(text_col),
-            "n_tokens": ntok,
-            "n_stopwords": nstop,
-            "stopword_ratio": nstop.cast("double") / ntok,
-            "avg_token_len": (
-                (F.length(text_col) - ntok + 1).cast("double") / ntok
-            ),
-        }
-    )
-
-
 def lang_id(text: Column | str, stopwords=EN_STOPWORDS, min_ratio: float = 0.02) -> Column:
     """N-gram/function-word language-ID heuristic: predict 'en' when the
     English function-word ratio clears a threshold, else 'und'."""
@@ -453,78 +435,6 @@ def bm25_scores(
         ).otherwise(zero)
     return matched.select(
         F.col(id_col), F.round(total.cast("double"), 6).alias("score")
-    )
-
-
-def mg_heavy_hitters(
-    df: DataFrame,
-    col: str = "text",
-    capacity: int = 64,
-    split: str = " ",
-) -> DataFrame:
-    """Misra–Gries heavy hitters over an unbounded token stream — the
-    mergeable frequent-items sketch for when exact ``groupBy(token)``
-    state would itself be the bottleneck (the token universe at 100 TB
-    does not fit a shuffle).
-
-    Each partition summarizes its tokens with a ``capacity``-slot
-    Misra–Gries sketch inside an Arrow-batched ``mapInPandas`` kernel
-    (O(capacity) state per task, one pass); the per-partition summaries
-    — at most ``capacity`` rows each — are then summed by token, which
-    is the standard MG merge followed by dropping nothing (keeping the
-    sums preserves the guarantee below and stays a lower bound).
-
-    Guarantees (Misra–Gries, merged): for every token,
-    ``true_count - n_total / capacity <= emitted_sum <= true_count``,
-    and every token with true frequency > ``n_total / capacity``
-    appears in the output. The output is a CANDIDATE SET with bounded
-    undercount — callers wanting exact counts re-count just the
-    candidates (a broadcast semi-join), never the full universe.
-
-    Caveat: emitted sums depend on partition boundaries (any MG sketch
-    is order-dependent within its error bound), so this operator is
-    deliberately not oracle-registered; its contract is pinned by the
-    guarantee-based pytest instead.
-    """
-    import pandas as pd
-
-    def _mg(batches):
-        counters: dict[str, int] = {}
-        n_seen = 0
-        for pdf in batches:
-            for text in pdf[col]:
-                if text is None:
-                    continue
-                for tok in str(text).split(split):
-                    if not tok:
-                        continue
-                    n_seen += 1
-                    if tok in counters:
-                        counters[tok] += 1
-                    elif len(counters) < capacity:
-                        counters[tok] = 1
-                    else:
-                        # decrement-all: the MG step that buys the bound
-                        dead = []
-                        for k in counters:
-                            counters[k] -= 1
-                            if counters[k] == 0:
-                                dead.append(k)
-                        for k in dead:
-                            del counters[k]
-        yield pd.DataFrame(
-            {
-                "token": list(counters.keys()),
-                "mg_count": list(counters.values()),
-                "part_tokens": [n_seen] * len(counters),
-            }
-        )
-
-    summaries = df.select(col).mapInPandas(
-        _mg, schema="token string, mg_count long, part_tokens long"
-    )
-    return summaries.groupBy("token").agg(
-        F.sum("mg_count").alias("mg_count"),
     )
 
 

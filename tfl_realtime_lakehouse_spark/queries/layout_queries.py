@@ -52,8 +52,9 @@ def _zorder_oracle_sql() -> str:
     doc="Z-order (Morton) clustering audit: orders binned on customer "
     "and price band, bits interleaved into a 16-bit z-value (pure "
     "shift/mask JVM fold — codegen, zero Python), grouped by the 8-bit "
-    "z-prefix used as the partition directory key by "
-    "operators/layout.zorder_write. Each prefix's (min,max) per "
+    "z-prefix: the coarse z-range a file of sources/bucketing."
+    "zorder_write covers (it range-partitions on the same "
+    "interleave_bits key). Each prefix's (min,max) per "
     "dimension demonstrates the hypercube property — every prefix "
     "covers ≤ 16×16 of the 256×256 grid, which is exactly why a "
     "conjunctive filter on EITHER dimension prunes most prefixes "

@@ -192,10 +192,9 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Exact 3-gram Jaccard near-dup pairs via inverted-index join "
     "(posting lists), NOT an n² cross join — the oracle brute-forces "
-    "the same semantics. (At high thresholds switch to the PPJoin-style "
-    "operators.dedup.ngram_jaccard_pairs_prefix, measured: prefix "
-    "pruning only pays when t ≳ 0.5 — at t=0.2 the prefix is 80% of "
-    "each set and the DF-ranking overhead dominates.)",
+    "the same semantics. (PPJoin-style prefix pruning was measured "
+    "slower here: at t=0.2 the prefix is 80% of each set and the "
+    "DF-ranking overhead dominates; it only pays when t ≳ 0.5.)",
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(
@@ -968,9 +967,9 @@ def _bpe_oracle_sql(num_merges: int = 12) -> str:
     The greedy-left merge application encodes each word's symbol array
     as a chr(31)-delimited string (``US sym US US sym US ... US``, one
     separator on each flank of every symbol) so ONE ``replace(s,
-    US||a||US||US||b||US, US||a||b||US)`` is exactly the operator's
-    left-to-right non-overlapping fold (:func:`operators.bpe
-    ._merge_fold`): replace scans left-to-right and resumes after each
+    US||a||US||US||b||US, US||a||b||US)`` is exactly the trainer's
+    left-to-right non-overlapping pass (:func:`operators.bpe
+    .apply_merges_py`): replace scans left-to-right and resumes after each
     substitution, and the flanking separators survive in the
     replacement so adjacent matches stay joinable. chr(31) is verified
     absent from the corpus (probe committed with this oracle).
@@ -1053,7 +1052,8 @@ def _bpe_oracle_sql(num_merges: int = 12) -> str:
     "distinct-word table: one distributed pass counts words, the "
     "standard frequency truncation bounds the vocab, and the merge loop "
     "runs on that bounded state (deterministic count-desc/pair-asc "
-    "argmax; identical rules to the all-Spark round loop, tested). Then "
+    "argmax; identical rules to an unbounded Python model, tested). "
+    "Then "
     "tokenize every "
     "document by replaying the rules in rank order through an "
     "Arrow-batched kernel with a per-batch word cache.",
@@ -1536,10 +1536,9 @@ def dedup_normalized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "junk before a tokenizer ever sees the data. Plan: one exact "
     "word count (map-side combined), a top-k cut that is MODEL-sized "
     "(the vocabulary) and broadcasts into a semi join against the "
-    "token stream, one per-doc aggregate keyed by doc_id. At 100 TB "
-    "the vocab cut swaps to the Misra-Gries candidates + re-count "
-    "path the engine already ships; the per-doc scoring plan is "
-    "unchanged.",
+    "token stream, one per-doc aggregate keyed by doc_id. The "
+    "vocabulary cut is exact; the word count is the only corpus-sized "
+    "aggregate.",
 )
 def text_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window

@@ -144,16 +144,32 @@ def sample_uncertainty_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "documents are EXCLUDED explicitly on both engines: a doc with no "
     "text can't enter a calibration set, the engines disagree on what "
     "its score even is (Spark size(split(NULL)) = -1, DuckDB "
-    "LEN(STRING_SPLIT(NULL)) = NULL), and the streaming twin's pandas "
-    "histogram silently drops NaN (r6 ADVICE) — so the filter is on "
-    "text itself, applied identically batch-side and stream-side.",
+    "LEN(STRING_SPLIT(NULL)) = NULL) — so the filter is on text "
+    "itself, inside the histogram aggregation the streaming twin "
+    "runs too.",
 )
 def eval_conformal_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()
-    )
+    return _conformal_readout(_conformal_hist(table(spark, sf_dir, "documents")))
+
+
+def _conformal_hist(docs: DataFrame) -> DataFrame:
+    """Per-(lang, a) counts over the 6-dp-rounded nonconformity ``a`` of
+    the non-null-text documents: a mergeable histogram over a bounded
+    value space. The streaming twin (``streaming/conformal.py``) runs
+    this same aggregation in update mode."""
     a = F.round(F.lit(1.0) - _score_col(), 6)
-    c = docs.groupBy("lang", a.alias("a")).agg(F.count(F.lit(1)).alias("cnt"))
+    return (
+        docs.where(F.col("text").isNotNull())
+        .groupBy("lang", a.alias("a"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _conformal_readout(c: DataFrame) -> DataFrame:
+    """Per-lang (n, q_hat, coverage) over the ``_conformal_hist`` table,
+    shared by the batch query and the streaming twin: the
+    min(n, ceil(0.9·(n+1)))-th smallest value via one cumulative window
+    over the histogram."""
     t = c.groupBy("lang").agg(F.sum("cnt").alias("n"))
     cum = c.withColumn(
         "cum", F.sum("cnt").over(Window.partitionBy("lang").orderBy("a"))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tfl_realtime_lakehouse_spark.operators.layout import interleave_bits
 from tfl_realtime_lakehouse_spark.sources.tables import drop_table_and_location
 
 
@@ -70,20 +71,6 @@ def write_clustered(
     )
 
 
-def zorder_key(bucketed, bits: int):
-    """Interleave the bits of pre-bucketed integer columns into one
-    Morton (Z-order) key: column c's bit i lands at position
-    ``i * n_cols + c``. Pure JVM bit ops — codegen keeps the ~2·bits
-    term chain in one projection."""
-    n = len(bucketed)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for ci, b in enumerate(bucketed):
-            bit = F.shiftright(b, i).bitwiseAND(F.lit(1)).cast("long")
-            z = z + F.shiftleft(bit, i * n + ci)
-    return z
-
-
 def zorder_write(
     df: DataFrame,
     path: str,
@@ -108,7 +95,8 @@ def zorder_write(
        aggregate (2·n values to the driver, same bounded pattern as
        IVF centroids). Uniform-ish columns bucket well linearly;
        heavily skewed columns would want quantile cut points instead.
-    2. bit-interleave into the Z key (:func:`zorder_key`);
+    2. bit-interleave into the Z key (:func:`operators.layout
+       .interleave_bits`: bit i of column c lands at ``i * n_cols + c``);
     3. range-repartition + in-partition sort on the key — the exact
        ``write_clustered`` machinery, now over a space-filling curve.
     """
@@ -124,7 +112,7 @@ def zorder_write(
             mx = mn + 1.0
         wb = F.width_bucket(F.col(c).cast("double"), F.lit(mn), F.lit(mx), F.lit(n_buckets))
         bucketed.append(F.least(wb - 1, F.lit(n_buckets - 1)).cast("int"))
-    z = zorder_key(bucketed, bits)
+    z = interleave_bits(bucketed, bits)
     (
         df.withColumn("_z", z)
         .repartitionByRange(num_files, F.col("_z"))

@@ -42,18 +42,20 @@ def _is_delta_table(spark: SparkSession, path: str) -> bool:
     return DeltaTable.isDeltaTable(spark, path)  # pragma: no cover
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path`` under the session's Hadoop conf."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _atomic_swap(spark: SparkSession, new_table: DataFrame, target_path: str) -> None:
     """Write-new-then-rename: the parquet stand-in for a transactional
     commit (single-writer safe; a lakehouse format replaces this)."""
     tmp = target_path + ".tmp"
     new_table.write.mode("overwrite").parquet(tmp)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(target_path)
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    fs = dst.getFileSystem(conf)
+    fs, dst = _hadoop_path(spark, target_path)
     fs.delete(dst, True)
-    fs.rename(src, dst)
+    fs.rename(_hadoop_path(spark, tmp)[1], dst)
 
 
 def merge_upsert(
@@ -89,11 +91,14 @@ def merge_upsert(
         updates.write.format("delta").mode("append").save(target_path)
         return
 
-    try:
+    fs, path = _hadoop_path(spark, target_path)
+    if fs.exists(path):
+        # Any read or schema error raises: a drifted ``updates`` must
+        # never be mistaken for a first write and replace the table.
         target = spark.read.parquet(target_path)
         kept = target.join(delete_keys, keys, "left_anti")
         new_table = kept.unionByName(updates)
-    except Exception:  # first write: no target yet
+    else:  # first write: no target yet
         new_table = updates
     _atomic_swap(spark, new_table, target_path)
 
@@ -170,10 +175,7 @@ def compact_files(
     """
     import math
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = root.getFileSystem(conf)
+    fs, root = _hadoop_path(spark, target_path)
     sizes = [
         st.getLen()
         for st in fs.listStatus(root)

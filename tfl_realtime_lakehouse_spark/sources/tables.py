@@ -59,7 +59,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin a narrow input across the cluster when the scan
     under-parallelizes — the small-single-file ↔ heavy-expression
     mismatch.
@@ -82,7 +82,7 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     across ``spark.sql.shuffle.partitions`` by its own exchange, so
     fan-out is a no-op there by construction.
     """
-    target = target or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     plan = df._jdf.queryExecution().analyzed().toString()
     if any(node in plan for node in _WIDE_PLAN_NODES):
         return df
@@ -119,7 +119,12 @@ def scan_bytes_hint(df: DataFrame) -> int | None:
     return int(total * len(files) / len(sample))
 
 
-def keyed_spread(df: DataFrame, *cols: str, target_bytes: int = 64 << 20) -> DataFrame:
+# Bytes of scanned input per keyed_spread partition: the size-derived
+# term of its partition count.
+SPREAD_TARGET_BYTES = 64 << 20
+
+
+def keyed_spread(df: DataFrame, *cols: str) -> DataFrame:
     """Hash-repartition ``df`` by ``cols`` with an EXPLICIT partition
     count, for the few stages that are BYTE-LIGHT but COMPUTE-DENSE
     (winnowing's sliding-min window, the simhash chunk self-join, the
@@ -128,7 +133,7 @@ def keyed_spread(df: DataFrame, *cols: str, target_bytes: int = 64 << 20) -> Dat
     matter how much CPU the downstream stage burns (guide §2.2/§2.5);
     REPARTITION_BY_NUM is exempt from AQE coalescing, so the explicit
     count pins cluster parallelism for exactly that stage. The count is
-    max(defaultParallelism, scan_bytes/target_bytes): at bench scale
+    max(defaultParallelism, scan_bytes/SPREAD_TARGET_BYTES): at bench scale
     the parallelism term wins (the whole point); at 100 TB the
     size-derived term dominates, so the repartition can never squeeze a
     genuinely large relation onto core-count partitions. Downstream
@@ -138,7 +143,7 @@ def keyed_spread(df: DataFrame, *cols: str, target_bytes: int = 64 << 20) -> Dat
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     hint = scan_bytes_hint(df) or 0
-    n = max(par, -(-hint // target_bytes))
+    n = max(par, -(-hint // SPREAD_TARGET_BYTES))
     # The planner DROPS a repartition whose partitioning exactly equals
     # the child's planner-inserted exchange (same keys, same count) —
     # verified on Spark 4.1: repartition(32, k) over a 32-partition

@@ -1,116 +1,29 @@
 """Streaming split-conformal thresholds — the realtime twin of the
 batch ``eval_conformal_thresholds`` query.
 
-The batch query's state IS a histogram: per-language counts over the
-6-dp-rounded nonconformity values (a bounded value space by
+The batch query's state IS a histogram: per-(lang, a) counts over the
+6-dp-rounded nonconformity ``a`` (a bounded value space by
 construction — ≤ 10⁶ distinct values, in practice the distinct scores
-the corpus realizes). Histograms are mergeable by addition, so the
-cross-batch update is: add the batch's per-value counts into the stored
-histogram, then re-derive (n, q_hat, coverage) with the identical
-ceil(0.9·(n+1)) discrete-quantile rule. After ANY prefix of
-micro-batches the emission equals the batch query over the union of
-those batches' rows — bit-for-bit, because the nonconformity is
-computed JVM-side with the SAME expression tree before the stateful
-operator ever sees a row (the kmv.py discipline: Python state code
-only merges numbers, never computes features).
+the corpus realizes). ``streaming_conformal_thresholds`` runs the batch
+query's own aggregation (``queries.wave6._conformal_hist``, null-text
+filter included) as a native update-mode streaming aggregate and emits
+the maintained (lang, a, cnt) histogram; ``conformal_readout`` IS the
+batch readout (``queries.wave6._conformal_readout``) and turns the
+latest row per (lang, a) into the per-lang (lang, n, q_hat, coverage)
+rows with the ceil(0.9·(n+1)) discrete-quantile rule. Counts merge by
+exact addition, and the nonconformity is the same expression tree, so
+after ANY prefix of micro-batches the readout equals the batch query
+over the union of those batches' rows, bit-for-bit.
 
-At production scale the per-batch rows would be partially aggregated to
-(lang, value, count) in ``foreachBatch`` before the state merge; here
-the state function folds raw values with a pandas value_counts, which
-is the same arithmetic.
+State bound: one row per distinct (lang, a).
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-_OUTPUT = T.StructType(
-    [
-        T.StructField("lang", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("q_hat", T.DoubleType()),
-        T.StructField("coverage", T.DoubleType()),
-    ]
+from tfl_realtime_lakehouse_spark.queries.wave6 import (
+    _conformal_hist,
+    _conformal_readout,
 )
 
-# parallel arrays: 6-dp nonconformity values and their counts
-_STATE = T.StructType(
-    [
-        T.StructField("vals", T.ArrayType(T.DoubleType())),
-        T.StructField("cnts", T.ArrayType(T.LongType())),
-    ]
-)
-
-
-def conformal_from_hist(vals: list, cnts: list) -> tuple:
-    """(n, q_hat, coverage) from a value→count histogram using the
-    batch query's rule: q_hat = the min(n, ceil(0.9·(n+1)))-th smallest
-    value, coverage = cum(q_hat)/n."""
-    order = sorted(range(len(vals)), key=lambda i: vals[i])
-    n = sum(cnts)
-    idx = min(n, math.ceil(0.9 * float(n + 1)))
-    cum = 0
-    for i in order:
-        cum += cnts[i]
-        if cum >= idx:
-            return n, round(vals[i], 6), round(float(cum) / n, 6)
-    raise AssertionError("unreachable: cum covers n >= idx")
-
-
-def _conformal_state_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (lang,) = key
-    if state.exists:
-        vals, cnts = state.get
-        hist = dict(zip(vals, cnts))
-    else:
-        hist = {}
-    for pdf in pdfs:
-        for v, c in pdf["a"].value_counts().items():
-            fv = float(v)
-            hist[fv] = hist.get(fv, 0) + int(c)
-    vals = sorted(hist)
-    cnts = [hist[v] for v in vals]
-    state.update((vals, cnts))
-    n, q_hat, coverage = conformal_from_hist(vals, cnts)
-    yield pd.DataFrame(
-        {"lang": [lang], "n": [n], "q_hat": [q_hat], "coverage": [coverage]}
-    )
-
-
-def streaming_conformal_thresholds(docs: DataFrame) -> DataFrame:
-    """Per-language conformal threshold stream: one (lang, n, q_hat,
-    coverage) row per lang per micro-batch, covering every document
-    seen so far. State is the bounded 6-dp value histogram per lang."""
-    # identical expression tree to queries/wave6.py::_score_col — the
-    # nonconformity must be bit-identical to the batch query's
-    from tfl_realtime_lakehouse_spark.queries.wave6 import _score_col
-
-    a = F.round(F.lit(1.0) - _score_col(), 6)
-    return (
-        # identical null policy to the batch query: null-text docs are
-        # excluded BEFORE the stateful operator (filter on text, not on
-        # the score — Spark's size(split(NULL)) is -1, so a score-null
-        # filter would keep them). Without this the twin silently
-        # diverged on null-text corpora: pandas value_counts drops NaN
-        # while the pre-fix batch query kept a NULL group (r6 ADVICE).
-        docs.where(F.col("text").isNotNull())
-        .select("lang", a.alias("a"))
-        .groupBy("lang")
-        .applyInPandasWithState(
-            _conformal_state_fn,
-            outputStructType=_OUTPUT,
-            stateStructType=_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+streaming_conformal_thresholds = _conformal_hist
+conformal_readout = _conformal_readout

@@ -85,7 +85,8 @@ def _headway_gaps(
     last_us: int | None, pdfs: Iterator[pd.DataFrame]
 ) -> tuple[list, list, int | None]:
     """One key's arrivals → (event timestamps, headway gaps in seconds,
-    new last-arrival state). The loop both state APIs share."""
+    new last-arrival state). The per-key loop of
+    :func:`_headway_state_fn`."""
     out_ts: list = []
     out_gap: list = []
     for pdf in pdfs:
@@ -142,69 +143,3 @@ def streaming_headways(stg: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-# --------------------------------------------------------------------------
-# transformWithStateInPandas variant (Spark 4 stateful-processor API)
-# --------------------------------------------------------------------------
-
-try:  # the API is new in Spark 4; keep the module importable elsewhere
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class HeadwayProcessor(StatefulProcessor):
-        """Per-(line,stop) last-arrival state via the typed ValueState
-        API — functionally identical to ``_headway_state_fn`` but on the
-        Spark 4 ``transformWithStateInPandas`` runtime, which adds state
-        TTL, timers, and multi-state-variable support for free."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.last = handle.getValueState(
-                "last_us", T.StructType([T.StructField("us", T.LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            line_id, stop_id = key
-            out_ts, out_gap, last_us = _headway_gaps(
-                self.last.get()[0] if self.last.exists() else None, rows
-            )
-            if last_us is not None:
-                self.last.update((last_us,))
-            yield pd.DataFrame(
-                {
-                    "line_id": line_id,
-                    "stop_id": stop_id,
-                    "event_ts": out_ts,
-                    "headway_s": out_gap,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def streaming_headways_tws(stg: DataFrame) -> DataFrame:
-        """Spark-4 stateful-processor version of :func:`streaming_headways`.
-
-        Runtime requirements beyond applyInPandasWithState: the RocksDB
-        state store provider
-        (``spark.sql.streaming.stateStore.providerClass``) and the
-        python ``protobuf`` package (the TWS driver worker speaks
-        protobuf to the JVM). Environments missing either should use
-        :func:`streaming_headways`, which is semantically identical for
-        this operator."""
-        return (
-            stg.filter(F.col("event_ts").isNotNull())
-            .select("line_id", "stop_id", "event_ts")
-            .groupBy("line_id", "stop_id")
-            .transformWithStateInPandas(
-                HeadwayProcessor(),
-                outputStructType=_HEADWAY_OUTPUT,
-                outputMode="append",
-                timeMode="none",
-            )
-        )
-
-except ImportError:  # pragma: no cover - older Spark
-    streaming_headways_tws = None

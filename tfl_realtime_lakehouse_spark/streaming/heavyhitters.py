@@ -1,6 +1,5 @@
-"""Streaming Misra–Gries heavy hitters — the realtime twin of
-``operators/text.mg_heavy_hitters`` (the mergeable frequent-items
-sketch) as a Structured Streaming stateful operator.
+"""Streaming Misra–Gries heavy hitters — the mergeable frequent-items
+sketch as a Structured Streaming stateful operator.
 
 Why stateful-sketch and not a windowed groupBy: the item universe at
 100 TB/day (tokens, URLs, user ids) does not fit shuffle state, but a
@@ -16,7 +15,7 @@ Guarantee (per shard, standard MG): every item with true count >
 n_seen/(capacity+1) is present in the table, and
 ``true − n_seen/(capacity+1) ≤ mg_count ≤ true``. Shard summaries
 merge downstream by summing shared items (Agarwal et al., mergeable
-summaries) — same contract as the batch operator's partition merge.
+summaries), which keeps the lower bound.
 
 Within a batch, rows fold in (tiebreak) order so replay is
 deterministic; like every MG sketch the counts are order-dependent

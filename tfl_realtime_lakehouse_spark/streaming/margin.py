@@ -11,7 +11,7 @@ micro-batches the emission equals the batch query over the union of
 those batches' rows — bit-for-bit, because:
 
 - the score/margin are computed JVM-side with the SAME expression tree
-  as the batch query (the kmv.py/conformal.py discipline: Python state
+  as the batch query (the kmv.py discipline: Python state
   code only merges numbers, never computes features);
 - Python float comparisons are IEEE double comparisons, i.e. the exact
   order Spark's window sort uses, and doc_id breaks ties totally;
