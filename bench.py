@@ -155,10 +155,12 @@ def main() -> None:
     compiles_runs: list[dict[str, int]] = []
     compiles_total: list[int] = []
     jit_s: list[float] = []
+    child_cpu_s: list[float] = []
     release_failures = 0
     for _ in range(max(1, repeat)):
         s0 = hoststamp.steal_jiffies()
         k0, j0 = hoststamp.codegen_compiles(spark), hoststamp.jit_ms(spark)
+        ch0 = hoststamp.jvm_child_cpu_sec(spark)
         timings_i, cpus_i, compiles_i, total_i, spark, failed_i = _run_suite(
             spark, sf_dir
         )
@@ -168,6 +170,7 @@ def main() -> None:
         compiles_total.append(_delta(k0, hoststamp.codegen_compiles(spark)))
         jit = _delta(j0, hoststamp.jit_ms(spark))
         jit_s.append(round(jit / 1000, 1) if jit >= 0 else -1.0)
+        child_cpu_s.append(round(_delta(ch0, hoststamp.jvm_child_cpu_sec(spark)), 1))
         runs.append((timings_i, cpus_i, total_i))
     timings, cpus, total = runs[0]
     out = {
@@ -226,6 +229,9 @@ def main() -> None:
         "cpu_total_sec": round(
             sum(v for v in out["cpu_sec"].values() if v >= 0), 1
         ),
+        # per run: CPU of the processes the JVM forked and reaped
+        # (shell-outs), which cpu_sec, read from the JVM itself, misses
+        "child_cpu_s": child_cpu_s,
         "load_before": out["load_before"],
         "load_after": out["load_after"],
         "steal_delta": steal_deltas,

@@ -96,7 +96,7 @@ def test_gold_hourly_stream_windows(spark, bronze_dir, tmp_path):
     assert got[("victoria", "S1", "2025-01-01T10:00:00")] == 1
 
 
-def test_tws_processor_state_contract_matches_apply_in_pandas_twin():
+def test_headway_state_fn_rows_and_state_per_batch():
     """The per-key state contract of ``_headway_state_fn`` (the
     applyInPandasWithState function ``streaming_headways`` runs), driven
     directly with a stub GroupState over four micro-batches: in-order

@@ -13,6 +13,9 @@ bespoke A/B experiment into data carried by every bench artifact:
   Steal time is NOT charged to a process's utime/stime, so per-query
   CPU deltas are the noise-immune comparison metric: when steal is
   non-trivial, quote cpu_sec, not wall.
+- ``jvm_child_cpu_sec(spark)`` — cutime+cstime of the same JVM: the
+  CPU of the processes it forked and reaped (shell-outs), which
+  ``jvm_cpu_sec`` does not include.
 
 Two more read the JVM's own compile counters through the gateway, so a
 pass that recompiles code it already compiled shows up in the numbers:
@@ -50,15 +53,26 @@ def steal_jiffies() -> int | None:
         return None
 
 
-def _proc_cpu_sec(pid: int) -> float | None:
+def _proc_cpu_sec(pid: int, fields: slice = slice(11, 13)) -> float | None:
+    """Sum of /proc/<pid>/stat CPU fields, counted after the command
+    name: utime + stime by default, cutime + cstime with slice(13, 15)."""
     try:
         with open(f"/proc/{pid}/stat") as f:
             # comm can contain spaces/parens; split after the last ')'
             tail = f.read().rsplit(")", 1)[1].split()
         clk = os.sysconf("SC_CLK_TCK")
-        return (int(tail[11]) + int(tail[12])) / clk  # utime + stime
+        return sum(int(v) for v in tail[fields]) / clk
     except (OSError, IndexError, ValueError):
         return None
+
+
+def _gateway_pid(spark) -> int | None:
+    """Pid of the session's JVM when this process launched it."""
+    try:
+        proc = getattr(spark.sparkContext._gateway, "proc", None)
+    except AttributeError:  # Spark Connect sessions have no sparkContext
+        return None
+    return None if proc is None else proc.pid
 
 
 def jvm_cpu_sec(spark) -> float | None:
@@ -66,13 +80,18 @@ def jvm_cpu_sec(spark) -> float | None:
     in local mode that is driver + every executor thread + GC). None
     when the gateway wasn't launched by this process (e.g. an attached
     external JVM) or /proc is unavailable."""
-    try:
-        proc = getattr(spark.sparkContext._gateway, "proc", None)
-        if proc is None:
-            return None
-        return _proc_cpu_sec(proc.pid)
-    except AttributeError:  # Spark Connect sessions have no sparkContext
-        return None
+    pid = _gateway_pid(spark)
+    return None if pid is None else _proc_cpu_sec(pid)
+
+
+def jvm_child_cpu_sec(spark) -> float | None:
+    """CPU seconds of the processes the session's JVM forked and has
+    reaped (cutime + cstime): shell-outs such as Hadoop's ``chmod`` and
+    ``readlink`` without libhadoop, and the Python worker daemon (with
+    the workers it reaped) once it exits. ``jvm_cpu_sec`` never shows
+    them. None as for ``jvm_cpu_sec``."""
+    pid = _gateway_pid(spark)
+    return None if pid is None else _proc_cpu_sec(pid, slice(13, 15))
 
 
 def self_cpu_sec() -> float:
