@@ -1586,23 +1586,73 @@ def test_kmeans_assign_preserves_input_id_and_cell_types(spark):
 def test_fan_out_noop_on_wide_lineage_and_fans_scan(spark, sf_correct):
     """fan_out must not probe .rdd on shuffle-bearing lineage (AQE would
     finalize the plan and materialize the exchanges eagerly): a wide df
-    comes back as the SAME object. A narrow single-file scan still fans
-    out to cluster parallelism."""
+    — including a rebalance-hinted one — comes back as the SAME object
+    and no job starts. A narrow single-file scan still fans out to
+    cluster parallelism, whatever its columns are called."""
     from tfl_realtime_lakehouse_spark.sources.tables import fan_out
 
+    sc = spark.sparkContext
     ev = read_table(spark, sf_correct, "events")
     agg = ev.groupBy("event_type").count()
     assert fan_out(agg) is agg
     joined = ev.alias("a").join(ev.alias("b"), "event_id")
     assert fan_out(joined) is joined
+    rebalanced = ev.select("event_id").hint("rebalance")
+    sc.setJobGroup("fan_out_probe_check", "assert no jobs inside fan_out")
+    try:
+        assert fan_out(rebalanced) is rebalanced
+        jobs = sc.statusTracker().getJobIdsForGroup("fan_out_probe_check")
+        assert jobs == [], f"fan_out launched jobs: {jobs}"
+    finally:
+        sc.setJobGroup(None, None)
 
-    scan = ev.select("event_id", "event_type")
-    fanned = fan_out(scan)
-    assert fanned is not scan
-    assert (
-        fanned.rdd.getNumPartitions()
-        == spark.sparkContext.defaultParallelism
-    )
+    for scan in (
+        ev.select("event_id", "event_type"),
+        ev.select("event_id", F.col("event_type").alias("Joined")),
+    ):
+        fanned = fan_out(scan)
+        assert fanned is not scan
+        assert fanned.rdd.getNumPartitions() == sc.defaultParallelism
+
+
+def test_keyed_spread_sizes_from_the_relation_it_spreads(spark, sf_correct, monkeypatch):
+    """keyed_spread's size term is Catalyst's estimate of the relation
+    being spread, capped at its leaves' bytes: a localCheckpoint keeps
+    the count of the plan it cut, a narrowing aggregate gets fewer
+    partitions than its scan, a self-join is not sized as the product
+    of its sides, even once checkpointed, and a relation of unknown
+    size gets cluster parallelism. The target is patched down so the
+    size term decides."""
+    from tfl_realtime_lakehouse_spark.sources import tables
+
+    target = 1024
+    monkeypatch.setattr(tables, "SPREAD_TARGET_BYTES", target)
+
+    def count(df):
+        out = tables.keyed_spread(df, "doc_id")
+        return out._jdf.queryExecution().analyzed().numPartitions()
+
+    docs = read_table(spark, sf_correct, "documents")
+    par = spark.sparkContext.defaultParallelism
+    scan_n = count(docs)
+    assert scan_n > par
+    assert count(docs.localCheckpoint()) == scan_n
+
+    narrow = docs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    assert count(narrow) < scan_n
+
+    self_join = docs.alias("a").join(docs.alias("b"), "doc_id").select("doc_id")
+    leaves = self_join._jdf.queryExecution().optimizedPlan().collectLeaves()
+    leaf_bytes = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+    assert count(self_join) <= -(-leaf_bytes // target)
+    # a checkpoint keeps the product estimate: sized by the bytes it holds
+    assert count(self_join.localCheckpoint()) <= count(self_join)
+
+    # an RDD-backed leaf has no size estimate, nor has anything above it:
+    # only the parallelism term (or one less, if nudged off shuffle.partitions)
+    unknown = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "doc_id long")
+    assert count(unknown) <= par
+    assert count(unknown.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))) <= par
 
 
 def test_lsh_builds_without_driver_probe_jobs(spark, sf_correct):

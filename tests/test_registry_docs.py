@@ -70,6 +70,9 @@ _KEPT_TEST_REFERENCES = {
     "operators.layout.zvalue_py": "pure-Python oracle for interleave_bits",
     "operators.sketches.countmin_merge": "public Count-Min sketch merge helper",
     "operators.sampling.stratified_sample": "public per-stratum sampling helper",
+    "operators.multimodal.decode_image": (
+        "the raising pixel-decode seam a production codec plugs into"
+    ),
     "operators.multimodal.gradient_params": (
         "id-to-gradient model the synthetic PNG assets are checked against"
     ),

@@ -316,13 +316,12 @@ def ngram_jaccard_pairs_reps(
       the standard trade for any reused exploded relation.
     """
     # Hash-to-long BEFORE array_distinct (dedup over 8-byte keys, not
-    # n-gram strings) and fan the scan out first — the single-row-group
-    # corpus files otherwise run the whole shingle pipeline on one core
-    # (sources/tables.py:fan_out). Checkpointed BEFORE the hot filter so
+    # n-gram strings). Callers pass spread input (the reps of a
+    # fanned-out contraction). Checkpointed BEFORE the hot filter so
     # the per-doc set sizes (which must count ALL distinct shingles,
     # filter or not) come from the same materialization — the scan +
     # shingle + hash subtree runs exactly once per corpus.
-    posts_raw = fan_out(df).select(
+    posts_raw = df.select(
         F.col(id_col),
         F.explode(
             F.array_distinct(F.transform(shingles(text_col, n), lambda g: F.xxhash64(g)))
@@ -659,7 +658,7 @@ def simhash(
         if hash_family == "md5"
         else F.xxhash64("w")
     )
-    toks = fan_out(df).select(
+    toks = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("w")
     ).withColumn("h", h)
     votes = toks.groupBy(id_col).agg(
@@ -697,8 +696,7 @@ def simhash_near_pairs(
         lambda reps: simhash_near_pairs_reps(
             reps, text_col, id_col, max_hamming, blocks, hash_family
         ),
-        lambda reps: fan_out(reps)
-        .where(F.size(tokens(text_col)) >= 1)
+        lambda reps: reps.where(F.size(tokens(text_col)) >= 1)
         .select(F.col(id_col), F.lit(0).cast("int").alias("hamming")),
         id_col,
     )
@@ -1004,8 +1002,7 @@ def longest_common_span(
             lambda acc: acc["acc"],
         )
         return (
-            fan_out(reps)
-            .where(n_toks >= F.lit(max(min_span_tokens, w)))
+            reps.where(n_toks >= F.lit(max(min_span_tokens, w)))
             .select(
                 F.col(id_col),
                 self_pairs.cast("bigint").alias("n_shared_windows"),
@@ -1066,7 +1063,7 @@ def longest_common_span_reps(
     # CSE, so an inline split() subtree would re-tokenize the document
     # once PER WINDOW (measured 3.1 s → 0.6 s on the sf0.1 postings).
     toks = F.col("_toks")
-    staged = fan_out(df).select(
+    staged = df.select(
         F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
     )
     spans = F.when(
@@ -1161,8 +1158,7 @@ def ngram_containment_pairs_reps(
     size aggregate) with the min-size denominator.
     """
     posts = (
-        fan_out(df)
-        .select(
+        df.select(
             F.col(id_col),
             F.explode(
                 F.array_distinct(

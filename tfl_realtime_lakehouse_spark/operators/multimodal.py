@@ -101,8 +101,7 @@ def decode_image(payload: bytes) -> "object":
         return px
     raise NotImplementedError(
         "payload is not a decodable PNG / baseline JPEG / GIF "
-        "(corrupt, truncated, or an unsupported variant); use "
-        "fake_decode=True for plumbing tests with synthetic headers"
+        "(corrupt, truncated, or an unsupported variant)"
     )
 
 
@@ -348,7 +347,7 @@ def _fake_feature(payload: bytes, dims: int = 8) -> list[float]:
     return [b / 256.0 for b in digest[:dims]]
 
 
-def extract_features(assets: DataFrame, fake_decode: bool = True) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Per-asset feature extraction over Arrow batches.
 
     Real semantics of the Spark side: binary payloads stream through
@@ -363,8 +362,6 @@ def extract_features(assets: DataFrame, fake_decode: bool = True) -> DataFrame:
             if pdf.empty:
                 continue
             payloads = pdf["payload"]
-            if not fake_decode:
-                payloads.map(decode_image)  # raises NotImplementedError
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],

@@ -119,8 +119,6 @@ def repetition_metrics(
     shuffle key is (doc, bigram); no per-row O(n²) HOF scan, no
     collect). Documents with fewer than 2 tokens get zero metrics.
     """
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
-
     toks = tokens(text_col)
     # ZERO-shuffle formulation: the per-document bigram mode is the
     # longest equal run in the SORTED hashed-bigram array — a per-row
@@ -129,7 +127,7 @@ def repetition_metrics(
     # textbook plan. Hashing to 64-bit first makes both the sort and
     # the distinct count compare longs; counts are unchanged absent an
     # intra-document collision (~50 grams → P ≈ 1e-16).
-    staged = fan_out(df).select(
+    staged = df.select(
         F.col(id_col),
         F.size(toks).alias("n_tokens"),
         F.size(
@@ -270,9 +268,11 @@ def contamination_scores(
     compares longs instead of variable-length text. Overlap counts are
     unchanged absent a 64-bit collision *within one document's gram
     set* (~50 grams → P ≈ 1e-16 per doc; same trade the jaccard
-    self-join makes). Both sides fan out first — the scan of a
+    self-join makes). The benchmark side fans out first — the scan of a
     single-row-group corpus file would otherwise run the shingle
-    expression on one core (sources/tables.py:fan_out)."""
+    expression on one core (sources/tables.py:fan_out); ``train`` is
+    the anti-join output, spread before that join by
+    :func:`contamination_check`."""
     from tfl_realtime_lakehouse_spark.sources.tables import fan_out
 
     grams_expr = F.array_distinct(
@@ -288,8 +288,7 @@ def contamination_scores(
     # scan) evaluated the shingle+hash expression — the dominant
     # per-row cost — twice over the corpus (measured 2× at sf5).
     g = (
-        fan_out(train)
-        .select(F.col(id_col), grams_expr.alias("_grams"))
+        train.select(F.col(id_col), grams_expr.alias("_grams"))
         .select(
             F.col(id_col),
             F.size("_grams").alias("n_grams"),

@@ -15,9 +15,8 @@ Quantile semantics: the reference's DuckDB ``quantile`` is discrete
 (SURVEY §2.4 A3); we pin the discrete (type-1) variant — the element at
 rank ``ceil(p·n)`` — which both matches the reference and is
 bit-deterministic across engines (interpolating percentiles differ in
-the last ulp between implementations). At the 100 TB design point swap
-to ``percentile_approx`` (sketch-based, single-pass, no per-group
-sort); ``exact=False`` toggles that here.
+the last ulp between implementations). Each exact group is bounded by
+arrivals per hour at any scale, so no approximate path is needed.
 """
 
 from __future__ import annotations
@@ -26,25 +25,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def headway_events(
-    stg: DataFrame,
-    line_col: str = "line_id",
-    stop_col: str = "stop_id",
-    ts_col: str = "event_ts",
-) -> DataFrame:
+def headway_events(stg: DataFrame) -> DataFrame:
     """Per-event headway: gap in seconds to the previous arrival at the
     same (line, stop); each group's first arrival is dropped (no
     predecessor) — reference fct_headways.sql:4-16."""
-    w = Window.partitionBy(line_col, stop_col).orderBy(ts_col)
+    w = Window.partitionBy("line_id", "stop_id").orderBy("event_ts")
     return (
-        stg.filter(F.col(ts_col).isNotNull())
-        .withColumn("prev_ts", F.lag(ts_col).over(w))
+        stg.filter(F.col("event_ts").isNotNull())
+        .withColumn("prev_ts", F.lag("event_ts").over(w))
         .filter(F.col("prev_ts").isNotNull())
         .withColumn(
             # Exact integer microsecond gap; float conversion happens as
             # late as possible so aggregates stay reassociation-proof.
             "headway_us",
-            F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("prev_ts")),
+            F.unix_micros(F.col("event_ts")) - F.unix_micros(F.col("prev_ts")),
         )
         .withColumn(
             "headway_s",
@@ -53,7 +47,7 @@ def headway_events(
             # not, at µs precision).
             F.col("headway_us") / F.lit(1000000.0),
         )
-        .withColumn("hour", F.date_trunc("hour", F.col(ts_col)))
+        .withColumn("hour", F.date_trunc("hour", F.col("event_ts")))
     )
 
 
@@ -69,33 +63,17 @@ def _disc_percentile_us(p: float) -> F.Column:
     return F.element_at(F.array_sort(F.collect_list("headway_us")), idx)
 
 
-def fct_headways(
-    stg: DataFrame,
-    line_col: str = "line_id",
-    stop_col: str = "stop_id",
-    ts_col: str = "event_ts",
-    exact: bool = True,
-) -> DataFrame:
-    """(line, stop, hour) → avg/p50/p90 headway seconds.
-
-    ``exact=False`` is the 100 TB path: single-pass ``percentile_approx``
-    sketches (no per-group materialization) at bounded relative error.
-    """
+def fct_headways(stg: DataFrame) -> DataFrame:
+    """(line, stop, hour) → avg/p50/p90 headway seconds."""
     us = F.lit(1000000.0)
-    if exact:
-        p50 = _disc_percentile_us(0.5) / us
-        p90 = _disc_percentile_us(0.9) / us
-    else:
-        p50 = F.percentile_approx("headway_s", 0.5, 10000)
-        p90 = F.percentile_approx("headway_s", 0.9, 10000)
     return (
-        headway_events(stg, line_col, stop_col, ts_col)
-        .groupBy(F.col(line_col).alias("line_id"), F.col(stop_col).alias("stop_id"), "hour")
+        headway_events(stg)
+        .groupBy("line_id", "stop_id", "hour")
         .agg(
             (F.sum("headway_us").cast("double") / F.count(F.lit(1)) / us).alias(
                 "avg_headway_s"
             ),
-            p50.alias("p50_headway_s"),
-            p90.alias("p90_headway_s"),
+            (_disc_percentile_us(0.5) / us).alias("p50_headway_s"),
+            (_disc_percentile_us(0.9) / us).alias("p90_headway_s"),
         )
     )

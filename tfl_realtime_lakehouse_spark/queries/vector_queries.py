@@ -214,7 +214,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = M.documents_as_assets(table(spark, sf_dir, "documents"))
-    feats = M.extract_features(assets, fake_decode=True)
+    feats = M.extract_features(assets)
     return feats.select("asset_id", "n_bytes", "payload_digest")
 
 

@@ -76,7 +76,8 @@ def get_spark(
         # chunk join, crossdoc gram join — warm A/B wall deltas
         # +2.8/+1.1/+0.9 s at 1m) are spread EXPLICITLY at their code
         # sites via sources.tables.keyed_spread (REPARTITION_BY_NUM is
-        # AQE-exempt; count is size-derived, so it still scales). Env
+        # AQE-exempt; its count grows with Catalyst's size estimate of
+        # the relation it spreads, so it still scales). Env
         # knob retained for cluster retuning. NOTE: getOrCreate reuses
         # any live session in the process, so the env override (like
         # every conf here) only applies to the FIRST session built

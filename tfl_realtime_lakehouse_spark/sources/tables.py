@@ -69,58 +69,33 @@ def fan_out(df: DataFrame) -> DataFrame:
     yields a single partition and every downstream per-row expression
     — shingling, regex batteries, hashing — runs on one core of 32.
     At real scale the input has ≥ parallelism splits and this is a
-    no-op (partition-count check, no job); the repartition only fires
-    for inputs that would otherwise serialize, where one small shuffle
-    buys back the whole cluster. Measured: contamination_check's
-    shingle stage 15.2 s → 5.6 s at sf1 on the expression alone.
+    no-op; the repartition only fires for inputs that would otherwise
+    serialize, where one small shuffle buys back the whole cluster.
+    Measured: contamination_check's shingle stage 15.2 s → 5.6 s at
+    sf1 on the expression alone.
 
-    The probe is restricted to NARROW lineage (scans, maps, filters,
-    localCheckpoint results): with AQE enabled, touching ``df.rdd`` on a
-    plan containing exchanges finalizes the adaptive plan and eagerly
-    materializes the upstream shuffle stages — which the real action
-    would then execute again. A wide lineage has already been spread
-    across ``spark.sql.shuffle.partitions`` by its own exchange, so
-    fan-out is a no-op there by construction.
+    Whether the input has an exchange, and how many partitions it has,
+    both come from the plan Spark has already built. With AQE on, a
+    physical plan rooted at ``AdaptiveSparkPlan`` has an exchange: its
+    partition count is known only once AQE has run the upstream stages,
+    which the real action would then run again, and the exchange has
+    already spread the rows, so such a plan comes back unchanged and no
+    job starts. Any other plan is narrow, and its RDD's partition count
+    is read without a job. This relies on AQE being on, as it is by
+    default and in ``session.get_spark``: with it off, a broadcast join
+    or a global sort runs a job here.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    plan = df._jdf.queryExecution().analyzed().toString()
-    if any(node in plan for node in _WIDE_PLAN_NODES):
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
         return df
-    if df.rdd.getNumPartitions() < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if qe.toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df
 
 
-def scan_bytes_hint(df: DataFrame) -> int | None:
-    """Best-effort size of the files behind ``df``'s scans (compressed
-    bytes). Used to size explicit repartitions so they stay honest at
-    any scale; returns None when a backing file cannot be statted (the
-    caller falls back to cluster parallelism). With many input files
-    only the first 64 are statted and the total extrapolated — the
-    hint feeds a partition-count heuristic, not accounting."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    from urllib.parse import unquote, urlparse
-
-    sample = files[:64]
-    total = 0
-    for uri in sample:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            return None
-        try:
-            total += os.path.getsize(unquote(parsed.path))
-        except OSError:
-            return None
-    return int(total * len(files) / len(sample))
-
-
-# Bytes of scanned input per keyed_spread partition: the size-derived
-# term of its partition count.
+# Estimated bytes per keyed_spread partition: the size-derived term of
+# its partition count.
 SPREAD_TARGET_BYTES = 64 << 20
 
 
@@ -132,18 +107,32 @@ def keyed_spread(df: DataFrame, *cols: str) -> DataFrame:
     100 KB shuffle feeding a quadratic scan coalesces to 1-2 tasks no
     matter how much CPU the downstream stage burns (guide §2.2/§2.5);
     REPARTITION_BY_NUM is exempt from AQE coalescing, so the explicit
-    count pins cluster parallelism for exactly that stage. The count is
-    max(defaultParallelism, scan_bytes/SPREAD_TARGET_BYTES): at bench scale
-    the parallelism term wins (the whole point); at 100 TB the
-    size-derived term dominates, so the repartition can never squeeze a
-    genuinely large relation onto core-count partitions. Downstream
-    joins/aggregates keyed on a superset of ``cols`` reuse the
-    partitioning, so this usually REPLACES a planner exchange rather
-    than adding one."""
+    count pins cluster parallelism for exactly that stage.
+
+    The count is max(defaultParallelism, size/SPREAD_TARGET_BYTES),
+    where size is Catalyst's estimate of the relation being spread
+    (``optimizedPlan().stats()``), so a post-aggregation relation is
+    sized as what it is, and a ``localCheckpoint`` keeps the estimate of
+    the plan it cut. Without CBO an inner join's estimate is the
+    product of its children, so the estimate is capped at the summed
+    bytes of the plan's leaves (:func:`_leaf_bytes`); a leaf of unknown
+    size (Spark's ``defaultSizeInBytes``) leaves only the parallelism
+    term. At bench scale the parallelism term wins (the whole point);
+    at 100 TB the size-derived term dominates, so the repartition can
+    never squeeze a genuinely large relation onto core-count
+    partitions. Downstream joins/aggregates keyed on a superset of
+    ``cols`` reuse the partitioning, so this usually REPLACES a planner
+    exchange rather than adding one."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    hint = scan_bytes_hint(df) or 0
-    n = max(par, -(-hint // SPREAD_TARGET_BYTES))
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    leaf_bytes = sum(_leaf_bytes(spark, leaves.apply(i)) for i in range(leaves.size()))
+    if leaf_bytes >= plan.conf().defaultSizeInBytes():
+        size = 0  # an unknown leaf: every estimate above it is scaled from a guess
+    else:
+        size = min(int(plan.stats().sizeInBytes()), leaf_bytes)
+    n = max(par, -(-size // SPREAD_TARGET_BYTES))
     # The planner DROPS a repartition whose partitioning exactly equals
     # the child's planner-inserted exchange (same keys, same count) —
     # verified on Spark 4.1: repartition(32, k) over a 32-partition
@@ -158,24 +147,20 @@ def keyed_spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-# Logical-plan node names that imply an exchange in the physical plan.
-# Substring match over the analyzed plan is deliberately conservative:
-# a false positive just skips an optimization; a false negative would
-# double-execute shuffle stages under AQE (see fan_out docstring).
-_WIDE_PLAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Sort",
-    "Distinct",
-    "Deduplicate",
-    "Repartition",
-    "Except",
-    "Intersect",
-    "GlobalLimit",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
-)
+def _leaf_bytes(spark: SparkSession, leaf) -> int:
+    """Catalyst's estimate of one plan leaf, or, for a materialized RDD
+    (a ``localCheckpoint``), the bytes its blocks hold when that is
+    smaller. A checkpoint keeps the estimate of the plan it cut, and
+    that estimate may be a join product: the synthesized image assets
+    behind ``multimodal_phash_neardup`` estimate 280 MB for a few KB of
+    rows."""
+    size = int(leaf.stats().sizeInBytes())
+    if leaf.nodeName() == "LogicalRDD":
+        rdd_id = leaf.rdd().id()
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
+            if info.id() == rdd_id and info.numCachedPartitions() == info.numPartitions():
+                size = min(size, info.memSize() + info.diskSize())
+    return size
 
 
 def read_raw_arrivals(spark: SparkSession, raw_dir: str) -> DataFrame:
