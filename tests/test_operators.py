@@ -1586,9 +1586,10 @@ def test_kmeans_assign_preserves_input_id_and_cell_types(spark):
 def test_fan_out_noop_on_wide_lineage_and_fans_scan(spark, sf_correct):
     """fan_out must not probe .rdd on shuffle-bearing lineage (AQE would
     finalize the plan and materialize the exchanges eagerly): a wide df
-    — including a rebalance-hinted one — comes back as the SAME object
-    and no job starts. A narrow single-file scan still fans out to
-    cluster parallelism, whatever its columns are called."""
+    — including a rebalance-hinted one, and, with AQE off, a global sort
+    and a broadcast self-join — comes back as the SAME object and no job
+    starts. A narrow single-file scan still fans out to cluster
+    parallelism, whatever its columns are called."""
     from tfl_realtime_lakehouse_spark.sources.tables import fan_out
 
     sc = spark.sparkContext
@@ -1597,14 +1598,26 @@ def test_fan_out_noop_on_wide_lineage_and_fans_scan(spark, sf_correct):
     assert fan_out(agg) is agg
     joined = ev.alias("a").join(ev.alias("b"), "event_id")
     assert fan_out(joined) is joined
-    rebalanced = ev.select("event_id").hint("rebalance")
-    sc.setJobGroup("fan_out_probe_check", "assert no jobs inside fan_out")
+
+    def assert_no_job(df):
+        sc.setJobGroup("fan_out_probe_check", "assert no jobs inside fan_out")
+        try:
+            assert fan_out(df) is df
+            jobs = sc.statusTracker().getJobIdsForGroup("fan_out_probe_check")
+            assert jobs == [], f"fan_out launched jobs: {jobs}"
+        finally:
+            sc.setJobGroup(None, None)
+
+    assert_no_job(ev.select("event_id").hint("rebalance"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        assert fan_out(rebalanced) is rebalanced
-        jobs = sc.statusTracker().getJobIdsForGroup("fan_out_probe_check")
-        assert jobs == [], f"fan_out launched jobs: {jobs}"
+        assert_no_job(ev.orderBy("ts"))
+        assert_no_job(
+            ev.alias("a").join(F.broadcast(ev.alias("b")), "event_id")
+        )
     finally:
-        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
     for scan in (
         ev.select("event_id", "event_type"),
@@ -1672,6 +1685,19 @@ def test_lsh_builds_without_driver_probe_jobs(spark, sf_correct):
     rows = pairs.limit(5).collect()
     for r in rows:
         assert r["score"] >= 0.4
+
+
+def test_ivfpq_index_dir_is_inside_the_checkout():
+    """The persisted IVF-PQ index lives in this checkout's gitignored
+    warehouse, so two checkouts side by side never share (or race on)
+    one index."""
+    import os
+
+    from tfl_realtime_lakehouse_spark.queries.vector_queries import ivfpq_index_dir
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    got = ivfpq_index_dir("/data/sf0.1/")
+    assert got == os.path.join(root, "spark-warehouse", "ivfpq_index", "sf0.1")
 
 
 def test_ivfpq_persisted_probe_equals_build_path(spark, tmp_path, sf_correct):
@@ -2791,7 +2817,7 @@ def test_abtest_cuped_matches_numpy_ols(spark, tmp_path):
     import numpy as np
     import pandas as pd
 
-    from tfl_realtime_lakehouse_spark.queries.wave8 import events_abtest_cuped
+    from tfl_realtime_lakehouse_spark.queries.experiments import events_abtest_cuped
 
     rows = []
     eid = 0
@@ -2869,9 +2895,9 @@ def test_poisson_bootstrap_ci_matches_python_recompute(spark, tmp_path):
 
     import pandas as pd
 
-    from tfl_realtime_lakehouse_spark.queries.wave9 import (
-        _BOOT_B,
-        _POIS_T,
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        BOOT_B,
+        POIS_T,
         events_poisson_bootstrap_ci,
     )
 
@@ -2889,7 +2915,7 @@ def test_poisson_bootstrap_ci_matches_python_recompute(spark, tmp_path):
 
     def weight(b, eid):
         h = _h60(f"boot:{b}:{eid}")
-        for k, t in enumerate(_POIS_T):
+        for k, t in enumerate(POIS_T):
             if h < t:
                 return k
         return 6
@@ -2903,7 +2929,7 @@ def test_poisson_bootstrap_ci_matches_python_recompute(spark, tmp_path):
     for v in (0, 1):
         vals = [(e, x) for e, vv, x in pur if vv == v]
         means = []
-        for b in range(_BOOT_B):
+        for b in range(BOOT_B):
             sw = sum(weight(b, e) for e, _ in vals)
             if sw > 0:
                 means.append(
@@ -3063,7 +3089,7 @@ def test_uplift_by_decile_matches_python(spark, tmp_path):
 
     import pandas as pd
 
-    from tfl_realtime_lakehouse_spark.queries.wave9 import events_uplift_by_decile
+    from tfl_realtime_lakehouse_spark.queries.experiments import events_uplift_by_decile
 
     rows, eid = [], 0
     for u in range(53):
@@ -3425,7 +3451,7 @@ def test_srm_check_matches_python(spark, tmp_path):
 
     import pandas as pd
 
-    from tfl_realtime_lakehouse_spark.queries.wave10 import events_srm_check
+    from tfl_realtime_lakehouse_spark.queries.experiments import events_srm_check
 
     def arm(u):
         return int(hashlib.md5(f"ab:{u}".encode()).hexdigest()[:15], 16) % 2
@@ -3461,7 +3487,7 @@ def test_did_estimator_matches_python(spark, tmp_path):
 
     import pandas as pd
 
-    from tfl_realtime_lakehouse_spark.queries.wave10 import events_did_estimator
+    from tfl_realtime_lakehouse_spark.queries.experiments import events_did_estimator
 
     def arm(u):
         return int(hashlib.md5(f"ab:{u}".encode()).hexdigest()[:15], 16) % 2

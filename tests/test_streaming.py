@@ -1838,9 +1838,9 @@ def test_streaming_conformal_matches_batch_query(spark, tmp_path):
     The stream maintains the (lang, a, cnt) histogram; the latest row
     per (lang, a) goes through the batch readout."""
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.conformal import (
+    from tfl_realtime_lakehouse_spark.queries.wave6 import (
+        conformal_hist,
         conformal_readout,
-        streaming_conformal_thresholds,
     )
 
     def doc(i, lang, words):
@@ -1865,7 +1865,7 @@ def test_streaming_conformal_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f=*")
     )
-    out = streaming_conformal_thresholds(stream)
+    out = conformal_hist(stream)
     _run_stream(out, tmp_path, "conf_out", mode="update")
     latest = {}
     for r in spark.sql("select * from conf_out").collect():
@@ -2033,9 +2033,9 @@ def test_streaming_centroid_drift_matches_batch_query(spark, tmp_path):
     import random
 
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.drift import (
+    from tfl_realtime_lakehouse_spark.queries.wave7 import (
+        drift_moments,
         drift_readout,
-        streaming_centroid_drift,
     )
 
     rng = random.Random(8)
@@ -2063,7 +2063,7 @@ def test_streaming_centroid_drift_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f=*")
     )
-    out = streaming_centroid_drift(stream)
+    out = drift_moments(stream)
     _run_stream(out, tmp_path, "drift_out", mode="update")
     # maintained table: the latest emission per (label, half, dim) —
     # the row count only grows, so the largest n is the final state
@@ -2110,9 +2110,9 @@ def test_streaming_cuped_matches_batch_query(spark, tmp_path):
     COALESCE), and a user whose covariate arrives in batch 1 but whose
     metric arrives only in batch 2 (the cross-batch leg)."""
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.cuped import (
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
         cuped_readout,
-        streaming_cuped_per_user,
+        per_user_frame,
     )
 
     import datetime
@@ -2151,7 +2151,7 @@ def test_streaming_cuped_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f=*")
     )
-    out = streaming_cuped_per_user(stream)
+    out = per_user_frame(stream)
     _run_stream(out, tmp_path, "cuped_out", mode="update")
     # maintained table: the LATEST emission per user (update-mode memory
     # sink appends; values are nonnegative here so x, y and np only grow
@@ -2207,9 +2207,10 @@ def test_streaming_bootstrap_ci_matches_batch_query(spark, tmp_path):
     import datetime
 
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.bootstrap import (
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        boot_purchases,
+        boot_replica_sums,
         bootstrap_readout,
-        streaming_bootstrap_replicas,
     )
 
     schema = (
@@ -2236,7 +2237,7 @@ def test_streaming_bootstrap_ci_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f=*")
     )
-    out = streaming_bootstrap_replicas(stream)
+    out = boot_replica_sums(boot_purchases(stream))
     _run_stream(out, tmp_path, "boot_out", mode="update")
     # latest emission per (variant, b): sums are nonnegative here, so
     # the row with the largest (sw, swx) is the final state
@@ -2363,8 +2364,8 @@ def test_streaming_uplift_by_decile_matches_batch_query(spark, tmp_path):
     import datetime
     import hashlib
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.uplift import (
-        streaming_uplift_per_user,
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        per_user_frame,
         uplift_decile_readout,
     )
 
@@ -2409,7 +2410,7 @@ def test_streaming_uplift_by_decile_matches_batch_query(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/f=*")
     )
-    out = streaming_uplift_per_user(stream)
+    out = per_user_frame(stream)
     _run_stream(out, tmp_path, "uplift_out", mode="update")
     latest = {}
     for r in spark.sql("select * from uplift_out").collect():
@@ -2443,225 +2444,261 @@ def test_streaming_uplift_by_decile_matches_batch_query(spark, tmp_path):
     assert sum(v[0] + v[1] for v in got.values()) == 22
 
 
-def test_streaming_did_matches_batch_query(spark, tmp_path):
-    """Cross-batch DiD maintenance (X222 twin): the user-keyed state
-    operator maintains exact per-user (y_pre, y_post) decimal sums and
-    the stateless readout over the maintained table must equal the
-    BATCH events_did_estimator query over the union — bit-for-bit,
-    because the readout rebuilds the batch wide frame and calls its
-    own downstream function. Planted: a user whose PRE purchase
-    arrives in batch 1 and POST purchase only in batch 2 (the
-    straddling leg), an all-other-type user (counts in n_arm, adds
-    0 to every cell), a null purchase value, no arm-1 pre purchases at
-    all (empty-cell COALESCE), and an arm-1 purchase with a NULL ts
-    (post is NULL: the batch drops that cell, so the twin must book it
-    in neither period — as "pre" it would move pre_trt off 0.0)."""
-    import datetime
-    import hashlib
+_AB_EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+_PER_USER_SCHEMA = "user_id long, variant int, x double, y double, np long"
+
+
+def _run_stream_batches(df, tmp_path, name):
+    """Run an update-mode stream to completion and return the rows each
+    micro-batch emitted, in batch order."""
+    emitted = {}
+    q = (
+        df.writeStream.outputMode("update")
+        .foreachBatch(lambda batch, i: emitted.__setitem__(i, batch.collect()))
+        .option("checkpointLocation", str(tmp_path / f"ckpt-{name}"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    return [emitted[i] for i in sorted(emitted)]
+
+
+def _maintained(spark, batches, schema):
+    """The maintained per-user table after ``batches``: the latest row
+    each user was emitted with."""
+    latest = {}
+    for rows in batches:
+        for r in rows:
+            latest[r["user_id"]] = r
+    return spark.createDataFrame(list(latest.values()), schema)
+
+
+def _query_and_oracle(spark, tmp_path, name, rows, cols):
+    """The registered query ``name`` and its DuckDB oracle over ``rows``
+    as the events table: the single result row of each, as a tuple."""
+    import duckdb
+
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.did import (
-        did_readout,
-        streaming_did_per_user,
+
+    d = str(tmp_path / f"{name}-{len(rows)}")
+    spark.createDataFrame(rows, _AB_EVENTS_SCHEMA).write.parquet(f"{d}/events.parquet")
+    [w] = REGISTRY[name].fn(spark, d).collect()
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet/*.parquet')"
+    )
+    rel = con.sql(REGISTRY[name].oracle)
+    [o] = rel.fetchall()
+    o = dict(zip(rel.columns, o))
+    return tuple(w[c] for c in cols), tuple(o[c] for c in cols)
+
+
+def _ab_arm(u):
+    import hashlib
+
+    return int(hashlib.md5(f"ab:{u}".encode()).hexdigest()[:15], 16) % 2
+
+
+def _write_batches(spark, src, *batches):
+    """One parquet file per micro-batch, in batch order."""
+    for i, b in enumerate(batches):
+        spark.createDataFrame(b, _AB_EVENTS_SCHEMA).coalesce(1).write.parquet(
+            f"{src}/f={i}"
+        )
+    return (
+        spark.readStream.schema(_AB_EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/f=*")
     )
 
-    def arm(u):
-        return int(hashlib.md5(f"ab:{u}".encode()).hexdigest()[:15], 16) % 2
 
-    a0 = [u for u in range(200) if arm(u) == 0][:5]
-    a1 = [u for u in range(200) if arm(u) == 1][:4]
+def test_streaming_did_matches_batch_query(spark, tmp_path):
+    """Cross-batch DiD maintenance (X222 twin): the per-user
+    (y_pre, y_post) frame runs as a native streaming aggregate, and
+    did_readout over the maintained table must equal the BATCH
+    events_did_estimator query over the same rows — bit-for-bit,
+    because the batch query calls the same readout. Planted: a first
+    micro-batch holding only arm-0 users (the empty treatment arm is
+    NULL in the stream, the batch query and the DuckDB oracle alike), a
+    user whose PRE purchase arrives early and POST purchase only in the
+    last batch (the straddling leg), an all-other-type user (counts in
+    n_arm, adds 0 to every cell), a null purchase value, no arm-1 pre
+    purchases at all (empty-cell COALESCE), and an arm-1 purchase with
+    a NULL ts (post is NULL: the batch drops that cell, so the twin must
+    book it in neither period — as "pre" it would move pre_trt off
+    0.0)."""
+    import datetime
+
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        did_per_user_frame,
+        did_readout,
+    )
+
+    a0 = [u for u in range(200) if _ab_arm(u) == 0][:5]
+    a1 = [u for u in range(200) if _ab_arm(u) == 1][:4]
     PRE = datetime.datetime(2024, 1, 5)
     POST = datetime.datetime(2024, 1, 25)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
     eid = iter(range(10_000))
 
     def ev(u, ts, etype, value):
         return (next(eid), ts, u, etype, value, "{}")
 
     straddler = a0[0]
-    b1 = [ev(straddler, PRE, "purchase", 11.5)]
-    b1 += [ev(a0[1], PRE, "purchase", 20.25), ev(a0[2], POST, "purchase", 7.0)]
-    b1 += [ev(a0[3], PRE, "view", 5.0)]          # other-type-only user
-    b1 += [ev(a1[0], POST, "purchase", 40.0), ev(a1[1], POST, "purchase", None)]
+    b0 = [ev(straddler, PRE, "purchase", 11.5)]  # arm 0 only
+    b0 += [ev(a0[1], PRE, "purchase", 20.25), ev(a0[2], POST, "purchase", 7.0)]
+    b0 += [ev(a0[3], PRE, "view", 5.0)]          # other-type-only user
+    b1 = [ev(a1[0], POST, "purchase", 40.0), ev(a1[1], POST, "purchase", None)]
     b2 = [ev(straddler, POST, "purchase", 99.75)]  # straddling metric
     b2 += [ev(a0[4], POST, "purchase", 3.125)]
     b2 += [ev(a1[2], POST, "purchase", 60.5), ev(a1[3], PRE, "click", 1.0)]
     b2 += [ev(a1[0], None, "purchase", 1000.0)]  # NULL ts: no period
-    src = str(tmp_path / "did-src")
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f=1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f=*")
-    )
-    out = streaming_did_per_user(stream)
-    _run_stream(out, tmp_path, "did_out", mode="update")
-    latest = {}
-    for r in spark.sql("select * from did_out").collect():
-        tot = r["y_pre"] + r["y_post"]
-        if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
-            latest[r["user_id"]] = (tot, r)
-    per_user = spark.createDataFrame(
-        [v[1] for v in latest.values()],
-        "user_id long, variant int, y_pre decimal(37,12), y_post decimal(37,12)",
-    )
+    stream = _write_batches(spark, str(tmp_path / "did-src"), b0, b1, b2)
+    batches = _run_stream_batches(did_per_user_frame(stream), tmp_path, "did_out")
+    assert len(batches) == 3
+    schema = "user_id long, variant int, y_pre decimal(37,12), y_post decimal(37,12)"
     cols = ("n_ctl", "n_trt", "pre_ctl", "post_ctl", "pre_trt", "post_trt", "did")
-    [g] = did_readout(per_user).collect()
-    union_dir = str(tmp_path / "did-union")
-    spark.createDataFrame(b1 + b2, schema).write.parquet(
-        f"{union_dir}/events.parquet"
+
+    def readout(n):
+        [g] = did_readout(_maintained(spark, batches[:n], schema)).collect()
+        return tuple(g[c] for c in cols)
+
+    # after the first micro-batch: stream == batch query == oracle
+    first = readout(1)
+    assert (first, first) == _query_and_oracle(
+        spark, tmp_path, "events_did_estimator", b0, cols
     )
-    [w] = REGISTRY["events_did_estimator"].fn(spark, union_dir).collect()
-    assert tuple(g[c] for c in cols) == tuple(w[c] for c in cols)
+    assert first[0] == 4 and first[1] is None and first[6] is None
+    # after every micro-batch
+    g = dict(zip(cols, readout(3)))
+    w, o = _query_and_oracle(
+        spark, tmp_path, "events_did_estimator", b0 + b1 + b2, cols
+    )
+    assert tuple(g.values()) == w == o
     # non-vacuous plants
     assert g["n_ctl"] == 5 and g["n_trt"] == 4
     assert g["pre_trt"] == 0.0            # arm-1 pre cell empty
     assert g["post_trt"] > 0.0
-    assert g["did"] == w["did"] and g["did"] is not None
+    assert g["did"] is not None
 
 
 def test_streaming_srm_matches_batch_query(spark, tmp_path):
     """Cross-batch SRM gate (X223 twin): ZERO new state — the per-arm
-    population counts come from X208's maintained CUPED table, and the
-    readout is the batch events_srm_check downstream function object.
-    Planted: a deliberately imbalanced population split across two
-    micro-batches (users repeat across batches — the state-store key
-    set must dedupe), tripping the flag on both sides."""
+    population counts come from the maintained per-user frame, and
+    srm_readout is the one the batch events_srm_check calls. Planted:
+    a first micro-batch holding only arm-0 users (n_trt, the share, χ²
+    and the flag are NULL in the stream, the batch query and the DuckDB
+    oracle alike, not a flagged 0), and a deliberately imbalanced
+    population split across the micro-batches (users repeat across
+    batches — the state-store key set must dedupe), tripping the flag
+    on both sides."""
     import datetime
-    import hashlib
-    from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.srm import (
+
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        per_user_frame,
         srm_readout,
-        streaming_srm_per_user,
     )
 
-    def arm(u):
-        return int(hashlib.md5(f"ab:{u}".encode()).hexdigest()[:15], 16) % 2
-
-    a0 = [u for u in range(500) if arm(u) == 0][:30]
-    a1 = [u for u in range(500) if arm(u) == 1][:6]
+    a0 = [u for u in range(500) if _ab_arm(u) == 0][:30]
+    a1 = [u for u in range(500) if _ab_arm(u) == 1][:6]
     t0 = datetime.datetime(2024, 1, 2)
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
     eid = iter(range(10_000))
 
     def ev(u):
         return (next(eid), t0, u, "view", 1.0, "{}")
 
-    b1 = [ev(u) for u in a0[:20] + a1[:3]]
+    b0 = [ev(u) for u in a0[:20]]  # arm 0 only
+    b1 = [ev(u) for u in a1[:3]]
     b2 = [ev(u) for u in a0[10:] + a1]  # overlap: users straddle batches
-    src = str(tmp_path / "srm-src")
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f=1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f=*")
-    )
-    out = streaming_srm_per_user(stream)
-    _run_stream(out, tmp_path, "srm_out", mode="update")
-    latest = {}
-    for r in spark.sql("select * from srm_out").collect():
-        tot = (r["x"], r["y"], r["np"])
-        if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
-            latest[r["user_id"]] = (tot, r)
-    per_user = spark.createDataFrame(
-        [v[1] for v in latest.values()],
-        "user_id long, variant int, x double, y double, np long",
-    )
+    stream = _write_batches(spark, str(tmp_path / "srm-src"), b0, b1, b2)
+    batches = _run_stream_batches(per_user_frame(stream), tmp_path, "srm_out")
+    assert len(batches) == 3
     cols = ("n_ctl", "n_trt", "trt_share", "chi2", "srm_flag")
-    [g] = srm_readout(per_user).collect()
-    union_dir = str(tmp_path / "srm-union")
-    spark.createDataFrame(b1 + b2, schema).write.parquet(
-        f"{union_dir}/events.parquet"
+
+    def readout(n):
+        [g] = srm_readout(_maintained(spark, batches[:n], _PER_USER_SCHEMA)).collect()
+        return tuple(g[c] for c in cols)
+
+    # after the first micro-batch: stream == batch query == oracle
+    first = readout(1)
+    assert (first, first) == _query_and_oracle(
+        spark, tmp_path, "events_srm_check", b0, cols
     )
-    [w] = REGISTRY["events_srm_check"].fn(spark, union_dir).collect()
-    assert tuple(g[c] for c in cols) == tuple(w[c] for c in cols)
-    assert g["n_ctl"] == 30 and g["n_trt"] == 6 and g["srm_flag"] is True
+    assert first == (20, None, None, None, None)
+    # after every micro-batch
+    g = readout(3)
+    w, o = _query_and_oracle(spark, tmp_path, "events_srm_check", b0 + b1 + b2, cols)
+    assert g == w == o
+    assert g[0] == 30 and g[1] == 6 and g[4] is True
 
 
 def test_streaming_lift_matches_batch_query(spark, tmp_path):
-    """Cross-batch A/B lift maintenance (X226 twin): the shared CUPED
-    state layer's new purchase-event count makes conversion visible
-    (conv = np > 0 — a NULL-value purchase converts a user while
-    adding nothing to sy), and the stateless readout over the
-    maintained table must equal the BATCH events_abtest_lift query
-    over the union — bit-for-bit, because the readout IS the batch
-    downstream function (_lift_readout). Planted: a null-value-
-    purchase-only converter, a converter whose ONLY purchase arrives
-    in batch 2 (the cross-batch leg), a two-batch repeat purchaser
-    (np=2, still one conversion), and purchase-free users in both
-    arms."""
+    """Cross-batch A/B lift maintenance (X226 twin): the per-user
+    frame's purchase-event count makes conversion visible (conv =
+    np > 0 — a NULL-value purchase converts a user while adding nothing
+    to y), and lift_readout over the maintained table must equal the
+    BATCH events_abtest_lift query over the same rows — bit-for-bit,
+    because the batch query calls the same readout. Planted: a first
+    micro-batch holding only arm-0 users (n_b and conv_b are NULL in
+    the stream, the batch query and the DuckDB oracle alike, not 0), a
+    null-value-purchase-only converter, a converter whose ONLY purchase
+    arrives in the last batch (the cross-batch leg), a repeat purchaser
+    across batches (np=2, still one conversion), and purchase-free users
+    in both arms."""
     import datetime
-    from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.lift import (
+
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
         lift_readout,
-        streaming_lift_per_user,
+        per_user_frame,
     )
 
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
     t0 = datetime.datetime(2024, 1, 1)
     eid = iter(range(10_000))
 
     def ev(user, etype, value):
         return (next(eid), t0, user, etype, value, "{}")
 
-    b1 = []
+    early = []
     for i in range(40):
-        b1.append(ev(i, "view", 10.0 + i))
+        early.append(ev(i, "view", 10.0 + i))
         if i % 4 == 0:
-            b1.append(ev(i, "purchase", 25.0 + i))
-    b1.append(ev(300, "purchase", None))   # null-value purchase: converts
-    b1.append(ev(301, "scroll", 7.0))      # never purchases
-    b1.append(ev(302, "view", 1.0))        # converts only in batch 2
-    b1.append(ev(303, "purchase", 5.0))    # repeat purchaser ...
+            early.append(ev(i, "purchase", 25.0 + i))
+    early.append(ev(300, "purchase", None))   # null-value purchase: converts
+    early.append(ev(301, "scroll", 7.0))      # never purchases
+    early.append(ev(302, "view", 1.0))        # converts only in the last batch
+    early.append(ev(303, "purchase", 5.0))    # repeat purchaser ...
+    b0 = [e for e in early if _ab_arm(e[2]) == 0]  # arm 0 only
+    b1 = [e for e in early if _ab_arm(e[2]) == 1]
     b2 = [ev(303, "purchase", 6.0)]        # ... second purchase, np=2
     b2.append(ev(302, "purchase", 9.0))
     for i in range(20, 55):
         b2.append(ev(i, "click", 2.0 + i))
         if i % 5 == 0:
             b2.append(ev(i, "purchase", 60.0 + i))
-    src = str(tmp_path / "lift-src")
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(f"{src}/f=1")
-    spark.createDataFrame(b2, schema).coalesce(1).write.parquet(f"{src}/f=2")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f=*")
-    )
-    out = streaming_lift_per_user(stream)
-    _run_stream(out, tmp_path, "lift_out", mode="update")
-    latest = {}
-    for r in spark.sql("select * from lift_out").collect():
-        tot = (r["x"], r["y"], r["np"])
-        if r["user_id"] not in latest or tot >= latest[r["user_id"]][0]:
-            latest[r["user_id"]] = (tot, r)
-    per_user = spark.createDataFrame(
-        [v[1] for v in latest.values()],
-        "user_id long, variant int, x double, y double, np long",
-    )
+    stream = _write_batches(spark, str(tmp_path / "lift-src"), b0, b1, b2)
+    batches = _run_stream_batches(per_user_frame(stream), tmp_path, "lift_out")
+    assert len(batches) == 3
     cols = (
         "n_a", "conv_a", "n_b", "conv_b", "rate_a", "rate_b", "lift", "z_score",
     )
-    [g] = lift_readout(per_user).collect()
 
-    union_dir = str(tmp_path / "lift-union")
-    spark.createDataFrame(b1 + b2, schema).write.parquet(
-        f"{union_dir}/events.parquet"
+    def readout(n):
+        [g] = lift_readout(_maintained(spark, batches[:n], _PER_USER_SCHEMA)).collect()
+        return tuple(g[c] for c in cols)
+
+    # after the first micro-batch: stream == batch query == oracle
+    first = readout(1)
+    assert (first, first) == _query_and_oracle(
+        spark, tmp_path, "events_abtest_lift", b0, cols
     )
-    [w] = REGISTRY["events_abtest_lift"].fn(spark, union_dir).collect()
-    assert tuple(g[c] for c in cols) == tuple(w[c] for c in cols)
+    assert first[0] > first[1] > 0 and first[2:4] == (None, None)
+    # after every micro-batch
+    g = dict(zip(cols, readout(3)))
+    w, o = _query_and_oracle(spark, tmp_path, "events_abtest_lift", b0 + b1 + b2, cols)
+    assert tuple(g.values()) == w == o
     # non-vacuous: both arms populated with converters and
     # non-converters, z defined, and the planted edge cases held:
     # the null-value purchaser and the cross-batch converter each
@@ -2669,9 +2706,9 @@ def test_streaming_lift_matches_batch_query(spark, tmp_path):
     assert g["n_a"] + g["n_b"] == 59
     assert 0 < g["conv_a"] < g["n_a"] and 0 < g["conv_b"] < g["n_b"]
     assert g["z_score"] is not None
-    np_by_user = {u: latest[u][1]["np"] for u in latest}
-    assert np_by_user[300] == 1 and np_by_user[302] == 1
-    assert np_by_user[303] == 2 and np_by_user[301] == 0
+    final = {r["user_id"]: r for rows in batches for r in rows}
+    assert final[300]["np"] == 1 and final[302]["np"] == 1
+    assert final[303]["np"] == 2 and final[301]["np"] == 0
 
 
 def test_scorecard_kmv_merge_identity():
@@ -2779,17 +2816,13 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
     import datetime
     import hashlib
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.cuped import (
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
         cuped_readout,
-        streaming_cuped_per_user,
-    )
-    from tfl_realtime_lakehouse_spark.streaming.did import (
+        did_per_user_frame,
         did_readout,
-        streaming_did_per_user,
-    )
-    from tfl_realtime_lakehouse_spark.streaming.lift import lift_readout
-    from tfl_realtime_lakehouse_spark.streaming.srm import srm_readout
-    from tfl_realtime_lakehouse_spark.streaming.uplift import (
+        lift_readout,
+        per_user_frame,
+        srm_readout,
         uplift_decile_readout,
     )
 
@@ -2839,7 +2872,7 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
 
     # --- the ONE maintained CUPED state table ---
     _run_stream(
-        streaming_cuped_per_user(stream()), tmp_path, "composed_out", mode="update"
+        per_user_frame(stream()), tmp_path, "composed_out", mode="update"
     )
     latest = {}
     for r in spark.sql("select * from composed_out").collect():
@@ -2885,7 +2918,7 @@ def test_composed_multireadout_experiment_platform(spark, tmp_path):
     # readout 5: DiD — its own (y_pre, y_post) aggregate over the SAME
     # source (pre/post is not a function of the CUPED frame)
     _run_stream(
-        streaming_did_per_user(stream()), tmp_path, "composed_did", mode="update"
+        did_per_user_frame(stream()), tmp_path, "composed_did", mode="update"
     )
     dlatest = {}
     for r in spark.sql("select * from composed_did").collect():
@@ -2953,9 +2986,10 @@ def test_soak_bootstrap_state_bound_20_batches(spark, tmp_path):
     just bounded)."""
     import datetime
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.bootstrap import (
+    from tfl_realtime_lakehouse_spark.queries.experiments import (
+        boot_purchases,
+        boot_replica_sums,
         bootstrap_readout,
-        streaming_bootstrap_replicas,
     )
 
     schema = (
@@ -2977,7 +3011,7 @@ def test_soak_bootstrap_state_bound_20_batches(spark, tmp_path):
             f"{src}/f={f:02d}"
         )
     q = _run_stream(
-        streaming_bootstrap_replicas(_soak_stream(spark, src, schema)),
+        boot_replica_sums(boot_purchases(_soak_stream(spark, src, schema))),
         tmp_path,
         "soakboot_out",
         mode="update",
@@ -3233,7 +3267,7 @@ def test_soak_kmv_trailing_state_bound_20_batches(spark, tmp_path):
 def test_streaming_neyman_matches_batch_query(spark, tmp_path):
     """X228 twin: per-source (count, sum, sum-of-squares) exact integer
     state maintained cross-batch, readout = the batch query's own
-    _neyman_readout function object — bit-identical to the registered
+    neyman_readout function object — bit-identical to the registered
     batch query on the union after every edge case: a source straddling
     batches (variance appears only with batch 2's rows), an all-NULL
     n_chars source (NULL sigma/share/alloc — SUM's null-skip), a
@@ -3242,9 +3276,9 @@ def test_streaming_neyman_matches_batch_query(spark, tmp_path):
     import pandas as pd
 
     from tfl_realtime_lakehouse_spark.queries import REGISTRY
-    from tfl_realtime_lakehouse_spark.streaming.neyman import (
+    from tfl_realtime_lakehouse_spark.queries.wave12 import (
         neyman_readout,
-        streaming_neyman_stats,
+        neyman_stats,
     )
 
     schema = "doc_id long, text string, lang string, source string, n_chars long"
@@ -3276,7 +3310,7 @@ def test_streaming_neyman_matches_batch_query(spark, tmp_path):
         .parquet(f"{src}/f=*")
     )
     q = _run_stream(
-        streaming_neyman_stats(stream), tmp_path, "neyman_out", mode="update"
+        neyman_stats(stream), tmp_path, "neyman_out", mode="update"
     )
     ops = q.lastProgress["stateOperators"]
     assert len(ops) == 1 and ops[0]["numRowsTotal"] == 4  # one row per source
@@ -3305,26 +3339,16 @@ def test_streaming_neyman_matches_batch_query(spark, tmp_path):
 
 
 
-_EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+_DOCS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+# twin name -> (query module, name of the function that builds the
+# maintained table from a stream, stream schema)
 _SUM_STATE_TWINS = {
-    "cuped": ("streaming_cuped_per_user", _EVENTS_SCHEMA),
-    "did": ("streaming_did_per_user", _EVENTS_SCHEMA),
-    "bootstrap": ("streaming_bootstrap_replicas", _EVENTS_SCHEMA),
-    "neyman": (
-        "streaming_neyman_stats",
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ),
-    "drift": (
-        "streaming_centroid_drift",
-        "vec_id long, embedding array<float>, label int",
-    ),
-    "conformal": (
-        "streaming_conformal_thresholds",
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ),
+    "cuped": ("experiments", "per_user_frame", _AB_EVENTS_SCHEMA),
+    "did": ("experiments", "did_per_user_frame", _AB_EVENTS_SCHEMA),
+    "bootstrap": ("experiments", "boot_replica_sums", _AB_EVENTS_SCHEMA),
+    "neyman": ("wave12", "neyman_stats", _DOCS_SCHEMA),
+    "drift": ("wave7", "drift_moments", "vec_id long, embedding array<float>, label int"),
+    "conformal": ("wave6", "conformal_hist", _DOCS_SCHEMA),
 }
 
 
@@ -3335,12 +3359,16 @@ def test_sum_state_twins_are_native_streaming_aggregates(spark, tmp_path, module
     analyzed plan, one Aggregate that the engine incrementalizes."""
     import importlib
 
-    fn, schema = _SUM_STATE_TWINS[module]
+    from tfl_realtime_lakehouse_spark.queries.experiments import boot_purchases
+
+    qmod, fn, schema = _SUM_STATE_TWINS[module]
     build = getattr(
-        importlib.import_module(f"tfl_realtime_lakehouse_spark.streaming.{module}"),
-        fn,
+        importlib.import_module(f"tfl_realtime_lakehouse_spark.queries.{qmod}"), fn
     )
-    df = build(spark.readStream.schema(schema).parquet(str(tmp_path)))
+    df = spark.readStream.schema(schema).parquet(str(tmp_path))
+    if module == "bootstrap":
+        df = boot_purchases(df)
+    df = build(df)
     assert df.isStreaming
     plan = df._jdf.queryExecution().analyzed().toString()
     assert "FlatMapGroupsInPandasWithState" not in plan

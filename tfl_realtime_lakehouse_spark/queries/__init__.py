@@ -29,6 +29,7 @@ from tfl_realtime_lakehouse_spark.queries import (  # noqa: E402,F401
     wave10,
     wave11,
     wave12,
+    experiments,
 )
 
 # The driver's correctness harness checks the FIRST 50 registry entries in
@@ -40,33 +41,32 @@ from tfl_realtime_lakehouse_spark.queries import (  # noqa: E402,F401
 # cap) are all verified every round by tools/parity.py + tools/str_identity.py
 # (the same DuckDB-oracle compare, strict string equality).
 DRIVER_WINDOW = [
-    # ---- Round-12 rotation (twelfth window) ----
-    # Zero rows-only entries (standing bar since r10). Composition, in
-    # the r10 verdict's ask-#5 order:
-    # (1) every oracle-backed query whose plan/operator code was
-    # touched by round-12 optimizations (results verified bit-identical
-    # by str_identity; re-driven as insurance): keyed_spread sites
-    # (winnowing, simhash + the shared hamming chunk join, crossdoc),
-    # Bradley-Terry broadcast hints, kmeans_train_exact seed top-k
-    # (all ANN/semantic recall evals train through it), and the two
-    # fan_out'd staging queries,
-    "doc_winnowing_fingerprints",
-    "simhash_near_pairs",
-    "text_crossdoc_span_dedup",
-    "multimodal_phash_neardup",
-    "eval_pairwise_bradley_terry",
-    "embedding_ann_ivfpq_recall_eval",
-    "embedding_ann_ivf_recall_eval",
-    "embedding_ann_pq_recall_eval",
-    "semantic_dedup_recall_eval",
-    "stg_events_contract",
-    "scalar_luhn_card_audit",
-    # (semantic_dedup_prune is also touched but rows-only; its shared
-    # pair-scan semantics are hash-pinned via the recall eval above)
-    # (2) the stalest driver records, oldest vintage first,
-    # alphabetical within vintage: the 10 remaining round-4-vintage
-    # records (floor rises to round 5 after this round),
-    "multimodal_tile_plan",
+    # ---- Round-13 rotation (thirteenth window) ----
+    # Zero rows-only entries (standing bar since r10). Composition:
+    # (1) the six A/B-experiment queries, moved into
+    # queries/experiments.py this round; SRM, lift and DiD now read
+    # one-row-per-user frames through shared readouts (results verified
+    # bit-identical by str_identity; re-driven as insurance),
+    "events_abtest_lift",
+    "events_abtest_cuped",
+    "events_uplift_by_decile",
+    "events_poisson_bootstrap_ci",
+    "events_srm_check",
+    "events_did_estimator",
+    # (2) the six remaining round-5-vintage records, alphabetical,
+    "scalar_url_parse_battery",
+    "scalar_variant_props",
+    "table_profile_lineitem",
+    "text_tfidf_cosine_pairs",
+    "text_vocab_coverage_curve",
+    "training_mixture_temperature",
+    # (3) 38 entries kept from the round-12 window, in its order: its
+    # round-4-vintage group, then its round-5-vintage group. To make
+    # room, the 11 round-12-touched queries that led that window
+    # (winnowing, simhash, crossdoc, phash, Bradley-Terry, the four
+    # ANN/semantic recall evals, stg_events_contract,
+    # scalar_luhn_card_audit) and multimodal_tile_plan left it; all 12
+    # hold a hash-match row in CORRECTNESS_r12.json.
     "recommend_parts_for_customer",
     "skew_salted_agg",
     "skew_salted_join",
@@ -76,8 +76,6 @@ DRIVER_WINDOW = [
     "text_vocab_oov_rate",
     "text_zipf_fit",
     "vl_training_export_manifest",
-    # (3) then the 29 alphabetically-first of the 35 round-5-vintage
-    # records (the remaining 6 lead the r13 rotation),
     "agg_correlation_matrix",
     "agg_weighted_median_per_group",
     "customer_revenue_concentration",
@@ -108,12 +106,9 @@ DRIVER_WINDOW = [
     "sample_stratified_fixed_k",
     "sample_weighted_priority",
 ]
-# After this round the freshest-record floor rises to round 5 (6
-# entries: scalar_url_parse_battery, scalar_variant_props,
-# table_profile_lineitem, text_tfidf_cosine_pairs,
-# text_vocab_coverage_curve, training_mixture_temperature) and every
-# r12-touched query is driver-checked the round it changed. Every tail
-# entry remains verified each session by tools/parity.py AND
+# The six round-5 records in (2) were the stalest driver records left;
+# the next rotation leads with the next-oldest vintage. Every tail entry
+# remains verified each session by tools/parity.py AND
 # tools/str_identity.py (the same DuckDB-oracle compare, strict string
 # equality).
 

@@ -2485,127 +2485,6 @@ def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "events_abtest_lift",
-    oracle="""
-    WITH assign AS (
-      SELECT DISTINCT user_id,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant
-      FROM events
-    ),
-    conv AS (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-    ),
-    arms AS (
-      SELECT a.variant,
-             COUNT(*) AS n_users,
-             SUM(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END) AS n_conv
-      FROM assign a LEFT JOIN conv c ON c.user_id = a.user_id
-      GROUP BY 1
-    ),
-    wide AS (
-      SELECT
-        MAX(CASE WHEN variant = 0 THEN n_users END) AS na,
-        MAX(CASE WHEN variant = 0 THEN n_conv END) AS ca,
-        MAX(CASE WHEN variant = 1 THEN n_users END) AS nb,
-        MAX(CASE WHEN variant = 1 THEN n_conv END) AS cb
-      FROM arms
-    )
-    SELECT CAST(na AS BIGINT) AS n_a, CAST(ca AS BIGINT) AS conv_a,
-           CAST(nb AS BIGINT) AS n_b, CAST(cb AS BIGINT) AS conv_b,
-           ROUND(CAST(ca AS DOUBLE) / CAST(na AS DOUBLE), 6) AS rate_a,
-           ROUND(CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE), 6) AS rate_b,
-           ROUND(CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)
-                 / (CAST(ca AS DOUBLE) / CAST(na AS DOUBLE)) - 1.0::DOUBLE, 6)
-             AS lift,
-           CASE WHEN ca + cb > 0 AND ca + cb < na + nb THEN
-             ROUND((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)
-                    - CAST(ca AS DOUBLE) / CAST(na AS DOUBLE))
-                   / SQRT((CAST(ca + cb AS DOUBLE) / CAST(na + nb AS DOUBLE))
-                          * (1.0::DOUBLE - CAST(ca + cb AS DOUBLE)
-                                           / CAST(na + nb AS DOUBLE))
-                          * (1.0::DOUBLE / CAST(na AS DOUBLE)
-                             + 1.0::DOUBLE / CAST(nb AS DOUBLE))), 6)
-           END AS z_score
-    FROM wide
-    """,
-    doc="A/B test lift analysis: users assign deterministically to two "
-    "arms by the md5 hash family (content-addressed — the same "
-    "assignment the mixture/split samplers use, reproducible with no "
-    "experiment-state store), conversion = any purchase; the report "
-    "is per-arm rates, relative lift, and the pooled two-proportion "
-    "z statistic — the experimentation readout next to the Wilson CI "
-    "query (X-family: Wilson = one-arm interval, this = two-arm "
-    "comparison). Two hash aggregates and a 2-row pivot; all the "
-    "float arithmetic runs once on the 1-row summary with identical "
-    "trees, rounded at 6 dp.",
-)
-def events_abtest_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = table(spark, sf_dir, "events")
-    variant = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    ).cast("int")
-    assign = ev.select("user_id").distinct().select("user_id", variant.alias("variant"))
-    conv = ev.where(F.col("event_type") == "purchase").select("user_id").distinct()
-    arms = (
-        assign.join(conv.withColumn("_c", F.lit(1)), "user_id", "left")
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum(F.when(F.col("_c").isNotNull(), 1).otherwise(0)).alias("n_conv"),
-        )
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n_users"))).alias("na"),
-        F.max(F.when(F.col("variant") == 0, F.col("n_conv"))).alias("ca"),
-        F.max(F.when(F.col("variant") == 1, F.col("n_users"))).alias("nb"),
-        F.max(F.when(F.col("variant") == 1, F.col("n_conv"))).alias("cb"),
-    )
-    return _lift_readout(wide)
-
-
-def _lift_readout(wide: DataFrame) -> DataFrame:
-    """Lift downstream shared verbatim by the batch query and the
-    streaming twin (streaming/lift.py): (na, ca, nb, cb) one-row frame
-    → the 8-column rates/lift/pooled-z readout — the single-function-
-    object discipline (X207/X212/X218/X219 pattern)."""
-    na, ca = F.col("na").cast("double"), F.col("ca").cast("double")
-    nb, cb = F.col("nb").cast("double"), F.col("cb").cast("double")
-    pooled = (ca + cb) / (na + nb)
-    return wide.select(
-        F.col("na").cast("bigint").alias("n_a"),
-        F.col("ca").cast("bigint").alias("conv_a"),
-        F.col("nb").cast("bigint").alias("n_b"),
-        F.col("cb").cast("bigint").alias("conv_b"),
-        F.round(ca / na, 6).alias("rate_a"),
-        F.round(cb / nb, 6).alias("rate_b"),
-        F.round(cb / nb / (ca / na) - F.lit(1.0), 6).alias("lift"),
-        # degenerate arms (0% or 100% pooled conversion) have zero pooled
-        # variance — z undefined, NULL on both engines (ANSI-safe)
-        F.when(
-            (F.col("ca") + F.col("cb") > 0)
-            & (F.col("ca") + F.col("cb") < F.col("na") + F.col("nb")),
-            F.round(
-                (cb / nb - ca / na)
-                / F.sqrt(
-                    pooled
-                    * (F.lit(1.0) - pooled)
-                    * (F.lit(1.0) / na + F.lit(1.0) / nb)
-                ),
-                6,
-            ),
-        ).alias("z_score"),
-    )
-
-
-@register(
     "events_survival_curve",
     oracle="""
     WITH span AS (SELECT MAX(ts) AS tmax FROM events),

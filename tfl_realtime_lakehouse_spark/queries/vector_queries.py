@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -537,15 +539,7 @@ def embedding_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "partitions at the directory level instead of scanning the index.",
 )
 def embedding_ann_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    )
-    sf_name = os.path.basename(os.path.normpath(sf_dir)) or "default"
-    index_dir = os.path.join(
-        repo_root, "spark-warehouse", "ivfpq_index", sf_name
-    )
+    index_dir = ivfpq_index_dir(sf_dir)
     if not os.path.exists(os.path.join(index_dir, "_META")):
         S.ivfpq_persist(
             table(spark, sf_dir, "embeddings"),
@@ -559,6 +553,17 @@ def embedding_ann_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     return S.ivfpq_probe(cells, books, coded, queries, k=10, nprobe=3, m=m)
+
+
+def ivfpq_index_dir(sf_dir: str) -> str:
+    """The persisted IVF-PQ index of ``sf_dir``'s corpus:
+    ``spark-warehouse/ivfpq_index/<scale-factor dir name>`` inside this
+    checkout (gitignored), so two checkouts never share an index."""
+    repo_root = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    sf_name = os.path.basename(os.path.normpath(sf_dir)) or "default"
+    return os.path.join(repo_root, "spark-warehouse", "ivfpq_index", sf_name)
 
 
 _GRADIENT_PARAMS = """

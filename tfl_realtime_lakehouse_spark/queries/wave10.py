@@ -18,10 +18,7 @@ hash-checks cross-engine.
   (per-subspace codebooks from the same exact trainer) against exact
   L2 top-k, per query (X216).
 
-Plus the round's coverage extensions: the experiment VALIDITY gate
-(``events_srm_check``, X218) and the panel-data estimator
-(``events_did_estimator``, X219) completing the experimentation
-family, and the WebDataset tar-shard export/manifest
+Plus the WebDataset tar-shard export/manifest
 (``docs_tar_shard_manifest``, X220) — a real POSIX-ustar writer and
 parser, stdlib-tarfile-interoperable.
 
@@ -496,222 +493,6 @@ def embedding_ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id")
     )
     return _recall_fold(exact, approx)
-
-
-# ---------------------------------------------------------------------------
-# X218 — sample-ratio-mismatch health check (the experiment validity gate)
-# ---------------------------------------------------------------------------
-
-_SRM_ORACLE = """
-    WITH assign AS (
-      SELECT DISTINCT user_id,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant
-      FROM events
-    ),
-    arms AS (SELECT variant, COUNT(*) AS n FROM assign GROUP BY 1),
-    wide AS (
-      SELECT MAX(CASE WHEN variant = 0 THEN n END) AS n0,
-             MAX(CASE WHEN variant = 1 THEN n END) AS n1
-      FROM arms
-    )
-    SELECT CAST(n0 AS BIGINT) AS n_ctl, CAST(n1 AS BIGINT) AS n_trt,
-           ROUND(CAST(n1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE), 6)
-             AS trt_share,
-           ROUND(CAST((n1 - n0) * (n1 - n0) AS DOUBLE)
-                 / CAST(n0 + n1 AS DOUBLE), 6) AS chi2,
-           CAST((n1 - n0) * (n1 - n0) AS DOUBLE) / CAST(n0 + n1 AS DOUBLE)
-             > 3.8414588206941236 AS srm_flag
-    FROM wide
-"""
-
-
-@register(
-    "events_srm_check",
-    oracle=_SRM_ORACLE,
-    doc="Sample-ratio-mismatch check — the experiment validity gate "
-    "that must pass BEFORE any lift/CUPED/uplift readout is trusted "
-    "(a biased assignment or logging loss invalidates them all; "
-    "Fabijan et al. 2019 report ~6 % of experiments trip it). For the "
-    "50/50 md5 assignment: per-arm user counts, treatment share, the "
-    "1-dof chi-square statistic — which algebraically reduces to "
-    "(n1−n0)²/(n0+n1), exact bigint arithmetic until ONE double "
-    "division — and the flag against the χ²₁ 95th percentile. "
-    "Completes the experimentation family (lift → CUPED → uplift "
-    "deciles → bootstrap CI → SRM gate). Scale: one distinct-user "
-    "shuffle + a 2-row fold; the statistic is O(1) driver-free math.",
-)
-def events_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
-
-    ev = table(spark, sf_dir, "events")
-    assign = (
-        ev.select("user_id")
-        .distinct()
-        .select(_cuped_variant_col().alias("variant"))
-    )
-    arms = assign.groupBy("variant").agg(F.count(F.lit(1)).alias("n"))
-    wide = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("n1"),
-    )
-    return _srm_readout(wide)
-
-
-def _srm_readout(wide: DataFrame) -> DataFrame:
-    """SRM downstream shared verbatim by the batch query and the
-    streaming twin (streaming/srm.py): (n0, n1) one-row frame → the
-    5-column gate readout (the single-function-object discipline)."""
-    tot = (F.col("n0") + F.col("n1")).cast("double")
-    diff2 = ((F.col("n1") - F.col("n0")) * (F.col("n1") - F.col("n0"))).cast(
-        "double"
-    )
-    return wide.select(
-        F.col("n0").cast("bigint").alias("n_ctl"),
-        F.col("n1").cast("bigint").alias("n_trt"),
-        F.round(F.col("n1").cast("double") / tot, 6).alias("trt_share"),
-        F.round(diff2 / tot, 6).alias("chi2"),
-        (diff2 / tot > F.lit(3.8414588206941236)).alias("srm_flag"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# X219 — difference-in-differences (pre/post × control/treatment)
-# ---------------------------------------------------------------------------
-
-_DID_CUT = "2024-01-16"
-
-
-def _did_oracle(cut: str = _DID_CUT) -> str:
-    return f"""
-    WITH assign AS (
-      SELECT DISTINCT user_id,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant
-      FROM events
-    ),
-    arms AS (SELECT variant, CAST(COUNT(*) AS BIGINT) AS n FROM assign GROUP BY 1),
-    cell AS (
-      SELECT CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant,
-             (ts >= TIMESTAMP '{cut}') AS post,
-             SUM(CASE WHEN event_type = 'purchase'
-                      THEN CAST(value AS DECIMAL(27,12)) END) AS sy
-      FROM events GROUP BY 1, 2
-    ),
-    wide AS (
-      SELECT
-        (SELECT n FROM arms WHERE variant = 0) AS n0,
-        (SELECT n FROM arms WHERE variant = 1) AS n1,
-        COALESCE(MAX(CASE WHEN variant = 0 AND NOT post THEN sy END), 0) AS s0pre,
-        COALESCE(MAX(CASE WHEN variant = 0 AND post THEN sy END), 0) AS s0post,
-        COALESCE(MAX(CASE WHEN variant = 1 AND NOT post THEN sy END), 0) AS s1pre,
-        COALESCE(MAX(CASE WHEN variant = 1 AND post THEN sy END), 0) AS s1post
-      FROM cell
-    )
-    SELECT CAST(n0 AS BIGINT) AS n_ctl, CAST(n1 AS BIGINT) AS n_trt,
-           ROUND(CAST(s0pre AS DOUBLE) / n0, 6) AS pre_ctl,
-           ROUND(CAST(s0post AS DOUBLE) / n0, 6) AS post_ctl,
-           ROUND(CAST(s1pre AS DOUBLE) / n1, 6) AS pre_trt,
-           ROUND(CAST(s1post AS DOUBLE) / n1, 6) AS post_trt,
-           ROUND((CAST(s1post AS DOUBLE) / n1 - CAST(s1pre AS DOUBLE) / n1)
-                 - (CAST(s0post AS DOUBLE) / n0 - CAST(s0pre AS DOUBLE) / n0),
-                 6) + 0.0 AS did
-    FROM wide
-"""
-
-
-@register(
-    "events_did_estimator",
-    oracle=_did_oracle(),
-    doc="Difference-in-differences estimator over the event window "
-    "split at 2024-01-16 (the corpus midpoint): per (arm, period) "
-    "mean purchase value per assigned user — the four decimal-exact "
-    "cell sums divided by the FIXED per-arm user counts, so a user "
-    "inactive in a period contributes 0 exactly like the COALESCE'd "
-    "per-user frame — and DiD = (trt_post − trt_pre) − (ctl_post − "
-    "ctl_pre): the causal readout when assignment predates the cut "
-    "and parallel trends hold (the panel-data standard; Card & "
-    "Krueger 1994). Completes the experimentation family next to "
-    "lift/CUPED/uplift/bootstrap/SRM. Determinism: cell sums pin to "
-    "decimal(27,12) before crossing rows; each mean is one double "
-    "division; did rounds once at 6 dp with −0.0 canonicalized. "
-    "Scale: ONE events scan into a 4-cell aggregate + a distinct-user "
-    "count — no per-user frame materializes at all.",
-)
-def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
-
-    dec = "decimal(27,12)"
-    ev = table(spark, sf_dir, "events")
-    assign = (
-        ev.select("user_id")
-        .distinct()
-        .select(_cuped_variant_col().alias("variant"))
-    )
-    arms = assign.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    narm = arms.agg(
-        F.max(F.when(F.col("variant") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("variant") == 1, F.col("n"))).alias("n1"),
-    )
-    cell = ev.groupBy(
-        _cuped_variant_col().alias("variant"),
-        (F.col("ts") >= F.lit(_DID_CUT).cast("timestamp")).alias("post"),
-    ).agg(
-        F.sum(
-            F.when(
-                F.col("event_type") == "purchase", F.col("value").cast(dec)
-            )
-        ).alias("sy")
-    )
-
-    def pick(v, p):
-        return F.coalesce(
-            F.max(F.when((F.col("variant") == v) & (F.col("post") == p), F.col("sy"))),
-            F.lit(0).cast("decimal(37,12)"),
-        )
-
-    wide = cell.agg(
-        pick(0, False).alias("s0pre"),
-        pick(0, True).alias("s0post"),
-        pick(1, False).alias("s1pre"),
-        pick(1, True).alias("s1post"),
-    ).crossJoin(F.broadcast(narm))
-    return _did_readout(wide)
-
-
-def _did_readout(wide: DataFrame) -> DataFrame:
-    """DiD downstream shared verbatim by the batch query and the
-    streaming twin (streaming/did.py): takes the one-row wide frame
-    (s0pre/s0post/s1pre/s1post decimal(37,12), n0/n1) and produces the
-    7-column readout — the single-function-object discipline that
-    makes the twin's bit-for-bit claim structural (X207/X212 pattern)."""
-    m = {
-        k: F.col(s).cast("double") / F.col(n)
-        for k, s, n in (
-            ("pre_ctl", "s0pre", "n0"),
-            ("post_ctl", "s0post", "n0"),
-            ("pre_trt", "s1pre", "n1"),
-            ("post_trt", "s1post", "n1"),
-        )
-    }
-    return wide.select(
-        F.col("n0").cast("bigint").alias("n_ctl"),
-        F.col("n1").cast("bigint").alias("n_trt"),
-        F.round(m["pre_ctl"], 6).alias("pre_ctl"),
-        F.round(m["post_ctl"], 6).alias("post_ctl"),
-        F.round(m["pre_trt"], 6).alias("pre_trt"),
-        F.round(m["post_trt"], 6).alias("post_trt"),
-        (
-            F.round(
-                (m["post_trt"] - m["pre_trt"]) - (m["post_ctl"] - m["pre_ctl"]),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("did"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -160,15 +160,15 @@ def corpus_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB-safe by construction.",
 )
 def eval_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _neyman_readout(_neyman_stats(table(spark, sf_dir, "documents")))
+    return neyman_readout(neyman_stats(table(spark, sf_dir, "documents")))
 
 
-def _neyman_stats(docs: DataFrame) -> DataFrame:
+def neyman_stats(docs: DataFrame) -> DataFrame:
     """Per-source exact partials ``(source, n_docs, sx, sx2)``: row
     count, char sum and char sum-of-squares. SUM skips NULL ``n_chars``
     while the count keeps the row, so an all-NULL source has NULL sums.
-    The streaming twin (``streaming/neyman.py``) runs this same
-    aggregation in update mode."""
+    The partials merge by addition, so Structured Streaming can maintain
+    them as an update-mode aggregate and feed the same readout."""
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("sx"),
@@ -176,10 +176,9 @@ def _neyman_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def _neyman_readout(s: DataFrame) -> DataFrame:
-    """Allocation readout over ``_neyman_stats`` — shared between the
-    batch query above and the streaming twin, so the float math is one
-    expression tree on both sides."""
+def neyman_readout(s: DataFrame) -> DataFrame:
+    """Allocation readout over ``neyman_stats``, batch or streamed: the
+    float math is one expression tree on both sides."""
     v = s.withColumn(
         "sigma",
         F.sqrt(

@@ -149,14 +149,14 @@ def sample_uncertainty_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     "runs too.",
 )
 def eval_conformal_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _conformal_readout(_conformal_hist(table(spark, sf_dir, "documents")))
+    return conformal_readout(conformal_hist(table(spark, sf_dir, "documents")))
 
 
-def _conformal_hist(docs: DataFrame) -> DataFrame:
+def conformal_hist(docs: DataFrame) -> DataFrame:
     """Per-(lang, a) counts over the 6-dp-rounded nonconformity ``a`` of
     the non-null-text documents: a mergeable histogram over a bounded
-    value space. The streaming twin (``streaming/conformal.py``) runs
-    this same aggregation in update mode."""
+    value space, so Structured Streaming can maintain it as an
+    update-mode aggregate and feed the same readout."""
     a = F.round(F.lit(1.0) - _score_col(), 6)
     return (
         docs.where(F.col("text").isNotNull())
@@ -165,9 +165,9 @@ def _conformal_hist(docs: DataFrame) -> DataFrame:
     )
 
 
-def _conformal_readout(c: DataFrame) -> DataFrame:
-    """Per-lang (n, q_hat, coverage) over the ``_conformal_hist`` table,
-    shared by the batch query and the streaming twin: the
+def conformal_readout(c: DataFrame) -> DataFrame:
+    """Per-lang (n, q_hat, coverage) over the ``conformal_hist`` table,
+    batch or streamed: the
     min(n, ceil(0.9·(n+1)))-th smallest value via one cumulative window
     over the histogram."""
     t = c.groupBy("lang").agg(F.sum("cnt").alias("n"))

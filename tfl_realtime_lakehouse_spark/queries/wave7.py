@@ -422,15 +422,14 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sum is order-free, SQRT is correctly rounded in both engines.",
 )
 def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _drift_readout(_drift_moments(table(spark, sf_dir, "embeddings")))
+    return drift_readout(drift_moments(table(spark, sf_dir, "embeddings")))
 
 
-def _drift_moments(emb: DataFrame) -> DataFrame:
+def drift_moments(emb: DataFrame) -> DataFrame:
     """Per-(label, half, dim) centroid moments ``mu`` and ``n``: an
     exact decimal coordinate sum over a row count, so the aggregation
-    merges across micro-batches. The streaming twin
-    (``streaming/drift.py``) runs this same aggregation in update
-    mode."""
+    merges across micro-batches: Structured Streaming can maintain it
+    as an update-mode aggregate and feed the same readout."""
     ex = emb.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
@@ -447,9 +446,9 @@ def _drift_moments(emb: DataFrame) -> DataFrame:
     )
 
 
-def _drift_readout(m: DataFrame) -> DataFrame:
-    """Per-label drift rows over the ``_drift_moments`` table, shared
-    by the batch query and the streaming twin: half-vs-half inner join,
+def drift_readout(m: DataFrame) -> DataFrame:
+    """Per-label drift rows over the ``drift_moments`` table, batch or
+    streamed: half-vs-half inner join,
     then the decimal-pinned sum of squared mean differences."""
     a = m.where(F.col("half") == 0).select(
         "label", "dim", F.col("mu").alias("mu0"), F.col("n").alias("n0")

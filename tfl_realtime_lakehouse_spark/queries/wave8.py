@@ -630,187 +630,3 @@ def table_column_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in parts[1:]:
         out = out.unionAll(p)
     return out
-
-
-# ---------------------------------------------------------------------------
-# X207 — CUPED variance-reduced A/B readout
-# ---------------------------------------------------------------------------
-
-_CUPED_ORACLE = """
-    WITH per_user AS (
-      SELECT user_id,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant,
-             CAST(COALESCE(SUM(CASE WHEN event_type IN ('view', 'click')
-                        THEN CAST(value AS DECIMAL(27,12)) END), 0) AS DOUBLE)
-               AS x,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                        THEN CAST(value AS DECIMAL(27,12)) END), 0) AS DOUBLE)
-               AS y
-      FROM events GROUP BY 1, 2
-    ),
-    mom AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CAST(x AS DECIMAL(27,12))) AS DOUBLE) AS sx,
-             CAST(SUM(CAST(y AS DECIMAL(27,12))) AS DOUBLE) AS sy,
-             CAST(SUM(CAST(x * y AS DECIMAL(27,12))) AS DOUBLE) AS sxy,
-             CAST(SUM(CAST(x * x AS DECIMAL(27,12))) AS DOUBLE) AS sxx,
-             CAST(SUM(CAST(y * y AS DECIMAL(27,12))) AS DOUBLE) AS syy
-      FROM per_user
-    ),
-    th AS (
-      SELECT n, sx / n AS mx,
-             CASE WHEN n * sxx - sx * sx > 0.0
-                  THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END AS theta,
-             CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
-                  THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-                       / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END
-               AS rho2
-      FROM mom
-    ),
-    arms AS (
-      SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_users,
-             CAST(SUM(CAST(x AS DECIMAL(27,12))) AS DOUBLE) AS sxv,
-             CAST(SUM(CAST(y AS DECIMAL(27,12))) AS DOUBLE) AS syv
-      FROM per_user GROUP BY 1
-    )
-    SELECT a.variant, a.n_users,
-           ROUND(a.syv / a.n_users, 6) AS mean_metric,
-           ROUND(a.syv / a.n_users
-                 - t.theta * (a.sxv / a.n_users - t.mx), 6) + 0.0
-             AS mean_cuped,
-           ROUND(t.theta, 6) + 0.0 AS theta,
-           ROUND(t.rho2, 6) AS rho2
-    FROM arms a CROSS JOIN th t
-"""
-
-
-@register(
-    "events_abtest_cuped",
-    oracle=_CUPED_ORACLE,
-    doc="CUPED variance-reduced A/B readout (Deng et al. 2013): per "
-    "deterministic md5 arm (the events_abtest_lift assignment), the "
-    "per-user purchase-value metric y adjusted by the pre-exposure "
-    "engagement covariate x (view+click value) — mean_cuped = ȳ_v − "
-    "θ·(x̄_v − x̄), θ = cov(x,y)/var(x) pooled across arms, and ρ² (the "
-    "fraction of metric variance the covariate removes — the whole "
-    "point of CUPED: the same experiment detects ~1/(1−ρ²)× smaller "
-    "effects). Scale shape: one scan → per-user conditional "
-    "decimal-exact sums (users without either event type coalesce to "
-    "0 on both engines), one 5-moment global fold + one per-arm fold "
-    "— the covariance never materializes pairs. Determinism: "
-    "per-user sums pin to decimal(27,12); the per-user products x·y, "
-    "x², y² are products of identical doubles re-pinned to "
-    "decimal(27,12) before the cross-user sum; θ/ρ² are scalar double "
-    "ops on the 1-row moment frame, guarded NULL when var(x) (or "
-    "var(y)) is exactly zero — a deterministic comparison of "
-    "identical doubles; mean_cuped and θ carry +0.0 (the −0.0 "
-    "canonicalization rule for rounded differences).",
-)
-def events_abtest_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cuped_readout(_cuped_per_user(table(spark, sf_dir, "events")))
-
-
-def _cuped_per_user(ev: DataFrame) -> DataFrame:
-    """The per-user (variant, x, y, np) experiment frame shared by the
-    CUPED readout (X207), the wave-9 uplift-by-decile query and the
-    streaming experiment twins (streaming/cuped.py runs this same
-    aggregation in update mode): exact decimal conditional sums of the
-    pre-exposure covariate x (view+click value) and the metric y
-    (purchase value), COALESCE'd to 0 so every user with any event
-    participates, and np, the purchase-event count (a NULL-value
-    purchase still converts the user for the lift readout). The batch
-    readouts never read np, so column pruning drops it from their
-    plans."""
-    variant = _cuped_variant_col()
-    dec = "decimal(27,12)"
-    return ev.groupBy("user_id", variant.alias("variant")).agg(
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("event_type").isin("view", "click"),
-                    F.col("value").cast(dec),
-                )
-            ),
-            F.lit(0).cast(dec),
-        )
-        .cast("double")
-        .alias("x"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("event_type") == "purchase", F.col("value").cast(dec)
-                )
-            ),
-            F.lit(0).cast(dec),
-        )
-        .cast("double")
-        .alias("y"),
-        F.count(F.when(F.col("event_type") == "purchase", 1)).alias("np"),
-    )
-
-
-def _cuped_variant_col():
-    """The deterministic md5 arm assignment shared by every A/B query
-    (and the streaming CUPED twin, which must reproduce it exactly)."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab:"), F.col("user_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    ).cast("int")
-
-
-def _cuped_readout(per_user: DataFrame) -> DataFrame:
-    """CUPED downstream shared verbatim by the batch query and the
-    streaming twin (streaming/cuped.py): takes the per-user frame
-    (variant int, x double, y double) and produces the 6-column
-    readout. Keeping this a single function is what makes the twin's
-    bit-for-bit claim structural rather than copy-paste parity."""
-    dec = "decimal(27,12)"
-    mom = per_user.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("x").cast(dec)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(dec)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(dec)).cast("double").alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(dec)).cast("double").alias("sxx"),
-        F.sum((F.col("y") * F.col("y")).cast(dec)).cast("double").alias("syy"),
-    )
-    n = F.col("n").cast("double")
-    covn = n * F.col("sxy") - F.col("sx") * F.col("sy")
-    varxn = n * F.col("sxx") - F.col("sx") * F.col("sx")
-    varyn = n * F.col("syy") - F.col("sy") * F.col("sy")
-    th = mom.select(
-        (F.col("sx") / n).alias("mx"),
-        F.when(varxn > 0.0, covn / varxn).alias("theta"),
-        F.when((varxn > 0.0) & (varyn > 0.0), covn * covn / (varxn * varyn)).alias(
-            "rho2"
-        ),
-    )
-    arms = per_user.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users"),
-        F.sum(F.col("x").cast(dec)).cast("double").alias("sxv"),
-        F.sum(F.col("y").cast(dec)).cast("double").alias("syv"),
-    )
-    nu = F.col("n_users").cast("double")
-    return arms.crossJoin(F.broadcast(th)).select(
-        "variant",
-        "n_users",
-        F.round(F.col("syv") / nu, 6).alias("mean_metric"),
-        (
-            F.round(
-                F.col("syv") / nu
-                - F.col("theta") * (F.col("sxv") / nu - F.col("mx")),
-                6,
-            )
-            + F.lit(0.0)
-        ).alias("mean_cuped"),
-        (F.round("theta", 6) + F.lit(0.0)).alias("theta"),
-        F.round("rho2", 6).alias("rho2"),
-    )

@@ -1,10 +1,7 @@
-"""Round-8 second extension wave: resampling inference, sketch
-threshold tuning, index-health audits, heterogeneous-effect readouts,
-and MOSS-style winnowing fingerprints.
+"""Round-8 second extension wave: sketch threshold tuning,
+index-health audits and MOSS-style winnowing fingerprints (the wave's
+bootstrap and uplift readouts live in ``queries/experiments.py``).
 
-- ``events_poisson_bootstrap_ci`` — the SCALABLE bootstrap: per-replica
-  Poisson(1) weights derived from a hash, so the B-fold resample is one
-  scan + map-side combine instead of B shuffled resamples.
 - ``dedup_lsh_threshold_sweep`` — precision/recall/F1 of the MinHash
   estimate as the verify threshold moves over its own 1/16 grid; the
   operating-curve companion to X203's error histogram.
@@ -12,18 +9,13 @@ and MOSS-style winnowing fingerprints.
   Rademacher sign-LSH index (the ANN analogue of
   layout_partition_skew_audit): collision rate predicts the candidate
   equi-join's cost before you run it.
-- ``events_uplift_by_decile`` — per-covariate-decile treatment uplift
-  (the heterogeneous-effect table next to X207's single CUPED number).
 - ``doc_winnowing_fingerprints`` — Schleimer–Wilkerson–Aiken 2003
   winnowing over word 4-gram rolling hashes: guaranteed-detection local
   fingerprints, the plagiarism/contamination primitive that exact-hash
   and MinHash fingerprints both miss.
 
-Shared determinism discipline (registry.py docstring): weights and
-counts are exact integers end to end, cross-row float sums pin to
-decimal(27,12), continuous outputs round at 6 dp, order statistics are
-selected by (value, replica-id) total orders, −0.0 canonicalized via
-``+ 0.0`` on rounded differences.
+Shared determinism discipline (registry.py docstring): counts are
+exact integers end to end and continuous outputs round at 6 dp.
 """
 
 from __future__ import annotations
@@ -32,221 +24,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark.queries.registry import register, table
-
-# ---------------------------------------------------------------------------
-# X209 — hash-seeded Poisson-bootstrap confidence intervals
-# ---------------------------------------------------------------------------
-
-# Cumulative Poisson(1) CDF scaled to 2**60 and floored to integers —
-# FIXED constants shared verbatim by engine and oracle (their absolute
-# accuracy vs e^-1 is irrelevant; cross-engine identity is everything).
-# P(w=6) ≈ 5.9e-4 absorbs the tail.
-_POIS_T = [
-    424136118829305344,
-    848272237658610688,
-    1060340297073263360,
-    1131029650211480960,
-    1148701988496035328,
-    1152236456152946176,
-]
-_BOOT_B = 64
-
-
-def _boot_w_sql(h: str) -> str:
-    cases = " ".join(
-        f"WHEN {h} < {t} THEN {k}" for k, t in enumerate(_POIS_T)
-    )
-    return f"CASE {cases} ELSE 6 END"
-
-
-_BOOT_ORACLE = f"""
-    WITH pur AS (
-      SELECT event_id, value,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant
-      FROM events WHERE event_type = 'purchase' AND value IS NOT NULL
-    ),
-    reps AS (
-      SELECT variant, b, CAST(SUM(w) AS BIGINT) AS sw,
-             CAST(SUM(CAST(CAST(w AS DOUBLE) * value AS DECIMAL(27,12)))
-                  AS DOUBLE) AS swx
-      FROM (
-        SELECT p.variant, g.b, p.value,
-               {_boot_w_sql(
-                 "('0x' || SUBSTR(MD5('boot:' || CAST(g.b AS VARCHAR) || ':' "
-                 "|| CAST(p.event_id AS VARCHAR)), 1, 15))::BIGINT"
-               )} AS w
-        FROM pur p CROSS JOIN (SELECT UNNEST(RANGE({_BOOT_B})) AS b) g
-      ) GROUP BY 1, 2
-    ),
-    nn AS (
-      SELECT variant, m,
-             ROW_NUMBER() OVER (PARTITION BY variant ORDER BY m, b) AS rn,
-             COUNT(*) OVER (PARTITION BY variant) AS cnt
-      FROM (SELECT variant, b, swx / sw AS m FROM reps WHERE sw > 0)
-    ),
-    stat AS (
-      SELECT variant,
-             MAX(CASE WHEN rn = 2 THEN m END) AS lo,
-             MAX(CASE WHEN rn = cnt - 1 THEN m END) AS hi,
-             CAST(SUM(CAST(m AS DECIMAL(27,12))) AS DOUBLE) AS sm,
-             CAST(SUM(CAST(m * m AS DECIMAL(27,12))) AS DOUBLE) AS sm2,
-             CAST(COUNT(*) AS BIGINT) AS nb
-      FROM nn GROUP BY 1
-    ),
-    base AS (
-      SELECT variant, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             CAST(SUM(CAST(value AS DECIMAL(27,12))) AS DOUBLE) / COUNT(*)
-               AS mean_value
-      FROM pur GROUP BY 1
-    )
-    SELECT b.variant, b.n_rows, ROUND(b.mean_value, 6) AS mean_value,
-           CASE WHEN s.nb > 1 THEN
-             ROUND(SQRT(GREATEST(
-               (s.nb * s.sm2 - s.sm * s.sm) / (s.nb * (s.nb - 1.0)), 0.0)), 6)
-           END AS boot_se,
-           ROUND(s.lo, 6) AS ci_lo, ROUND(s.hi, 6) AS ci_hi
-    FROM base b JOIN stat s ON s.variant = b.variant
-"""
-
-
-@register(
-    "events_poisson_bootstrap_ci",
-    oracle=_BOOT_ORACLE,
-    doc="Scalable bootstrap CI for the per-arm purchase-value mean via "
-    "hash-seeded Poisson resampling (the streaming/MapReduce bootstrap "
-    "of Chamandy et al. 2012): each (row, replica) draws a Poisson(1) "
-    "weight by comparing a 60-bit md5 hash of (replica, event_id) "
-    "against FIXED integer CDF thresholds — no RNG state, reproducible "
-    "on any engine, and the whole B=64 resample is ONE scan with an "
-    "in-map ×B expansion collapsed by map-side combine into "
-    "|arms|·B partials (a shuffled multinomial resample would need B "
-    "passes or a B-fold shuffle). Readout per arm: full-sample mean, "
-    "bootstrap SE from decimal-pinned replicate moments, and the "
-    "discrete ~2.5/97.5% order statistics of the 64 replicate means "
-    "(selected at row_number 2 and cnt−1 of the (mean, replica-id) "
-    "total order — an exact, engine-agnostic selection; no "
-    "interpolation convention to diverge). Weights are exact integers, "
-    "w·value products of identical doubles re-pinned to decimal(27,12) "
-    "before every cross-row sum; replica means are exact-decimal "
-    "ratios. 100 TB shape: the expansion multiplies scan width, not "
-    "shuffle width — the shuffle carries |arms|·B keys.",
-)
-def events_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.sources.tables import fan_out
-
-    ev = table(spark, sf_dir, "events")
-    # fan_out the purchase rows BEFORE the (B+1)-way replica explode:
-    # the md5 Poisson weights are compute-dense and otherwise run on
-    # the scan's single split (measured: one 4.6 s single-task map at
-    # sf0.1). Batch-only: the streaming twin sums the stream unspread.
-    return _bootstrap_readout(_boot_replica_sums(fan_out(_boot_purchases(ev))))
-
-
-def _boot_purchases(ev: DataFrame) -> DataFrame:
-    """The bootstrap population: purchase rows with a value, tagged
-    with the md5 arm (shared with the streaming twin)."""
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_variant_col
-
-    return ev.where(
-        (F.col("event_type") == "purchase") & F.col("value").isNotNull()
-    ).select("event_id", "value", _cuped_variant_col().alias("variant"))
-
-
-def _boot_replica_sums(pur: DataFrame) -> DataFrame:
-    """The (variant, b, sw, swx) replica table: b = −1 is the BASE
-    'replica' (w ≡ 1 — its sums are exactly the row count and the exact
-    decimal value sum, since 1.0·x = x in IEEE), b = 0…B−1 carry the
-    hash-seeded Poisson weights. One aggregation shared by the batch
-    query and the streaming twin (streaming/bootstrap.py runs it in
-    update mode); its sums are mergeable, so the twin's state is
-    bounded at |arms|·(B+1) rows."""
-    dec = "decimal(27,12)"
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("boot:"),
-                    F.col("b").cast("string"),
-                    F.lit(":"),
-                    F.col("event_id").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    w = F.lit(6)
-    for k in range(len(_POIS_T) - 1, -1, -1):
-        w = F.when(h < _POIS_T[k], k).otherwise(w)
-    w = F.when(F.col("b") == -1, F.lit(1)).otherwise(w)
-    return (
-        pur.withColumn(
-            "b", F.explode(F.sequence(F.lit(-1), F.lit(_BOOT_B - 1)))
-        )
-        .withColumn("w", w)
-        .select(
-            "variant",
-            "b",
-            "w",
-            (F.col("w").cast("double") * F.col("value")).cast(dec).alias("wx"),
-        )
-        .groupBy("variant", "b")
-        .agg(
-            F.sum("w").cast("bigint").alias("sw"),
-            F.sum("wx").cast("double").alias("swx"),
-        )
-    )
-
-
-def _bootstrap_readout(reps: DataFrame) -> DataFrame:
-    """The CI readout over the maintained (variant, b, sw, swx double)
-    replica table — shared verbatim by the batch query and the
-    streaming twin (streaming/bootstrap.py), the _cuped_readout
-    pattern: one function object, so the float tree cannot drift."""
-    dec = "decimal(27,12)"
-    means = reps.where((F.col("b") >= 0) & (F.col("sw") > 0)).select(
-        "variant", "b", (F.col("swx") / F.col("sw")).alias("m")
-    )
-    win = Window.partitionBy("variant").orderBy("m", "b")
-    cw = Window.partitionBy("variant")
-    nn = means.select(
-        "variant",
-        "m",
-        F.row_number().over(win).alias("rn"),
-        F.count(F.lit(1)).over(cw).alias("cnt"),
-    )
-    stat = nn.groupBy("variant").agg(
-        F.max(F.when(F.col("rn") == 2, F.col("m"))).alias("lo"),
-        F.max(F.when(F.col("rn") == F.col("cnt") - 1, F.col("m"))).alias("hi"),
-        F.sum(F.col("m").cast(dec)).cast("double").alias("sm"),
-        F.sum((F.col("m") * F.col("m")).cast(dec)).cast("double").alias("sm2"),
-        F.count(F.lit(1)).cast("bigint").alias("nb"),
-    )
-    base = reps.where(F.col("b") == -1).select(
-        "variant",
-        F.col("sw").alias("n_rows"),
-        (F.col("swx") / F.col("sw")).alias("mean_value"),
-    )
-    nb = F.col("nb").cast("double")
-    se = F.sqrt(
-        F.greatest(
-            (nb * F.col("sm2") - F.col("sm") * F.col("sm"))
-            / (nb * (nb - F.lit(1.0))),
-            F.lit(0.0),
-        )
-    )
-    return base.join(stat, "variant").select(
-        "variant",
-        "n_rows",
-        F.round("mean_value", 6).alias("mean_value"),
-        F.when(F.col("nb") > 1, F.round(se, 6)).alias("boot_se"),
-        F.round("lo", 6).alias("ci_lo"),
-        F.round("hi", 6).alias("ci_hi"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # X210 — MinHash verify-threshold operating curve
@@ -414,122 +191,6 @@ def embedding_lsh_bucket_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             nsum > 1,
             F.round(pair_sum.cast("double") / (nd * (nd - F.lit(1.0))), 6),
         ).alias("collision_rate"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# X212 — treatment uplift by pre-exposure-covariate decile
-# ---------------------------------------------------------------------------
-
-_UPLIFT_ORACLE = """
-    WITH per_user AS (
-      SELECT user_id,
-             CAST(('0x' || SUBSTR(MD5('ab:' || CAST(user_id AS VARCHAR)), 1, 15))
-                  ::BIGINT % 2 AS INTEGER) AS variant,
-             CAST(COALESCE(SUM(CASE WHEN event_type IN ('view', 'click')
-                        THEN CAST(value AS DECIMAL(27,12)) END), 0) AS DOUBLE)
-               AS x,
-             CAST(COALESCE(SUM(CASE WHEN event_type = 'purchase'
-                        THEN CAST(value AS DECIMAL(27,12)) END), 0) AS DOUBLE)
-               AS y
-      FROM events GROUP BY 1, 2
-    ),
-    d AS (
-      SELECT variant, y,
-             CAST(NTILE(10) OVER (ORDER BY x, user_id) AS INTEGER) AS decile
-      FROM per_user
-    ),
-    g AS (
-      SELECT decile,
-             CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-             CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             CAST(SUM(CASE WHEN variant = 0
-                      THEN CAST(y AS DECIMAL(27,12)) END) AS DOUBLE) AS sy0,
-             CAST(SUM(CASE WHEN variant = 1
-                      THEN CAST(y AS DECIMAL(27,12)) END) AS DOUBLE) AS sy1
-      FROM d GROUP BY 1
-    )
-    SELECT decile, n0, n1,
-           CASE WHEN n0 > 0 THEN ROUND(sy0 / n0, 6) END AS mean_y0,
-           CASE WHEN n1 > 0 THEN ROUND(sy1 / n1, 6) END AS mean_y1,
-           CASE WHEN n0 > 0 AND n1 > 0
-                THEN ROUND(sy1 / n1 - sy0 / n0, 6) + 0.0 END AS uplift
-    FROM g
-"""
-
-
-@register(
-    "events_uplift_by_decile",
-    oracle=_UPLIFT_ORACLE,
-    doc="Heterogeneous treatment effect by pre-exposure engagement "
-    "decile: users ranked by the CUPED covariate x (view+click value; "
-    "(x, user_id) total order makes NTILE deterministic — the ANSI "
-    "first-r-buckets-get-one-extra rule is engine-identical), then "
-    "per (decile, arm) user counts and decimal-exact metric means, "
-    "and the per-decile uplift ȳ₁ − ȳ₀ — the table that answers "
-    "'does the treatment only move already-engaged users?', the "
-    "standard readout next to the experiment's single X207 number. "
-    "NULL-guarded identically when a decile lacks an arm; −0.0 "
-    "canonicalized. Scale: the ntile is a global sort of the "
-    "AGGREGATED per-user frame (O(users), not O(events)); at 100 TB "
-    "swap the exact ntile for percentile_approx boundaries over x — "
-    "same output schema, documented here because the exact rank is "
-    "what the cross-engine hash requires.",
-)
-def events_uplift_by_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tfl_realtime_lakehouse_spark.queries.wave8 import _cuped_per_user
-
-    return _uplift_decile_readout(
-        _cuped_per_user(table(spark, sf_dir, "events"))
-    )
-
-
-def _uplift_decile_readout(per_user: DataFrame) -> DataFrame:
-    """Uplift-by-decile downstream shared verbatim by the batch query
-    and the streaming twin (streaming/uplift.py): takes the per-user
-    frame (user_id, variant int, x double, y double) and produces the
-    decile table. Single function object = the twin's bit-for-bit
-    claim is structural (the X207/_cuped_readout discipline)."""
-    dec = "decimal(27,12)"
-    # DELIBERATE single-partition exchange: ntile over an unpartitioned
-    # Window globally sorts the per-user frame on ONE task. The frame is
-    # the AGGREGATED per-user table (one row per experiment user — ~1e6
-    # rows/GB-scale at 100 TB of events, not O(events)), so the exchange
-    # is bounded by experiment population, and the exact ANSI ntile is
-    # what the cross-engine hash requires. The 100 TB escape hatch
-    # (documented in the registry doc) is percentile_approx boundaries
-    # over x — same schema, no global sort.
-    d = per_user.select(
-        "variant",
-        "y",
-        F.ntile(10).over(Window.orderBy("x", "user_id")).alias("decile"),
-    )
-    g = d.groupBy("decile").agg(
-        F.sum(F.when(F.col("variant") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("variant") == 1, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(F.when(F.col("variant") == 0, F.col("y").cast(dec)))
-        .cast("double")
-        .alias("sy0"),
-        F.sum(F.when(F.col("variant") == 1, F.col("y").cast(dec)))
-        .cast("double")
-        .alias("sy1"),
-    )
-    m0 = F.col("sy0") / F.col("n0")
-    m1 = F.col("sy1") / F.col("n1")
-    return g.select(
-        "decile",
-        "n0",
-        "n1",
-        F.when(F.col("n0") > 0, F.round(m0, 6)).alias("mean_y0"),
-        F.when(F.col("n1") > 0, F.round(m1, 6)).alias("mean_y1"),
-        F.when(
-            (F.col("n0") > 0) & (F.col("n1") > 0),
-            F.round(m1 - m0, 6) + F.lit(0.0),
-        ).alias("uplift"),
     )
 
 

@@ -80,18 +80,36 @@ def fan_out(df: DataFrame) -> DataFrame:
     partition count is known only once AQE has run the upstream stages,
     which the real action would then run again, and the exchange has
     already spread the rows, so such a plan comes back unchanged and no
-    job starts. Any other plan is narrow, and its RDD's partition count
-    is read without a job. This relies on AQE being on, as it is by
-    default and in ``session.get_spark``: with it off, a broadcast join
-    or a global sort runs a job here.
+    job starts. With AQE off, the plan is searched for an exchange node
+    instead: reading the partition count of a broadcast join or a global
+    sort would run the broadcast or the range-sampling job here. Any
+    other plan is narrow, and its RDD's partition count is read without
+    a job.
     """
     qe = df._jdf.queryExecution()
-    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return df
+    aqe = df.sparkSession.conf.get("spark.sql.adaptive.enabled")
+    if aqe.lower() != "true" and _has_exchange(plan):
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if qe.toRdd().getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def _has_exchange(plan) -> bool:
+    """Whether any node of a physical plan is an exchange: a shuffle, a
+    broadcast, or a reuse of either."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        if node.nodeName().endswith("Exchange"):
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 # Estimated bytes per keyed_spread partition: the size-derived term of
