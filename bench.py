@@ -196,6 +196,8 @@ def main() -> None:
         "compiles": compiles_runs,
         "compiles_total": compiles_total,
         "jit_s": jit_s,
+        # the class-data archive the session JVM started from, or None
+        "cds_archive": hoststamp.cds_archive(spark),
     }
     if len(runs) > 1:
         names = sorted(REGISTRY)
@@ -238,6 +240,7 @@ def main() -> None:
         "release_failures": release_failures,
         "compiles_total": compiles_total,
         "jit_s": jit_s,
+        "cds_archive": out["cds_archive"],
         "headline": True,
     }
     if len(runs) > 1:

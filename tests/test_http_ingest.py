@@ -6,8 +6,11 @@ from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pytest
+
 from tfl_realtime_lakehouse_spark.plans import stg_arrivals
 from tfl_realtime_lakehouse_spark.sources.http import (
+    FetchError,
     TfLArrivalsClient,
     dedup_stop_ids,
     ingest_snapshot,
@@ -52,6 +55,32 @@ def test_retries_exhausted_raises_but_fetch_all_isolates():
     c = client(fetcher)
     rows = c.fetch_all(["S1", "BAD", "S1"])  # dup removed, failure isolated
     assert rows == [ARRIVAL]
+
+
+def test_network_errors_retry_and_isolate_but_bugs_propagate():
+    """An OSError from the fetcher (requests' errors are OSErrors) is
+    retried and then isolated to its stop; any other exception is a bug
+    in the fetcher and reaches the caller."""
+    calls = []
+
+    def flaky(url, params):
+        calls.append(url)
+        if "DOWN" in url:
+            raise ConnectionError("refused")
+        return (200, [ARRIVAL])
+
+    c = client(flaky, retries=2)
+    with pytest.raises(FetchError) as err:
+        c.get_arrivals("DOWN")
+    assert isinstance(err.value.__cause__, ConnectionError)
+    assert len(calls) == 3
+    assert c.fetch_all(["S1", "DOWN"]) == [ARRIVAL]
+
+    def broken(url, params):
+        raise TypeError("fetcher bug")
+
+    with pytest.raises(TypeError):
+        client(broken).fetch_all(["S1"])
 
 
 def test_non_list_payload_skipped():

@@ -4,8 +4,12 @@ binary payloads — real schema/batch path, stubbed decode kernel."""
 from __future__ import annotations
 
 import hashlib
+from functools import cache
 
+import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from tfl_realtime_lakehouse_spark.operators import multimodal as M
 from tfl_realtime_lakehouse_spark.sources.tables import read_table
@@ -556,6 +560,103 @@ def test_codec_fuzz_never_raises():
         for dec in decoders:
             out = dec(p)  # must not raise
             assert out is None or getattr(out, "dtype", None) is not None
+
+
+@cache
+def _valid_payloads() -> tuple[bytes, ...]:
+    from tfl_realtime_lakehouse_spark.operators.gif import encode_gif_grayscale, synth_gif_gradient
+    from tfl_realtime_lakehouse_spark.operators.jpeg import (
+        encode_jpeg_baseline,
+        synth_jpeg_tile_gradient,
+    )
+
+    rng = np.random.default_rng(7)
+    gray = rng.integers(0, 256, (16, 16), dtype=np.uint8)
+    rgb = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    return (
+        M.synth_png_gradient(8, 8, 5),
+        M.synth_png(6, 4),
+        encode_jpeg_baseline(gray),
+        encode_jpeg_baseline(rgb, restart_interval=1, subsample420=True),
+        synth_jpeg_tile_gradient(16, 8, 3),
+        encode_gif_grayscale(gray),
+        synth_gif_gradient(8, 8, 5),
+    )
+
+
+def _decode_all(payload: bytes) -> None:
+    """Every decoder returns None or pixels, and the header parser a
+    3-tuple, for any payload."""
+    from tfl_realtime_lakehouse_spark.operators.gif import decode_gif_pixels
+    from tfl_realtime_lakehouse_spark.operators.jpeg import decode_jpeg_pixels
+
+    for decode in (M.decode_png_pixels, decode_jpeg_pixels, decode_gif_pixels):
+        out = decode(payload)
+        assert out is None or isinstance(out, np.ndarray), decode.__name__
+    assert len(M.parse_image_dims(payload)) == 3
+
+
+_EDITS = st.lists(
+    st.tuples(
+        st.sampled_from(["set", "cut", "insert", "delete"]),
+        st.integers(min_value=0, max_value=1 << 16),
+        st.binary(min_size=1, max_size=8),
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@settings(max_examples=400, deadline=None, suppress_health_check=list(HealthCheck))
+@given(base=st.integers(min_value=0, max_value=6), edits=_EDITS)
+def test_decoders_survive_edited_payloads(base, edits):
+    """Valid PNG, JPEG and GIF payloads with bytes overwritten, cut,
+    inserted or deleted decode to None or pixels, never an exception."""
+    b = bytearray(_valid_payloads()[base])
+    for op, at, chunk in edits:
+        i = at % (len(b) + 1)
+        if op == "set" and b:
+            b[i % len(b)] = chunk[0]
+        elif op == "cut":
+            del b[i:]
+        elif op == "insert":
+            b[i:i] = chunk
+        else:
+            del b[i : i + len(chunk)]
+    _decode_all(bytes(b))
+
+
+@settings(max_examples=200, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    magic=st.sampled_from([b"", b"\x89PNG\r\n\x1a\n", b"\xff\xd8", b"GIF89a", b"GIF87a"]),
+    body=st.binary(max_size=512),
+)
+def test_decoders_survive_random_bodies(magic, body):
+    """A format's magic bytes followed by noise decode to None or pixels."""
+    _decode_all(magic + body)
+
+
+def test_decoders_refuse_headers_that_claim_huge_images():
+    """A header that claims 65535x65535 pixels over a few bytes of data
+    decodes to None at once: the JPEG decoder used to allocate its
+    planes first and raise MemoryError."""
+    from tfl_realtime_lakehouse_spark.operators.gif import decode_gif_pixels
+    from tfl_realtime_lakehouse_spark.operators.jpeg import decode_jpeg_pixels
+
+    png, _, jpeg, _, _, gif, _ = _valid_payloads()
+    big = (65535).to_bytes(2, "big")
+    j = bytearray(jpeg)
+    sof = j.find(b"\xff\xc0")
+    j[sof + 5 : sof + 9] = big + big
+    assert decode_jpeg_pixels(bytes(j)) is None
+    g = bytearray(gif)
+    image = 13 + 3 * (2 << (g[10] & 7))  # after the global colour table
+    assert g[image] == 0x2C
+    g[image + 5 : image + 9] = big[::-1] + big[::-1]
+    assert decode_gif_pixels(bytes(g)) is None
+    p = bytearray(png)
+    p[16:24] = (1 << 31).to_bytes(4, "big") * 2
+    assert M.decode_png_pixels(bytes(p)) is None
 
 
 def test_param_contracted_synth_matches_gradient_params(spark):

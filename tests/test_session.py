@@ -3,12 +3,16 @@
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tfl_realtime_lakehouse_spark import hoststamp, pyworker
@@ -92,6 +96,20 @@ def test_python_workers_keep_zip_index_across_tasks(spark):
     assert reread == 0, f"{reread} zip directories reread by one invalidate_caches()"
 
 
+def test_python_workers_inherit_frozen_import_graph(spark):
+    """Python workers start with the objects their daemon imported
+    frozen, so the collection after each task does not scan them."""
+
+    @F.pandas_udf("long")
+    def frozen(ids: pd.Series) -> pd.Series:
+        import gc
+
+        return pd.Series([gc.get_freeze_count()] * len(ids))
+
+    counts = {r[0] for r in spark.range(4).select(frozen("id")).collect()}
+    assert min(counts) > 0, f"worker freeze counts {counts}"
+
+
 def _write_zip(path, modules: dict[str, str]) -> None:
     with zipfile.ZipFile(path, "w") as zf:
         for name, source in modules.items():
@@ -135,3 +153,147 @@ def test_zip_index_reread_only_when_archive_changes(tmp_path, monkeypatch):
             sys.modules.pop(name, None)
         for key in (str(archive), os.path.join(str(archive), "pyworker_pkg")):
             sys.path_importer_cache.pop(key, None)
+
+
+# ---------------------------------------------------------------------------
+# Class-data archive: each test runs fresh processes on its own cache
+# ---------------------------------------------------------------------------
+
+REPO = Path(__file__).resolve().parents[1]
+END = "SESSION-SCRIPT-END"
+# One fresh process: get_spark, the first job, then a JSON report and END.
+SESSION_SCRIPT = f"""
+import json, os, sys
+from tfl_realtime_lakehouse_spark import hoststamp, session
+spark = session.get_spark(extra_conf=dict(a.split("=", 1) for a in sys.argv[1:]))
+count = spark.range(1).count()
+cache = str(session.archive_dir())
+builders = []
+for pid in filter(str.isdigit, os.listdir("/proc")):
+    try:
+        with open(f"/proc/{{pid}}/cmdline", "rb") as f:
+            argv = f.read().decode(errors="replace")
+    except OSError:
+        continue
+    if cache in argv and ".tmp" in argv:
+        builders.append(int(pid))
+print(json.dumps({{
+    "count": count,
+    "archive": hoststamp.cds_archive(spark),
+    "leaf_parallelism": spark.conf.get("spark.sql.leafNodeDefaultParallelism", None),
+    "builders": builders,
+}}))
+print({END!r})
+"""
+
+
+def _session(cache: Path, cwd: Path, *conf: str, **env: str) -> tuple[dict, str]:
+    """Run SESSION_SCRIPT with XDG_CACHE_HOME=cache; (report, stdout)."""
+    proc = subprocess.run(
+        [sys.executable, "-c", SESSION_SCRIPT, *conf],
+        cwd=cwd,
+        env={**os.environ, "XDG_CACHE_HOME": str(cache), "PYTHONPATH": str(REPO), **env},
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report = next(json.loads(l) for l in proc.stdout.splitlines() if l.startswith("{"))
+    return report, proc.stdout
+
+
+def _archives(cache: Path) -> list[Path]:
+    return sorted((cache / "tfl-realtime-lakehouse-spark").glob("*.jsa"))
+
+
+@pytest.fixture(scope="module")
+def built_archive(tmp_path_factory):
+    """A cache in which a first process built the archive: (cache, report,
+    stdout of that process)."""
+    cache = tmp_path_factory.mktemp("xdg")
+    report, stdout = _session(cache, cache)
+    return cache, report, stdout
+
+
+def test_first_session_builds_class_archive_quietly(built_archive):
+    """The first process on an empty cache builds the archive in a child
+    and installs it; no JVM log line reaches its stdout after the
+    script's own output, and no process the build started is alive once
+    get_spark returns."""
+    cache, report, stdout = built_archive
+    assert report["count"] == 1
+    assert len(_archives(cache)) == 1
+    assert stdout.splitlines()[-1] == END, stdout[-2000:]
+    assert report["builders"] == []
+
+
+def test_second_session_maps_class_archive(built_archive, tmp_path):
+    """A second fresh process maps the installed archive and loads more
+    than 10,000 of its classes from it."""
+    cache, _, _ = built_archive
+    report, stdout = _session(cache, tmp_path, "spark.driver.extraJavaOptions=-Xlog:class+load")
+    assert report["count"] == 1
+    assert report["archive"] == str(_archives(cache)[0])
+    shared = stdout.count("source: shared objects file (top)")
+    assert shared >= 10_000, f"{shared} classes loaded from the archive"
+
+
+def test_truncated_class_archive_is_not_used(built_archive, tmp_path):
+    """An archive truncated in place is not handed to the JVM (a JVM
+    given one dies of SIGBUS). With the key's build marked failed, none
+    is rebuilt either, and the session runs without an archive."""
+    cache, _, _ = built_archive
+    (archive,) = _archives(cache)
+    archive.chmod(0o644)
+    with open(archive, "r+b") as f:
+        f.truncate(1 << 20)
+    key = archive.name.split("-")[0]
+    (archive.parent / f"{key}.failed").write_text("marked failed by the test\n")
+    report, _ = _session(cache, tmp_path)
+    assert report["count"] == 1
+    assert report["archive"] is None
+    assert archive.stat().st_size == 1 << 20
+    assert not list(tmp_path.glob("hs_err_pid*.log"))
+
+
+def test_real_conf_dir_is_read_and_gets_no_archive(tmp_path):
+    """A conf dir with a file Spark reads stays on the class path: its
+    defaults apply, and no archive is used or built."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.sql.leafNodeDefaultParallelism 7\n")
+    cache = tmp_path / "xdg"
+    report, _ = _session(cache, tmp_path, SPARK_CONF_DIR=str(conf))
+    assert report["leaf_parallelism"] == "7"
+    assert report["archive"] is None
+    assert not _archives(cache)
+    assert not list((cache / "tfl-realtime-lakehouse-spark").glob(f"*.failed"))
+
+
+def test_failed_class_archive_build_is_marked_once(tmp_path):
+    """A build whose child fails leaves a marker and a working session,
+    and the next launch neither builds nor uses an archive."""
+    script = """
+import json, subprocess
+from tfl_realtime_lakehouse_spark import hoststamp, session
+session._TRAINER = "import sys; sys.exit(3)"
+spark = session.get_spark()
+report = {"count": spark.range(1).count(), "archive": hoststamp.cds_archive(spark)}
+subprocess.Popen = None  # a second build attempt would raise
+report["next"] = session._class_archive()
+print(json.dumps(report))
+"""
+    cache = tmp_path / "xdg"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env={**os.environ, "XDG_CACHE_HOME": str(cache), "PYTHONPATH": str(REPO)},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report = json.loads(proc.stdout.splitlines()[-1])
+    assert report == {"count": 1, "archive": None, "next": None}
+    assert len(list((cache / "tfl-realtime-lakehouse-spark").glob("*.failed"))) == 1
+    assert not _archives(cache)

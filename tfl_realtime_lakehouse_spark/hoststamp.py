@@ -30,6 +30,11 @@ pass that recompiles code it already compiled shows up in the numbers:
   CPU leaves the per-thread files with them (per-query deltas read
   negative).
 
+One more reads the JVM's memory map:
+
+- ``cds_archive(spark)`` — the class-data archive (``session.py``) the
+  session JVM mapped at start, or None when it started without one.
+
 The /proc reads are Linux-only (this engine's measurement boxes are
 Linux); every helper degrades to None elsewhere and callers report -1.
 """
@@ -121,3 +126,28 @@ def jit_ms(spark) -> int | None:
         return None if bean is None else int(bean.getTotalCompilationTime())
     except (AttributeError, Py4JError):
         return None
+
+
+def cds_archive(spark) -> str | None:
+    """Path of the class-data archive from the package's cache directory
+    that the session's JVM has mapped, or None: the JVM was launched
+    without one, refused the one it was given, or was not launched by
+    this process."""
+    from tfl_realtime_lakehouse_spark.session import archive_dir
+
+    pid = _gateway_pid(spark)
+    if pid is None:
+        return None
+    cache = str(archive_dir()) + os.sep
+    try:
+        with open(f"/proc/{pid}/maps") as f:
+            for line in f:
+                # address perms offset dev inode [path]
+                fields = line.split(maxsplit=5)
+                if len(fields) == 6:
+                    path = fields[5].rstrip("\n")
+                    if path.startswith(cache) and path.endswith(".jsa"):
+                        return path
+    except OSError:
+        pass
+    return None

@@ -174,7 +174,7 @@ def decode_gif_pixels(payload: bytes | None) -> "object":
                 return rgb[:, :, 0].copy()
             return rgb
         return None
-    except Exception:
+    except (IndexError, struct.error):  # a block cut off inside its header
         return None
 
 

@@ -245,7 +245,7 @@ def decode_jpeg_pixels(payload: bytes | None) -> "object":
             # APPn / COM / others: skip
             pos += 2 + seglen
         return None
-    except Exception:
+    except (IndexError, struct.error):  # a segment shorter than its fields
         return None
 
 
@@ -257,6 +257,12 @@ def _decode_scan(b, data_pos, frame, scan, qt, huff, restart):
         return None
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
+    # Every block takes at least 2 bits (a DC code and an EOB), so a header
+    # that claims more blocks than the data can hold is corrupt; without
+    # this check a 65535x65535 header allocates 32 GiB per plane.
+    blocks = mcus_x * mcus_y * sum(hs * vs for _, hs, vs, _ in comps)
+    if 2 * blocks > 8 * (len(b) - data_pos):
+        return None
     planes = []
     for cid, hs, vs, tq in comps:
         if hs == 0 or vs == 0 or tq not in qt:

@@ -189,7 +189,7 @@ def decode_png_pixels(payload: bytes | None) -> "object":
             out[y] = np.frombuffer(bytes(cur), dtype=np.uint8)
             prev = cur
         return out if ctype == 0 else out.reshape(h, w, 3)
-    except Exception:
+    except (struct.error, zlib.error):  # an IHDR under 13 bytes; a bad deflate stream
         return None
 
 
@@ -252,11 +252,9 @@ def parse_image_dims(payload: bytes | None) -> tuple[str | None, int | None, int
     exceptions — at 100 TB a corrupt asset must not kill the stage.
     """
     b = payload or b""
+    # The parsers check every length before they read, so none raises.
     for fmt, parse in (("png", _png_dims), ("gif", _gif_dims), ("jpeg", _jpeg_dims)):
-        try:
-            dims = parse(b)
-        except Exception:
-            dims = None
+        dims = parse(b)
         if dims:
             return fmt, dims[0], dims[1]
     return None, None, None

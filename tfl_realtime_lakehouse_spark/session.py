@@ -14,9 +14,18 @@ partitions sized by env for local testing but meant to be overridden to
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
 import os
 import re
+import shutil
+import signal
+import subprocess
+import sys
+from contextlib import contextmanager
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _BYTE_SIZE_RE = re.compile(r"^\d+[kmgt]?b?$", re.IGNORECASE)
@@ -34,18 +43,10 @@ def _validated_byte_size(value: str, env_name: str) -> str:
     return value.strip()
 
 
-def get_spark(
-    app_name: str = "tfl-realtime-lakehouse-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
-
-    Local-mode defaults come from ``SPARK_GRAFT_CPUS`` (driver contract);
-    on a real cluster, pass ``master=None`` with external conf and these
-    settings still apply per-session.
-    """
+def _builder(
+    app_name: str, master: str | None, shuffle_partitions: int | None
+) -> tuple[SparkSession.Builder, str]:
+    """The engine's session builder and its master, before caller conf."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     if master is None:
         master = f"local[{cpus}]"
@@ -145,6 +146,226 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+    return builder, master
+
+
+def get_spark(
+    app_name: str = "tfl-realtime-lakehouse-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or fetch) the engine SparkSession.
+
+    Local-mode defaults come from ``SPARK_GRAFT_CPUS`` (driver contract);
+    on a real cluster, pass ``master=None`` with external conf and these
+    settings still apply per-session. A local session whose JVM this call
+    launches starts from the class-data archive (see ``_class_archive``).
+    """
+    builder, master = _builder(app_name, master, shuffle_partitions)
+    launch = None
+    if (
+        master.startswith("local")
+        and SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+    ):
+        launch = _class_archive()
+    if launch is not None:
+        # Spark puts the default options before spark.driver.extraJavaOptions,
+        # so a caller's extraJavaOptions (perfbench sets java.io.tmpdir) keep
+        # the archive, and their -Xlog options apply after these.
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions", f"-XX:SharedArchiveFile={launch[0]} {_JVM_LOG}"
+        )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
-    return builder.getOrCreate()
+    if launch is None:
+        return builder.getOrCreate()
+    with _conf_dir(launch[1]):
+        return builder.getOrCreate()
+
+
+# ---------------------------------------------------------------------------
+# Class-data archive
+# ---------------------------------------------------------------------------
+#
+# A fresh driver JVM loads about 16,800 classes before its first job
+# finishes, and parses and verifies each one from a jar. HotSpot's
+# dynamic AppCDS (JDK 13+) dumps the classes a JVM loaded into an archive
+# at exit (-XX:ArchiveClassesAtExit); a later JVM maps that archive
+# (-XX:SharedArchiveFile) and takes about 11,000 of its start-up classes
+# from it. On 4 cores this cut perfbench setup_s by 34-41 % and set-up
+# wall about in half; cold and warm per-operation CPU stayed level.
+#
+# The archive holds only what get_spark plus spark.range(1).count() load.
+# One dumped at the exit of a whole pipeline_refresh run (176 MB against
+# 139 MB) made cpu_per_op_s 5-14 % worse until the fifth query_mix pass,
+# so widen the training job only with an A/B that shows no loss there.
+#
+# It is built once per JDK and Spark jar set, by a child process, and
+# shared by every checkout of the user: $XDG_CACHE_HOME/<name>/ (default
+# ~/.cache/<name>/). Deleting that directory forces a rebuild.
+
+_CACHE_NAME = "tfl-realtime-lakehouse-spark"
+# HotSpot's unified logging writes to stdout, which the gateway JVM shares
+# with this process; warnings go to stderr instead, the rest nowhere.
+_JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
+# The child runs the same set-up as a session and dumps at its JVM's exit.
+_TRAINER = (
+    "import sys; from tfl_realtime_lakehouse_spark import session; "
+    "sys.exit(session._train(sys.argv[1]))"
+)
+_BUILD_TIMEOUT_S = 600
+
+
+def archive_dir() -> Path:
+    """The per-user cache directory that holds the class-data archives."""
+    base = os.environ.get("XDG_CACHE_HOME")
+    if not base or not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return Path(base) / _CACHE_NAME
+
+
+def _archive_key(spark_home: str) -> str:
+    """Digest of what the archive's classes come from: the java binary
+    spark-class runs and the Spark jars. Raises OSError when one is
+    missing."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if java is None:
+        raise FileNotFoundError("java")
+    java = os.path.realpath(java)
+    st = os.stat(java)
+    jars = sorted(
+        (e.name, e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(os.path.join(spark_home, "jars"))
+    )
+    ident = repr((java, st.st_size, st.st_mtime_ns, spark_home, jars))
+    return hashlib.sha256(ident.encode()).hexdigest()[:16]
+
+
+def _installed(cache: Path, key: str) -> Path | None:
+    """The key's archive when it is complete: its name records the size
+    it was installed at. A JVM given a truncated archive dies (SIGBUS)."""
+    for path in cache.glob(f"{key}-*.jsa"):
+        try:
+            if path.stat().st_size == int(path.stem.rsplit("-", 1)[1]):
+                return path
+        except (OSError, ValueError):
+            pass
+    return None
+
+
+def _launch_conf_dir(spark_home: str, cache: Path) -> str | None:
+    """The SPARK_CONF_DIR to launch with, or None when the archive cannot
+    be used. Spark's launcher puts the conf dir first on the class path,
+    and CDS refuses a non-empty directory there. A conf dir that is
+    missing or holds only *.template files, which Spark never reads, is
+    swapped for an empty one; one with any other file is kept, unarchived."""
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf) and not all(
+        name.endswith(".template") and os.path.isfile(os.path.join(conf, name))
+        for name in os.listdir(conf)
+    ):
+        return None
+    empty = cache / "conf"
+    empty.mkdir(exist_ok=True)
+    return None if any(empty.iterdir()) else str(empty)
+
+
+def _class_archive() -> tuple[Path, str] | None:
+    """(archive, SPARK_CONF_DIR) for a JVM about to be launched, building
+    the archive first if this JDK and jar set have none; None leaves the
+    launch as it is (no usable conf dir, an unwritable cache, a build
+    that failed on this key before)."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    spark_home = _find_spark_home()
+    cache = archive_dir()
+    try:
+        key = _archive_key(spark_home)
+        cache.mkdir(parents=True, exist_ok=True)
+        conf_dir = _launch_conf_dir(spark_home, cache)
+        if conf_dir is None:
+            return None
+        archive = _installed(cache, key) or _build(cache, key, conf_dir)
+    except OSError:
+        return None
+    return None if archive is None else (archive, conf_dir)
+
+
+def _build(cache: Path, key: str, conf_dir: str) -> Path | None:
+    """Dump the archive in a child process and install it by rename. A
+    failed build leaves ``<key>.failed`` (the child's output), so a host
+    where it fails pays for it once per key."""
+    failed = cache / f"{key}.failed"
+    with open(cache / f"{key}.lock", "w") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)  # a concurrent builder finishes first
+        found = _installed(cache, key)
+        if found is not None or failed.exists():
+            return found
+        tmp = cache / f"{key}.{os.getpid()}.tmp"
+        log = cache / f"{key}.{os.getpid()}.log"
+        package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        env = dict(
+            os.environ,
+            SPARK_CONF_DIR=conf_dir,
+            PYTHONPATH=os.pathsep.join(
+                p for p in (package_root, os.environ.get("PYTHONPATH")) if p
+            ),
+        )
+        with open(log, "wb") as out:
+            child = subprocess.Popen(
+                [sys.executable, "-c", _TRAINER, str(tmp)],
+                stdin=subprocess.DEVNULL,
+                stdout=out,
+                stderr=subprocess.STDOUT,
+                env=env,
+                start_new_session=True,
+            )
+            try:
+                rc = child.wait(timeout=_BUILD_TIMEOUT_S)
+            except subprocess.TimeoutExpired:
+                os.killpg(child.pid, signal.SIGKILL)
+                rc = child.wait()
+        size = tmp.stat().st_size if tmp.exists() else 0
+        if rc != 0 or size == 0:
+            tmp.unlink(missing_ok=True)
+            os.replace(log, failed)
+            return None
+        log.unlink()
+        archive = cache / f"{key}-{size}.jsa"
+        os.replace(tmp, archive)
+    for path in cache.iterdir():
+        if path.suffix in (".jsa", ".failed", ".lock") and not path.name.startswith(key):
+            path.unlink(missing_ok=True)
+    return archive
+
+
+def _train(dump: str) -> int:
+    """The build child: run the session set-up and first job, then stop
+    the JVM and wait for it, so the archive is complete at return."""
+    builder, _ = _builder("tfl-class-archive", None, None)
+    spark = builder.config(
+        "spark.driver.defaultJavaOptions", f"-XX:ArchiveClassesAtExit={dump} {_JVM_LOG}"
+    ).getOrCreate()
+    spark.range(1).count()
+    spark.stop()
+    gateway = SparkContext._gateway
+    gateway.shutdown()
+    gateway.proc.stdin.close()  # the gateway JVM exits when its stdin closes
+    return gateway.proc.wait()
+
+
+@contextmanager
+def _conf_dir(path: str):
+    """SPARK_CONF_DIR set to ``path`` while the JVM is launched."""
+    old = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = old

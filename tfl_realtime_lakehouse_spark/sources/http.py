@@ -42,8 +42,13 @@ _ARROW_RAW_SCHEMA = to_arrow_schema(ARRIVALS_RAW_SCHEMA)
 
 RETRY_STATUSES = (429, 500, 502, 503, 504)
 
-# fetcher(url, params) -> (status_code, json_payload)
+# fetcher(url, params) -> (status_code, json_payload); a network-level
+# failure raises OSError (requests' RequestException is one).
 Fetcher = Callable[[str, dict], tuple[int, object]]
+
+
+class FetchError(RuntimeError):
+    """A request still failed after its retries."""
 
 
 def dedup_stop_ids(raw_ids: Iterable[str]) -> list[str]:
@@ -101,16 +106,15 @@ class TfLArrivalsClient:
         for attempt in range(self.retries + 1):
             try:
                 status, payload = self.fetcher(url, params)
-            except Exception as exc:  # network-level failure
+            except OSError as exc:  # network-level failure
                 last = exc
-                status, payload = None, None
             else:
                 if status is not None and status not in RETRY_STATUSES:
                     return payload
-                last = RuntimeError(f"HTTP {status} from {url}")
+                last = FetchError(f"HTTP {status} from {url}")
             if attempt < self.retries:
                 self.sleep(self.backoff * (2**attempt))
-        raise last if last else RuntimeError(f"fetch failed: {url}")
+        raise FetchError(f"{url} failed after {self.retries + 1} attempts") from last
 
     def resolve_line_id(self, line: str) -> str:
         """Canonical line id via /Line/{ids} (reference tfl_align.py:93-101)."""
@@ -141,7 +145,7 @@ class TfLArrivalsClient:
             for fut, stop in futures.items():
                 try:
                     rows.extend(fut.result())
-                except Exception:
+                except FetchError:
                     log.exception("stop %s failed after retries — skipping", stop)
         return rows
 
